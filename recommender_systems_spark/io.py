@@ -456,11 +456,6 @@ def _microsecond_copy(path: str) -> str:
     return out
 
 
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
-    use = names or TESTDATA_TABLES
-    return {n: load_table(spark, sf_dir, n) for n in use}
-
-
 def read_ratings_csv(spark: SparkSession, path: str) -> DataFrame:
     """S1: ratings CSV with declared schema (reference:
     explicit_ratings/functions.py:20 uses pd.read_csv with inference)."""

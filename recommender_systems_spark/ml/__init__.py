@@ -1,8 +1,8 @@
 """ML layer — the reference's reason to exist, re-expressed Spark-first.
 
 - ``als``    : bias-augmented alternating least squares (M2-M4, M6),
-               RMSE (A9), regularised log-likelihood (A10), convergence
-               monitoring (E8), plus an MLlib ``ALS`` wrapper.
+               RMSE (A9), convergence monitoring (E8), plus an MLlib
+               ``ALS`` wrapper.
 - ``foldin`` : cold-start fold-in of bias and trait vector (M11-M12) and
                full-catalog top-N serving (M13).
 - ``bpr``    : Bayesian Personalised Ranking on implicit feedback

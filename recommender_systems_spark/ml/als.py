@@ -20,9 +20,9 @@ Spark-first re-expression:
   normal equations per group inside ``applyInPandas`` (Arrow-batched
   NumPy/Cholesky — the per-entity solve is exactly the reference's math,
   the orchestration is Spark's).
-- Monitoring (RMSE, regularised log-likelihood, max parameter delta) are
-  plain DataFrame aggregations over a scoring join — no data leaves the
-  cluster; the driver sees one scalar per iteration.
+- Monitoring (RMSE, plus the E8 max parameter delta when a tolerance is
+  set) is one fused aggregation over the sweeps' own output — no data
+  leaves the cluster; the driver sees one row per iteration.
 - ``localCheckpoint`` per iteration cuts lineage growth, the standard
   Spark pattern for iterative algorithms (SURVEY §4.3).
 
@@ -283,12 +283,10 @@ def predict(
     user_factors: DataFrame,
     item_factors: DataFrame,
     out_col: str = "prediction",
-    dim: int | None = None,  # kept for API stability; HOF wins (see vector.py)
 ) -> DataFrame:
     """M1: û = u·v + b_m + b_n via a scoring join — the HOF dot product
     (functions.py:273-277). Measured faster than an unrolled element_at
     chain at every rank tried; see the note in functions.vector."""
-    dot = dot_product
     return (
         ratings.join(
             user_factors.select(
@@ -308,7 +306,7 @@ def predict(
         )
         .withColumn(
             out_col,
-            dot(F.col("__uf"), F.col("__if")) + F.col("__ub") + F.col("__ib"),
+            dot_product(F.col("__uf"), F.col("__if")) + F.col("__ub") + F.col("__ib"),
         )
         .drop("__uid", "__uf", "__ub", "__iid", "__if", "__ib")
     )
@@ -321,47 +319,14 @@ def rmse(
     rating_col: str,
     user_factors: DataFrame,
     item_factors: DataFrame,
-    dim: int | None = None,
 ) -> float:
     """A9: √(Σ(û−r)²/n) as one aggregation (reference functions.py:250-280
     is a 25M-row Python loop; here it's a distributed scoring join)."""
-    scored = predict(ratings, user_col, item_col, user_factors, item_factors, dim=dim)
+    scored = predict(ratings, user_col, item_col, user_factors, item_factors)
     row = scored.agg(
         F.sqrt(F.avg(F.pow(F.col("prediction") - F.col(rating_col), 2))).alias("rmse")
     ).collect()[0]
     return float(row["rmse"])
-
-
-def reg_loglik(
-    ratings: DataFrame,
-    user_col: str,
-    item_col: str,
-    rating_col: str,
-    user_factors: DataFrame,
-    item_factors: DataFrame,
-    lmd: float = DEFAULT_LMD,
-    tau: float = DEFAULT_TAU,
-    alpha: float = DEFAULT_ALPHA,
-) -> float:
-    """A10: regularised log-likelihood (functions.py:49-116):
-    -(λ/2)Σerr² -(τ/2)(‖U‖²+‖V‖²) -(α/2)(‖b_m‖²+‖b_n‖²).
-    Three small aggregations; Frobenius norms via array HOFs."""
-    sq = F.aggregate("features", F.lit(0.0), lambda a, x: a + x * x)
-    u_pen = user_factors.agg(
-        F.sum(sq).alias("fro"), F.sum(F.pow("bias", 2)).alias("b2")
-    ).collect()[0]
-    v_pen = item_factors.agg(
-        F.sum(sq).alias("fro"), F.sum(F.pow("bias", 2)).alias("b2")
-    ).collect()[0]
-    scored = predict(ratings, user_col, item_col, user_factors, item_factors)
-    err = scored.agg(
-        F.sum(F.pow(F.col("prediction") - F.col(rating_col), 2)).alias("sse")
-    ).collect()[0]
-    return float(
-        -(alpha / 2) * (u_pen["b2"] + v_pen["b2"])
-        - (tau / 2) * (u_pen["fro"] + v_pen["fro"])
-        - (lmd / 2) * err["sse"]
-    )
 
 
 def _delta_agg(old: DataFrame, new: DataFrame, out: str) -> DataFrame:
@@ -380,85 +345,35 @@ def _delta_agg(old: DataFrame, new: DataFrame, out: str) -> DataFrame:
     )
 
 
-def max_param_delta(old: DataFrame, new: DataFrame) -> float:
-    """E8: max |θ_new − θ_old| over factors and biases (prac_1.py:161-187)
-    — join the snapshots on id, one max-abs aggregation."""
-    return float(_delta_agg(old, new, "d").collect()[0]["d"])
-
-
 def sweep_monitor(
-    ratings: DataFrame,
-    user_col: str,
-    item_col: str,
-    rating_col: str,
+    sse_source: DataFrame,
     old_u: DataFrame,
     old_v: DataFrame,
     new_u: DataFrame,
     new_v: DataFrame,
-    lmd: float,
-    tau: float,
-    alpha: float,
-    want_loglik: bool,
     want_delta: bool,
-    dim: int | None = None,
-    sse_source: DataFrame | None = None,
-) -> tuple[float, float | None, float | None]:
-    """The ENTIRE per-iteration monitor (A9 RMSE, optional A10
-    regularised log-likelihood, optional E8 max parameter delta) as ONE
-    Spark action: each metric is a 1-row aggregate subtree, crossJoined
-    into a single 1-row frame and collected once. Separately-collected
-    monitors cost 3-5 driver round-trips per sweep — pure fixed
-    overhead at bench scale, and at cluster scale 3-5 scheduler
-    barriers where one suffices.
+) -> tuple[float, float | None]:
+    """The ENTIRE per-iteration monitor (A9 RMSE, optional E8 max
+    parameter delta over prac_1.py:161-187) as ONE Spark action: each
+    metric is a 1-row aggregate subtree, crossJoined into a single
+    1-row frame and collected once. Separately-collected monitors cost
+    a driver round-trip each — pure fixed overhead at bench scale, and
+    at cluster scale a scheduler barrier each where one suffices.
 
-    ``sse_source`` (round-13): a factor frame carrying fused per-entity
-    (sse, n) residual stats from ``als_half_sweep(with_sse=True)`` —
-    identical residuals to the scoring join, already computed inside
-    the sweep. With it, EVERY subtree of this collect is
-    dimension-sized; the ratings-sized predict join exists only on the
-    fallback path."""
-    if sse_source is not None:
-        out = sse_source.agg(
-            F.sum("sse").alias("sse"), F.sum("n").alias("n")
-        )
-    else:
-        scored = predict(
-            ratings, user_col, item_col, new_u, new_v, dim=dim
-        )
-        out = scored.agg(
-            F.sum(F.pow(F.col("prediction") - F.col(rating_col), 2)).alias("sse"),
-            F.count(F.lit(1)).alias("n"),
-        )
-    if want_loglik:
-        sq = F.aggregate("features", F.lit(0.0), lambda a, x: a + x * x)
-        out = out.crossJoin(
-            new_u.agg(
-                F.sum(sq).alias("ufro"), F.sum(F.pow("bias", 2)).alias("ub2")
-            )
-        ).crossJoin(
-            new_v.agg(
-                F.sum(sq).alias("vfro"), F.sum(F.pow("bias", 2)).alias("vb2")
-            )
-        )
+    ``sse_source`` is the item sweep's factor frame carrying fused
+    per-entity (sse, n) residual stats from
+    ``als_half_sweep(with_sse=True)`` — the same residuals a
+    ratings⋈factors scoring join would give, already computed inside
+    the sweep — so EVERY subtree of this collect is dimension-sized."""
+    out = sse_source.agg(F.sum("sse").alias("sse"), F.sum("n").alias("n"))
     if want_delta:
         out = out.crossJoin(_delta_agg(old_u, new_u, "du")).crossJoin(
             _delta_agg(old_v, new_v, "dv")
         )
     row = out.collect()[0]
     rmse_val = float(np.sqrt(row["sse"] / row["n"]))
-    loglik = (
-        float(
-            -(alpha / 2) * (row["ub2"] + row["vb2"])
-            - (tau / 2) * (row["ufro"] + row["vfro"])
-            - (lmd / 2) * row["sse"]
-        )
-        if want_loglik
-        else None
-    )
-    delta = (
-        max(float(row["du"]), float(row["dv"])) if want_delta else None
-    )
-    return rmse_val, loglik, delta
+    delta = max(float(row["du"]), float(row["dv"])) if want_delta else None
+    return rmse_val, delta
 
 
 @dataclass
@@ -468,7 +383,6 @@ class AlsBiasModel:
     user_factors: DataFrame
     item_factors: DataFrame
     rmse_history: list[float]
-    loglik_history: list[float]
     converged: bool
 
 
@@ -484,7 +398,6 @@ def train_als_bias(
     max_iter: int = 10,
     tol: float = 0.05,
     seed: int = 42,
-    track_loglik: bool = False,
 ) -> AlsBiasModel:
     """The reference training loop (prac_1.py:53-188) as a driver-side
     fixpoint over distributed sweeps: user half-sweep, item half-sweep,
@@ -493,8 +406,8 @@ def train_als_bias(
     # job that needs them; lineage still truncates at every checkpoint.
     # Per-iteration actions: ONE (the fused monitor collect, which also
     # materialises both lazy sweep checkpoints) on the sse-only monitor
-    # path, TWO (eager item checkpoint + monitor) when delta/loglik
-    # subtrees multi-reference the sweeps — see multi_ref_monitor below.
+    # path, TWO (eager item checkpoint + monitor) when the delta
+    # subtrees multi-reference the sweeps — see the tol > 0 note below.
     ratings = ratings.select(
         F.col(user_col).cast("long").alias("u"),
         F.col(item_col).cast("long").alias("i"),
@@ -508,18 +421,16 @@ def train_als_bias(
     ).localCheckpoint(eager=False)
 
     rmse_hist: list[float] = []
-    ll_hist: list[float] = []
     converged = False
     # Monitor reference count decides the item checkpoint's eagerness
-    # (round-13): with delta/loglik subtrees the monitor's single plan
-    # scans new_u/new_v_ext MORE THAN ONCE, and concurrent scan stages
-    # of an unmaterialised lazy checkpoint inside one job can compute
-    # the Arrow solve twice — keep the checkpoint eager there. On the
-    # sse-only path (tol<=0, no loglik — the m_als_train shape) the
+    # (round-13): with the delta subtrees (tol > 0) the monitor's single
+    # plan scans new_u/new_v_ext MORE THAN ONCE, and concurrent scan
+    # stages of an unmaterialised lazy checkpoint inside one job can
+    # compute the Arrow solve twice — keep the checkpoint eager there.
+    # On the sse-only path (tol <= 0 — the m_als_train shape) the
     # monitor reads each sweep exactly once, so the checkpoint goes
     # LAZY and the monitor collect is the iteration's ONE action (the
     # genre trainer's shape; was 2 actions/iteration).
-    multi_ref_monitor = tol > 0 or track_loglik
     # Plan-pipelining (round-13, ported from train_genre_als): the user
     # half-sweep's DataFrame + lazy-checkpoint RDD conversion is pure
     # driver-side Catalyst, so iteration N+1's build runs on a helper
@@ -550,7 +461,7 @@ def train_als_bias(
             new_v_ext = als_half_sweep(
                 ratings, "i", "u", "r", v_f, new_u, lmd, tau, alpha, rank,
                 with_sse=True,
-            ).localCheckpoint(eager=multi_ref_monitor)
+            ).localCheckpoint(eager=tol > 0)
             new_v = new_v_ext.drop("sse", "n")
             old_u, old_v = u_f, v_f
             u_f, v_f = new_u, new_v
@@ -564,21 +475,16 @@ def train_als_bias(
             )
             # E8 delta rides the fused monitor — only pay for it when a
             # convergence tolerance is actually requested.
-            rmse_val, ll, delta = sweep_monitor(
-                ratings, "u", "i", "r", old_u, old_v, new_u, new_v,
-                lmd, tau, alpha,
-                want_loglik=track_loglik, want_delta=tol > 0, dim=rank,
-                sse_source=new_v_ext,
+            rmse_val, delta = sweep_monitor(
+                new_v_ext, old_u, old_v, new_u, new_v, want_delta=tol > 0
             )
             rmse_hist.append(rmse_val)
-            if track_loglik:
-                ll_hist.append(ll)
             if tol > 0 and delta < tol:
                 converged = True
                 break
     finally:
         prebuild.shutdown(wait=True)
-    return AlsBiasModel(u_f, v_f, rmse_hist, ll_hist, converged)
+    return AlsBiasModel(u_f, v_f, rmse_hist, converged)
 
 
 def train_bias_only(

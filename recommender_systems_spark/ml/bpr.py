@@ -13,10 +13,10 @@ objective stays (SURVEY §7 "What's hard" #1):
   rejection loop becomes "draw A candidates per positive from a
   broadcast popularity pool → reject watched (anti-join) and
   genre-overlapping (arrays_overlap) → keep the first survivor".
-  The popularity pool is an inverse-CDF sample materialised once per
-  epoch from the item-popularity aggregate (items are dimension-sized
-  — MovieLens: 59k; for truly huge catalogs swap in a distributed
-  alias table, the plan shape is unchanged).
+  The popularity pool is a with-replacement sample of interaction
+  EVENTS drawn once per epoch in-plan
+  (``popularity_pools_distributed``), so only the POOL_SIZE winners
+  reach the driver at any catalog size.
 - **SGD (M7) is partition-parallel with per-epoch sync**: positives
   shuffle-group by user; ``applyInPandas`` runs the reference's exact
   gradient math over each user's positives against a broadcast copy of
@@ -43,69 +43,38 @@ POOL_SIZE = 1024
 ATTEMPTS = 4
 
 
-def popularity_dist(positives: DataFrame, item_col: str):
-    """Collect the (dimension-sized) item-popularity aggregate once:
-    (ids array, probability array) — the empirical distribution A2 that
-    drives negative sampling (prac_2.py:16-25). One Spark job per
-    TRAINING RUN; per-epoch pools redraw from it driver-side."""
-    pop = (
-        positives.groupBy(item_col).agg(F.count(F.lit(1)).alias("cnt")).collect()
-    )
-    items = np.array([r[item_col] for r in pop])
-    freq = np.array([r["cnt"] for r in pop], dtype=np.float64)
-    freq /= freq.sum()
-    return items, freq
-
-
 def popularity_pool_distributed(
     positives: DataFrame, item_col: str, size: int, seed: int
 ) -> np.ndarray:
-    """M8 at catalog scale: the with-replacement popularity sample
-    WITHOUT the catalog-sized driver collect. Sampling items ∝
-    popularity with replacement ≡ sampling uniform EVENTS from the
-    interaction table (each event is one occurrence of its item), so:
-    hash every event into one of ``size`` slots, keep one uniformly
-    random event per slot (min_by over a second random key — one
-    partial+final aggregation), and collect only the ``size`` winners.
-    Slots left empty by the hash (P ≈ e^(−N/size), negligible when
-    |events| ≫ size) simply shrink the pool. Driver traffic is O(size)
-    regardless of catalog or event count."""
-    # 2s / 2s+1: slot and tiebreak streams never share a seed across
-    # CONSECUTIVE pool seeds (callers pass s, s+1, ... per epoch; with
-    # rand(s)/rand(s+1) pool e's tiebreak column would equal pool e+1's
-    # slot column row-for-row, correlating consecutive epochs' pools).
-    slot = F.floor(F.rand(2 * seed) * size).cast("int")
-    rows = (
-        positives.select(
-            F.col(item_col).alias("__i"),
-            slot.alias("__s"),
-            F.rand(2 * seed + 1).alias("__r"),
-        )
-        .groupBy("__s")
-        .agg(F.min_by("__i", "__r").alias("__i"))
-        .collect()
-    )
-    return np.array(sorted(int(r["__i"]) for r in rows), dtype=np.int64)
+    """One-seed form of ``popularity_pools_distributed``."""
+    return popularity_pools_distributed(positives, item_col, size, [seed])[0]
 
 
 def popularity_pools_distributed(
     positives: DataFrame, item_col: str, size: int, seeds: list[int]
 ) -> list[np.ndarray]:
-    """Multi-epoch variant of ``popularity_pool_distributed``: one pool
-    PER SEED from a SINGLE Spark job (each event replicates once per
-    pool via an in-plan explode, then the same per-(pool, slot) min_by
-    reduction). Used by the sync_every > 1 training schedule, where one
-    sync block needs one independent pool per local epoch — one job
-    instead of ``len(seeds)``, driver traffic O(len(seeds)·size)."""
-    from pyspark.sql import functions as F
-
+    """M8 at catalog scale: with-replacement popularity samples of
+    ``size`` items, one pool PER SEED from a SINGLE Spark job, WITHOUT
+    the catalog-sized driver collect. Sampling items ∝ popularity with
+    replacement ≡ sampling uniform EVENTS from the interaction table
+    (each event is one occurrence of its item), so: replicate each
+    event once per pool via an in-plan explode, hash it into one of
+    ``size`` slots, keep one uniformly random event per (pool, slot)
+    (min_by over a second random key — one partial+final aggregation),
+    and collect only the winners. Slots left empty by the hash
+    (P ≈ e^(−N/size), negligible when |events| ≫ size) simply shrink
+    the pool. Driver traffic is O(len(seeds)·size) regardless of
+    catalog or event count; the sync_every > 1 training schedule draws
+    one pool per local epoch of a sync block in this one job."""
     arr = F.array(
         *[
             F.struct(
                 F.lit(e).alias("__e"),
-                # 2s / 2s+1 — see popularity_pool_distributed: keeps the
-                # slot/tiebreak streams disjoint across consecutive seeds
-                # AND byte-identical to the single-pool variant per seed.
+                # 2s / 2s+1: slot and tiebreak streams never share a
+                # seed across CONSECUTIVE pool seeds (callers pass s,
+                # s+1, ... per epoch; with rand(s)/rand(s+1) pool e's
+                # tiebreak column would equal pool e+1's slot column
+                # row-for-row, correlating consecutive epochs' pools).
                 F.floor(F.rand(2 * s) * size).cast("int").alias("__s"),
                 F.rand(2 * s + 1).alias("__r"),
             )
@@ -133,16 +102,6 @@ def popularity_pools_distributed(
     ]
 
 
-def popularity_pool(positives: DataFrame, item_col: str, size: int, seed: int):
-    """M8: with-replacement popularity sample as a driver-side pool.
-    Inverse-CDF samples ``size`` ids with a NumPy generator — the
-    distributed twin of np.random.choice(p=probs)
-    (implicit_feedback/functions.py:47-58)."""
-    items, freq = popularity_dist(positives, item_col)
-    rng = np.random.default_rng(seed)
-    return rng.choice(items, size=size, p=freq, replace=True).tolist()
-
-
 def sample_triplets(
     positives: DataFrame,
     user_col: str,
@@ -158,7 +117,7 @@ def sample_triplets(
     once — no per-row loop. ``genres`` is an optional (item, genre_ids
     array) dimension for the genre-disjoint constraint
     (functions.py:84-131)."""
-    pool = popularity_pool(positives, item_col, POOL_SIZE, seed)
+    pool = popularity_pool_distributed(positives, item_col, POOL_SIZE, seed)
     spark = positives.sparkSession
     pool_df = F.broadcast(
         spark.createDataFrame(
@@ -171,7 +130,7 @@ def sample_triplets(
             F.col(user_col).alias("u"), F.col(item_col).alias("i")
         )
         .withColumn("__att", F.explode(F.sequence(F.lit(1), F.lit(attempts))))
-        .withColumn("__pi", F.floor(F.rand(seed) * POOL_SIZE).cast("int"))
+        .withColumn("__pi", F.floor(F.rand(seed) * len(pool)).cast("int"))
         .join(pool_df, "__pi")
         .drop("__pi")
     )
@@ -205,7 +164,7 @@ SGD_BUCKETS = 64
 def _sgd_sample_bucket(
     pdf: pd.DataFrame,
     v_map: dict | None,
-    pool: np.ndarray,
+    pools: list[np.ndarray],
     genre_map: dict | None,
     k: int,
     lr: float,
@@ -244,12 +203,10 @@ def _sgd_sample_bucket(
       100×-scale path: nothing driver-side grows with the catalog."""
     import math
 
-    # ``pool`` may be a list of per-local-epoch pools (sync_every > 1:
-    # the worker runs one full pass per pool between V syncs — local
-    # SGD with reduced sync frequency). A single array is one epoch,
-    # and the draw sequence for pools[0] is bit-identical to the
-    # unbatched call.
-    pools = list(pool) if isinstance(pool, (list, tuple)) else [pool]
+    # One pool per local epoch (sync_every > 1: the worker runs one
+    # full pass per pool between V syncs — local SGD with reduced sync
+    # frequency). The draw sequence for pools[0] does not depend on how
+    # many pools follow it.
     i_all = pdf["i"].to_numpy()
     row_mode = v_map is None
     genres_on = (genre_map is not None) or (pool_genres is not None)
@@ -380,7 +337,6 @@ def train_bpr(
     genres: DataFrame | None = None,
     eval_k: int | None = None,
     eval_every_epoch: bool = True,
-    eval_user_mod: int | None = None,
     eval_user_count: int | None = None,
     catalog_broadcast_threshold: int = 1_000_000,
     eval_block_size: int = 200_000,
@@ -399,7 +355,7 @@ def train_bpr(
     ``eval_block_size`` with a per-user top-k merge
     (see ``_sgd_sample_bucket`` / ``precision_recall_at_k``). Both
     paths draw the per-epoch negative pool DISTRIBUTED
-    (``popularity_pool_distributed`` — O(POOL_SIZE) driver traffic),
+    (``popularity_pools_distributed`` — O(POOL_SIZE) driver traffic),
     and produce bit-identical factors given the same inputs: the modes
     differ only in how the same snapshot floats reach the workers.
 
@@ -496,15 +452,10 @@ def train_bpr(
     while epoch < epochs:
         n_local = min(max(1, sync_every), epochs - epoch)
         ep_seed = seed + 100 + epoch
-        if n_local == 1:
-            pools = [popularity_pool_distributed(pos, "i", POOL_SIZE, ep_seed)]
-        else:
-            # One job draws the whole block's pools (same per-seed
-            # reduction, replicated in-plan).
-            pools = popularity_pools_distributed(
-                pos, "i", POOL_SIZE,
-                [seed + 100 + epoch + e for e in range(n_local)],
-            )
+        # One job draws the whole block's pools, one per local epoch.
+        pools = popularity_pools_distributed(
+            pos, "i", POOL_SIZE, [ep_seed + e for e in range(n_local)]
+        )
         if blocked:
             # Negative-side lookups are bounded by the pool, not the
             # catalog: join V (and genres) against the distinct pool
@@ -547,7 +498,7 @@ def train_bpr(
             return _sgd_sample_bucket(
                 pdf,
                 bc_vm.value if bc_vm is not None else None,
-                pools if len(pools) > 1 else pools[0],
+                pools,
                 bc_g.value,
                 rank,
                 lr,
@@ -595,10 +546,8 @@ def train_bpr(
             # The E1 eval is a |U|×|I| scoring product, so the user
             # sample is the scale control. ``eval_user_count`` takes a
             # FIXED-COUNT md5-ordered sample (eval cost N×|I| — linear
-            # in the catalog at any user count); ``eval_user_mod`` keeps
-            # the legacy fraction (U/mod users — eval work grows
-            # quadratically under joint user+catalog scale-up, measured
-            # 14.9x at a 10x tiling; prefer the count form).
+            # in the catalog at any user count); without it every user
+            # is scored.
             if eval_user_count:
                 # Fixed-count sample ⇒ everything driver-bounded: the
                 # sample-sized eval runs through `_eval_pr_driver`
@@ -614,14 +563,9 @@ def train_bpr(
                     )
                 )
             else:
-                eval_users = (
-                    u_f.filter(F.col("id") % eval_user_mod == 0)
-                    if eval_user_mod
-                    else u_f
-                )
                 metrics.append(
                     precision_recall_at_k(
-                        pos, eval_users, v_f, eval_k,
+                        pos, u_f, v_f, eval_k,
                         rank=rank, n_blocks=eval_blocks,
                     )
                 )

@@ -49,9 +49,7 @@ from recommender_systems_spark.ml.als import (
 DEFAULT_BETA = 0.01  # genre-feature regulariser (incl_genre.py)
 
 
-def genre_pull(
-    genres: DataFrame, f_state: np.ndarray, spark, tau: float
-) -> DataFrame:
+def genre_pull(genres: DataFrame, f_state: np.ndarray, tau: float) -> DataFrame:
     """(id, pull) with pull = (τ/√c_n)·Σ_{g∈g_n} f_g — the RHS term for
     the item half-sweep. F is broadcast as a literal nested array (G×k
     = 128 doubles — constant-sized at any data scale); the per-item sum
@@ -153,17 +151,6 @@ def genre_a_stats(
     return a_mat
 
 
-def genre_feature_stats(
-    item_factors: DataFrame, genres: DataFrame, n_genres: int, rank: int
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """A (G×k), B (G), C (G×G) aggregates over the item dimension —
-    one-shot convenience wrapper over ``genre_a_stats`` (factor-
-    dependent) + ``genre_weight_grid`` (static)."""
-    a_mat = genre_a_stats(item_factors, genres, n_genres, rank)
-    b_vec, c_mat = genre_weight_grid(genres, n_genres)
-    return a_mat, b_vec, c_mat
-
-
 def update_genre_features(
     f_state: np.ndarray,
     a_mat: np.ndarray,
@@ -210,7 +197,6 @@ def train_als_genre(
     beta: float = DEFAULT_BETA,
     max_iter: int = 10,
     seed: int = 42,
-    rmse_every_iter: bool = True,
 ) -> tuple[AlsBiasModel, np.ndarray]:
     """The incl_genre.py training loop: user half-sweep (plain), item
     half-sweep with the genre pull in the RHS, then the driver F solve
@@ -221,10 +207,7 @@ def train_als_genre(
     thread over the iteration's CHECKPOINTED (immutable) factor
     snapshots, so they overlap the next iteration's sweeps instead of
     sitting on the critical path; only the final iteration's RMSE is
-    awaited serially. ``rmse_every_iter=False`` drops the intermediate
-    monitors entirely (history = [final]) for callers that only need
-    the converged error."""
-    spark = ratings.sparkSession
+    awaited serially."""
     # Lazy checkpoints (train_als_bias pattern): the run-level frames
     # materialise inside the first job that needs them instead of
     # paying four up-front actions; genres materialises in the
@@ -306,7 +289,7 @@ def train_als_genre(
                 if next_u_fut is not None
                 else build_user_sweep(u_f, v_f)
             )
-            pull = genre_pull(genres, f_state, spark, tau)
+            pull = genre_pull(genres, f_state, tau)
             # Item-side checkpoint is LAZY too: the A-stats collect
             # below is the iteration's ONE action — it materialises
             # new_u and new_v inside its own job (the eager form paid a
@@ -346,16 +329,15 @@ def train_als_genre(
             if b_vec is None:
                 b_vec, c_mat = grid_future.result()
             f_state = update_genre_features(f_state, a_mat, b_vec, c_mat, tau, beta)
-            if rmse_every_iter or it == max_iter - 1:
-                # v_f is already materialised (the A-stats collect
-                # above ran its checkpoint), so this is a sub-0.1 s
-                # item-dimension aggregate on the monitor thread.
-                rmse_futures.append(monitor.submit(_sse_rmse, v_f))
+            # v_f is already materialised (the A-stats collect above
+            # ran its checkpoint), so this is a sub-0.1 s item-dimension
+            # aggregate on the monitor thread.
+            rmse_futures.append(monitor.submit(_sse_rmse, v_f))
         rmse_hist = [fut.result() for fut in rmse_futures]
     finally:
         monitor.shutdown(wait=True)
         prebuild.shutdown(wait=True)
     return (
-        AlsBiasModel(u_f, v_f.drop("sse", "n"), rmse_hist, [], False),
+        AlsBiasModel(u_f, v_f.drop("sse", "n"), rmse_hist, False),
         f_state,
     )

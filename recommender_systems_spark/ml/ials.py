@@ -38,35 +38,48 @@ IALS_LMD = 0.1     # L2 regularisation
 IALS_RANK = 8
 
 
-def _gram(factors: DataFrame, k: int) -> np.ndarray:
-    """FᵀF as a k×k driver matrix from per-batch BLAS partials — each
-    Arrow batch ships exactly k² doubles regardless of row count (the
-    v_embedding_spectrum shape; the k×k rule allows the driver hop)."""
+def batch_gram(
+    df: DataFrame, col: str, k: int, extra: str | None = None
+) -> tuple[np.ndarray, float]:
+    """XᵀX of the k-wide array column ``col`` as a k×k driver matrix,
+    plus Σ ``extra`` (0.0 without one), from per-batch BLAS partials —
+    each Arrow batch ships k² (+1) doubles regardless of row count (the
+    k×k rule allows the driver hop), merged by one (i, j) aggregate.
+
+    ONE Spark action that reads ``df`` exactly once, so a LAZY
+    localCheckpoint upstream is materialised by this very collect with
+    no double compute. ``extra`` (iALS's per-entity ``corr``) rides the
+    same traversal as the (−1, −1) cell."""
+    ii, jj = np.meshgrid(np.arange(k), np.arange(k), indexing="ij")
+    cell_i, cell_j = ii.ravel(), jj.ravel()
+    if extra is not None:
+        cell_i, cell_j = np.append(cell_i, -1), np.append(cell_j, -1)
 
     def partial(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
-            x = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf["features"]]
-            )
-            g = x.T @ x
-            ii, jj = np.meshgrid(np.arange(k), np.arange(k), indexing="ij")
-            yield pd.DataFrame(
-                {"i": ii.ravel(), "j": jj.ravel(), "s": g.ravel()}
-            )
+            x = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[col]])
+            s = (x.T @ x).ravel()
+            if extra is not None:
+                s = np.append(s, pdf[extra].to_numpy().sum())
+            yield pd.DataFrame({"i": cell_i, "j": cell_j, "s": s})
 
     rows = (
-        factors.select("features")
+        df.select(col, *([extra] if extra is not None else []))
         .mapInPandas(partial, "i int, j int, s double")
         .groupBy("i", "j")
         .agg(F.sum("s").alias("s"))
         .collect()
     )
     g = np.zeros((k, k))
+    total = 0.0
     for r in rows:
-        g[r["i"], r["j"]] = r["s"]
-    return g
+        if r["i"] < 0:
+            total = float(r["s"])
+        else:
+            g[r["i"], r["j"]] = r["s"]
+    return g, total
 
 
 def _half_sweep(
@@ -78,15 +91,13 @@ def _half_sweep(
     k: int,
     alpha: float,
     lmd: float,
-    gram: np.ndarray | None = None,
+    gram: np.ndarray,
     with_objective_stats: bool = False,
 ) -> DataFrame:
     """Re-solve every `self_col` entity against frozen other-side
-    factors. One join (ratings ⋈ other factors), one bucketed
-    applyInPandas; the shared Gram rides the closure (k² doubles).
-    Callers that already hold Gram(other_factors) — the objective
-    monitor computes it every iteration — pass it via ``gram`` to skip
-    the recomputation job.
+    factors, given ``gram`` = Gram(other_factors). One join (ratings ⋈
+    other factors), one bucketed applyInPandas; the shared Gram rides
+    the closure (k² doubles).
 
     ``with_objective_stats=True`` (the fused-monitor item sweep) adds a
     ``corr`` column: each entity's observed-correction contribution
@@ -95,9 +106,6 @@ def _half_sweep(
     confidence weights, so the term is a free GEMV per entity and the
     exact objective needs no separate ratings⋈factors pass (round-13:
     this is what took the iteration from 3 Spark actions to 2)."""
-    if gram is None:
-        gram = _gram(other_factors, k)
-
     data = ratings.select(
         F.col(self_col).cast("long").alias("id"),
         F.col(other_col).cast("long").alias("other_id"),
@@ -145,75 +153,7 @@ def _half_sweep(
     )
 
 
-def _gram_and_corr(factors: DataFrame, k: int) -> tuple[np.ndarray, float]:
-    """ONE traversal of a (features, corr) factor frame → (FᵀF, Σcorr)
-    on the driver. Reads ``factors`` exactly once, so a LAZY
-    localCheckpoint upstream is materialised by this very collect with
-    no double-compute — the fused item-sweep/monitor action."""
-
-    def partial(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            x = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf["features"]]
-            )
-            g = x.T @ x
-            ii, jj = np.meshgrid(np.arange(k), np.arange(k), indexing="ij")
-            yield pd.DataFrame(
-                {
-                    "i": np.append(ii.ravel(), -1),
-                    "j": np.append(jj.ravel(), -1),
-                    "s": np.append(g.ravel(), pdf["corr"].to_numpy().sum()),
-                }
-            )
-
-    rows = (
-        factors.select("features", "corr")
-        .mapInPandas(partial, "i int, j int, s double")
-        .groupBy("i", "j")
-        .agg(F.sum("s").alias("s"))
-        .collect()
-    )
-    g = np.zeros((k, k))
-    corr = 0.0
-    for r in rows:
-        if r["i"] < 0:
-            corr = float(r["s"])
-        else:
-            g[r["i"], r["j"]] = r["s"]
-    return g, corr
-
-
-def _gram_partials(factors: DataFrame, k: int, tag: str) -> DataFrame:
-    """Gram partials as a composable (t, i, j, s) subtree — the union
-    leg of the fused monitor (same per-batch BLAS as ``_gram``, merged
-    by the same (i, j) aggregate, collected by the CALLER's single
-    action instead of its own)."""
-
-    def partial(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            x = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf["features"]]
-            )
-            g = x.T @ x
-            ii, jj = np.meshgrid(np.arange(k), np.arange(k), indexing="ij")
-            yield pd.DataFrame(
-                {"i": ii.ravel(), "j": jj.ravel(), "s": g.ravel()}
-            )
-
-    return (
-        factors.select("features")
-        .mapInPandas(partial, "i int, j int, s double")
-        .groupBy("i", "j")
-        .agg(F.sum("s").alias("s"))
-        .select(F.lit(tag).alias("t"), "i", "j", "s")
-    )
-
-
-def ials_monitor(
+def ials_objective(
     ratings: DataFrame,
     user_col: str,
     item_col: str,
@@ -223,25 +163,20 @@ def ials_monitor(
     k: int,
     alpha: float = IALS_ALPHA,
     lmd: float = IALS_LMD,
-    gram_x: np.ndarray | None = None,
-) -> tuple[float, np.ndarray]:
-    """Exact confidence-weighted objective over ALL pairs in ONE Spark
-    action; returns (objective, Gram(item_factors)) so the next user
-    half-sweep reuses the Gram without another job.
+) -> float:
+    """Exact confidence-weighted objective over ALL pairs — the
+    independent reference for ``train_ials``'s fused per-iteration
+    objective: it rescores the observed pairs with its own join
+    instead of reading the solver's ``corr`` column.
 
     The Gram identity does all the work: Σ_all (x·y)² =
-    trace(YᵀY · XᵀX), and the regulariser norms are the two traces —
-    so the whole background term needs only the two k×k Grams, whose
-    partials (k² doubles per Arrow batch) UNION with the 1-row
-    observed-correction aggregate c(1−x·y)² − (x·y)² into a single
-    collect. Pass ``gram_x`` = Gram(user_factors) if the item
-    half-sweep already computed it; then only the Y-partials and the
-    correction ride the union. Never materialises M×N anything."""
-    parts = _gram_partials(item_factors, k, "y")
-    if gram_x is None:
-        parts = parts.unionByName(_gram_partials(user_factors, k, "x"))
-    # Observed correction: c(1 − x·y)² − (x·y)²
-    pred_part = (
+    trace(XᵀX · YᵀY), and the regulariser norms are the two traces —
+    so the whole background term needs only the two k×k Grams, plus
+    the observed correction Σ_obs c(1−x·y)² − (x·y)². Three small
+    Spark actions; never materialises M×N anything."""
+    gram_x, _ = batch_gram(user_factors, "features", k)
+    gram_y, _ = batch_gram(item_factors, "features", k)
+    corr = (
         ratings.select(
             F.col(user_col).cast("long").alias("uid"),
             F.col(item_col).cast("long").alias("iid"),
@@ -271,52 +206,13 @@ def ials_monitor(
             ).alias("contrib")
         )
         .agg(F.coalesce(F.sum("contrib"), F.lit(0.0)).alias("s"))
-        .select(
-            F.lit("p").alias("t"),
-            F.lit(-1).alias("i"),
-            F.lit(-1).alias("j"),
-            "s",
-        )
+        .collect()[0]["s"]
     )
-    rows = parts.unionByName(pred_part).collect()
-    gram_y = np.zeros((k, k))
-    gx = np.zeros((k, k)) if gram_x is None else gram_x
-    pred = 0.0
-    for row in rows:
-        if row["t"] == "y":
-            gram_y[row["i"], row["j"]] = row["s"]
-        elif row["t"] == "x":
-            gx[row["i"], row["j"]] = row["s"]
-        else:
-            pred = float(row["s"])
-    all_sq = float(np.trace(gx @ gram_y))  # Σ_all (x·y)², background
-    obj = all_sq + pred + lmd * (float(np.trace(gx)) + float(np.trace(gram_y)))
-    return float(obj), gram_y
-
-
-def ials_objective(
-    ratings: DataFrame,
-    user_col: str,
-    item_col: str,
-    rating_col: str,
-    user_factors: DataFrame,
-    item_factors: DataFrame,
-    k: int,
-    alpha: float = IALS_ALPHA,
-    lmd: float = IALS_LMD,
-    gram_y: np.ndarray | None = None,
-) -> float:
-    """Standalone objective — thin wrapper over the fused
-    ``ials_monitor`` (one Spark action regardless of ``gram_y``, which
-    is accepted for API compatibility; the monitor's union recomputes
-    both Grams in the same single action, so passing it saves
-    nothing)."""
-    del gram_y
-    obj, _ = ials_monitor(
-        ratings, user_col, item_col, rating_col,
-        user_factors, item_factors, k, alpha, lmd,
+    return float(
+        np.trace(gram_x @ gram_y)
+        + corr
+        + lmd * (np.trace(gram_x) + np.trace(gram_y))
     )
-    return obj
 
 
 def train_ials(
@@ -329,20 +225,14 @@ def train_ials(
     alpha: float = IALS_ALPHA,
     lmd: float = IALS_LMD,
     seed: int = 7,
-    monitor: bool = True,
 ) -> tuple[DataFrame, DataFrame, list[float]]:
     """Alternating confidence-weighted sweeps; returns (user factors,
     item factors, per-iteration objective trajectory). Each full
-    iteration is two half-sweeps (users, then items) + one objective
-    pass; factor frames are localCheckpointed so lineage stays flat
-    across sweeps (the train_als_bias pattern).
-
-    ``monitor=False`` (the train_als_genre pattern) skips the
-    per-iteration objective passes and returns history = [final
-    objective] — for callers that only need the trained factors plus a
-    convergence sanity number. On the monitored path, the objective's
-    Gram(Y) is handed to the next iteration's user half-sweep, so
-    monitoring adds no duplicate Gram job."""
+    iteration is two half-sweeps (users, then items); the exact
+    objective rides the item sweep (see below), and its Gram(Y) is
+    handed to the next iteration's user half-sweep, so monitoring adds
+    no job of its own. Factor frames are localCheckpointed so lineage
+    stays flat across sweeps (the train_als_bias pattern)."""
     users = ratings.select(
         F.col(user_col).cast("long").alias("id")
     ).distinct()
@@ -354,7 +244,7 @@ def train_ials(
     # feeds the item half-sweep's closure), and the fused
     # sweep+monitor collect — the item solve emits each entity's
     # observed-correction term alongside its fresh vector
-    # (`with_objective_stats`), so `_gram_and_corr`'s single traversal
+    # (`with_objective_stats`), so `batch_gram`'s single traversal
     # of the lazily-checkpointed item factors yields Gram(vf) for the
     # next user sweep AND the exact objective via the Gram identity
     #     L = tr(Gx·Gy) + Σ corr + λ(tr Gx + tr Gy)
@@ -377,29 +267,26 @@ def train_ials(
         .localCheckpoint(eager=False)
     )
     history: list[float] = []
-    gram_v = _gram(vf, rank)  # materialises vf; carried across iterations
-    obj = None
+    gram_v, _ = batch_gram(vf, "features", rank)  # materialises vf
     for _ in range(max_iter):
         uf = _half_sweep(
             ratings, user_col, item_col, rating_col, vf, rank, alpha, lmd,
             gram=gram_v,
         ).localCheckpoint(eager=False)
-        gram_u = _gram(uf, rank)  # materialises uf
+        gram_u, _ = batch_gram(uf, "features", rank)  # materialises uf
         vf = _half_sweep(
             ratings, item_col, user_col, rating_col, uf, rank, alpha, lmd,
             gram=gram_u, with_objective_stats=True,
         ).localCheckpoint(eager=False)
         # Single-read fused collect: materialises vf, returns Gram(vf)
         # + Σcorr; the exact objective is then pure driver arithmetic.
-        gram_v, corr = _gram_and_corr(vf, rank)
-        obj = float(
-            np.trace(gram_u @ gram_v)
-            + corr
-            + lmd * (np.trace(gram_u) + np.trace(gram_v))
+        gram_v, corr = batch_gram(vf, "features", rank, extra="corr")
+        history.append(
+            float(
+                np.trace(gram_u @ gram_v)
+                + corr
+                + lmd * (np.trace(gram_u) + np.trace(gram_v))
+            )
         )
-        if monitor:
-            history.append(obj)
         vf = vf.drop("corr")
-    if not monitor and obj is not None:
-        history.append(obj)
     return uf, vf, history

@@ -153,8 +153,8 @@ def two_phase_midrank(
     once per reference (round-13; guide §2.4). LONG-ONLY CONTRACT: the
     grand totals are a driver-side Python sum, exact for integral
     columns only — a double column would produce order-dependent float
-    totals that diverge from an in-plan F.sum, so integral types are
-    asserted. Returns (df, totals).
+    totals that diverge from an in-plan F.sum, so a non-integral column
+    raises TypeError. Returns (df, totals).
 
     ``approx_rows``: row estimate for the ``per_value`` table (an upper
     bound is fine — e.g. the source table's footer row count); sizes
@@ -166,9 +166,10 @@ def two_phase_midrank(
             c for c in total_sums
             if schema.get(c) not in ("tinyint", "smallint", "int", "bigint")
         ]
-        assert not bad, (
-            f"total_sums is exact for integral columns only, got {bad}"
-        )
+        if bad:
+            raise TypeError(
+                f"total_sums is exact for integral columns only, got {bad}"
+            )
     n = _range_partitions(per_value, approx_rows, num_partitions)
     parts = (
         per_value.repartitionByRange(n, F.col(value_col))

@@ -21,6 +21,7 @@ from recommender_systems_spark.functions.vector import (
 )
 from recommender_systems_spark.queries._shared import u01_col, u01_sql
 from recommender_systems_spark.io import ckpt_eager, table_rows
+from recommender_systems_spark.ml.ials import batch_gram
 from recommender_systems_spark.registry import _t, register
 from recommender_systems_spark.similarity.ann import (
     adaptive_bits,
@@ -1633,42 +1634,18 @@ _SPEC_COV = _spec_cov_sql()
 def _embedding_gram(emb: DataFrame):
     """Merged (D+1)×(D+1) Gram of the 1-AUGMENTED embedding matrix —
     the single data-sized pass shared by v_embedding_spectrum and
-    v_embedding_project: per-batch X'ᵀX' partials (one BLAS call per
-    Arrow batch carries the Gram, the mean sums AND the row count),
-    merged by a (D+1)²-row shuffle, assembled driver-side."""
-    import numpy as np
-    import pandas as pd
-
-    d1 = _SPEC_DIM + 1
-
-    def partial_gram(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            x = np.vstack(
-                [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
-            )
-            x = np.hstack([x, np.ones((len(x), 1))])
-            g = x.T @ x
-            ii, jj = np.meshgrid(np.arange(d1), np.arange(d1), indexing="ij")
-            yield pd.DataFrame(
-                {
-                    "i": (ii + 1).ravel().astype("int32"),
-                    "j": (jj + 1).ravel().astype("int32"),
-                    "s": g.ravel(),
-                }
-            )
-
-    gram_rows = (
-        emb.select("embedding")
-        .mapInPandas(partial_gram, "i int, j int, s double")
-        .groupBy("i", "j")
-        .agg(F.sum("s").alias("s"))
-        .collect()
+    v_embedding_project: the ones column is appended in the plan, so
+    one per-batch X'ᵀX' partial (``ml.ials.batch_gram``) carries the
+    Gram, the mean sums AND the row count."""
+    g, _ = batch_gram(
+        emb.select(
+            F.concat(
+                F.col("embedding").cast("array<double>"), F.array(F.lit(1.0))
+            ).alias("x")
+        ),
+        "x",
+        _SPEC_DIM + 1,
     )
-    g = np.zeros((d1, d1))
-    for r in gram_rows:
-        g[r["i"] - 1, r["j"] - 1] = r["s"]
     return g
 
 

@@ -75,6 +75,25 @@ def test_gate_order_window():
         assert family <= window
 
 
+def test_benchmark_trace_names_resolve():
+    """perfbench's traced run rebinds engine functions by (module,
+    attribute) name; every name it lists in SPANS and OPERATORS must
+    resolve, or a rename would silently break ``--trace 1``."""
+    import importlib
+    import runpy
+
+    path = os.path.join(os.path.dirname(__file__), "..", "perfbench", "spans.py")
+    spans = runpy.run_path(path)
+
+    names = [(m, a) for m, a, _ in spans["SPANS"]] + list(spans["OPERATORS"])
+    assert names
+    missing = [
+        (m, a) for m, a in names
+        if not callable(getattr(importlib.import_module(m), a, None))
+    ]
+    assert not missing, missing
+
+
 def test_first_entry_imports_are_cycle_safe():
     """Each fragment-consuming query module must import cleanly as the
     process's FIRST entry into the package — the circular-import class

@@ -153,7 +153,7 @@ def test_precision_recall_blocked_matches(spark):
 
 def test_eval_user_count_fixed_sample_mode_invariant(spark):
     """The fixed-COUNT E1 eval sample (md5-ordered top-N users — the
-    scale-safe replacement for the fraction-based eval_user_mod) must
+    scale-safe way to bound the eval) must
     pick the identical user set in the broadcast and blocked catalog
     modes: identical metrics histories, and factors stay bit-identical
     as before."""

@@ -38,7 +38,10 @@ def test_update_genre_features_matches_reference_loop():
 def test_genre_stats_pass(spark):
     """A/B/C stats from the distributed pass must equal a pandas
     recomputation on the same small fixture."""
-    from recommender_systems_spark.ml.genre_als import genre_feature_stats
+    from recommender_systems_spark.ml.genre_als import (
+        genre_a_stats,
+        genre_weight_grid,
+    )
 
     factors = spark.createDataFrame(
         [(1, [1.0, 2.0]), (2, [0.5, -1.0]), (3, [3.0, 0.0])],
@@ -48,7 +51,8 @@ def test_genre_stats_pass(spark):
         [(1, [0, 1], 2), (2, [1], 1), (3, [0, 2], 2)],
         "item long, genre_values array<int>, genre_count int",
     )
-    a, b, c = genre_feature_stats(factors, genres, 3, 2)
+    a = genre_a_stats(factors, genres, 3, 2)
+    b, c = genre_weight_grid(genres, 3)
     s2 = np.sqrt(2.0)
     np.testing.assert_allclose(
         a[0], np.array([1.0, 2.0]) / s2 + np.array([3.0, 0.0]) / s2, atol=1e-12
@@ -95,7 +99,10 @@ def test_genre_stats_unrated_item(spark):
     weight to B/C — matching the reference F-update's denominator,
     which iterates the full genre table — but nothing to A (missing
     factor rows act as zero vectors)."""
-    from recommender_systems_spark.ml.genre_als import genre_feature_stats
+    from recommender_systems_spark.ml.genre_als import (
+        genre_a_stats,
+        genre_weight_grid,
+    )
 
     factors = spark.createDataFrame(
         [(1, [1.0, 2.0])], "id long, features array<double>"
@@ -105,7 +112,8 @@ def test_genre_stats_unrated_item(spark):
         [(1, [0], 1), (9, [0, 1], 2)],
         "item long, genre_values array<int>, genre_count int",
     )
-    a, b, c = genre_feature_stats(factors, genres, 2, 2)
+    a = genre_a_stats(factors, genres, 2, 2)
+    b, c = genre_weight_grid(genres, 2)
     # A: only the rated item 1 contributes (sqrt(1) scale).
     np.testing.assert_allclose(a, [[1.0, 2.0], [0.0, 0.0]], atol=1e-12)
     # B/C: item 9 contributes 1/2 to both its genres and their cross.
@@ -144,7 +152,7 @@ def test_genre_train_unrated_item_feeds_a_term(spark):
     with mock.patch.object(genre_als, "genre_a_stats", side_effect=spy):
         _, f_state = genre_als.train_als_genre(
             r, genres, "u", "i", "r", n_genres=2, rank=3, max_iter=2,
-            seed=3, rmse_every_iter=False,
+            seed=3,
         )
     assert len(seen) == 2
     # Iteration 1: F starts at zeros, so the unrated solve is the zero

@@ -49,6 +49,25 @@ def test_als_beats_bias_free_baseline(spark):
     assert model.rmse_history[-1] < stats["sd"]
 
 
+def test_als_convergence_stops_on_tolerance(spark):
+    """E8 (prac_1.py:161-187): with tol > 0 the fused monitor carries
+    the max parameter delta. A tolerance above any delta stops training
+    after iteration 1 as converged; one below every delta runs all
+    max_iter iterations unconverged."""
+    from recommender_systems_spark.ml.als import train_als_bias
+
+    r = _ratings(spark, SF_SMALL)
+    loose = train_als_bias(r, "u", "i", "r", rank=4, max_iter=3, tol=1e9, seed=7)
+    assert loose.converged
+    assert len(loose.rmse_history) == 1
+    tight = train_als_bias(r, "u", "i", "r", rank=4, max_iter=3, tol=1e-12, seed=7)
+    assert not tight.converged
+    assert len(tight.rmse_history) == 3
+    # The tol > 0 path solves the same sweeps as the sse-only path.
+    base = train_als_bias(r, "u", "i", "r", rank=4, max_iter=3, tol=0.0, seed=7)
+    np.testing.assert_allclose(tight.rmse_history, base.rmse_history, rtol=1e-9)
+
+
 def test_bias_only_closed_form(spark):
     """M4 fixpoint probe: one user, one item, one rating, zero factors.
     Sweep 1: b_u = λr/(α+λ);  b_i = λ(r−b_u)/(α+λ)."""

@@ -2669,3 +2669,18 @@ def test_ivf_adaptive_serve_prunes_and_matches(spark):
         for r in sim_ivf_adaptive(spark, SF_MED).collect()
     }
     assert served == computed
+
+
+def test_midrank_total_sums_rejects_double_column(spark):
+    """two_phase_midrank's grand totals are exact driver integers, so
+    ``total_sums`` must refuse a floating-point column with a TypeError
+    (a contract check that holds under ``python -O`` too)."""
+    import pytest
+
+    from recommender_systems_spark.operators.relational import two_phase_midrank
+
+    df = spark.createDataFrame(
+        [(1, 2, 0.5), (2, 1, 1.5)], "value long, cnt long, w double"
+    )
+    with pytest.raises(TypeError, match="integral"):
+        two_phase_midrank(df, "value", "cnt", total_sums=["w"])
