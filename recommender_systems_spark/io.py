@@ -6,6 +6,12 @@ tensors (``prac_1.py:163-204``). Here every source declares an explicit
 schema (no inference — determinism at scale) and model state is Parquet
 ``(id, features array)`` DataFrames, which is also MLlib's native model
 shape.
+
+Checkpoint policy: every lineage cut in the package goes through
+``materialize`` (lazy; eager only past ``SCALE_ROWS`` lineitem rows when
+the caller passes its ``sf_dir``) or ``materialize_now`` (always eager,
+for a frame that must exist before the call returns). No other module
+calls ``localCheckpoint``.
 """
 
 from __future__ import annotations
@@ -293,19 +299,46 @@ def cache_ready(path: str) -> bool:
 _ROW_COUNT_CACHE: dict[str, int] = {}
 
 
-def ckpt_eager(
-    sf_dir: str, table: str = "lineitem", threshold: int = 5_000_000
-) -> bool:
-    """Eagerness for a multi-consumer ``localCheckpoint``: LAZY below
-    the threshold — the first consumer materialises the blocks inside
-    the main action instead of paying a separate blocking driver
-    action (measured +10–20% per query at sf0.1, round-13) — and
-    EAGER past it, where concurrent first-computation of an
-    unmaterialised lazy checkpoint under memory pressure is the
-    documented sf10 "Block rdd_N does not exist" failure mode (the
-    e_ab_simulation / abtest._ab_big idiom, generalised). Row count
-    from the parquet footer — zero Spark jobs."""
-    return table_rows(sf_dir, table) > threshold
+# Past this many lineitem rows (about sf0.83) a checkpoint is written
+# eagerly; see ``materialize``.
+SCALE_ROWS = 5_000_000
+
+
+def materialize(df: DataFrame, sf_dir: str | None = None) -> DataFrame:
+    """The engine's one lineage cut (SURVEY §4.3): a ``localCheckpoint``
+    that is LAZY unless ``sf_dir``'s lineitem table is past
+    ``SCALE_ROWS``.
+
+    Lazy is the default because an eager checkpoint is its own blocking
+    count job — a driver barrier per site. A lazy checkpoint still runs
+    the plan's shuffle-map stages at the call, and its final stage is
+    computed once, by the first job that reads it; every later reader,
+    including both sides of a self-join, reads the stored blocks. When
+    two concurrent stages read one and a driver GC lands after the first
+    stage has cut the lineage, the DAGScheduler logs "attempted to
+    access non-existent accumulator": the second stage's SQL-metric
+    updates for the cut lineage are dropped. Values are unaffected.
+
+    Past the scale point, several branches of one job that first-compute
+    an unmaterialised checkpoint under memory pressure are the sf10
+    "Block rdd_N does not exist" failure, so query sites (which pass
+    their ``sf_dir``) go eager there. Trainer and operator sites pass no
+    ``sf_dir``: their next action is the checkpoint's only first reader.
+    A frame whose first readers are several threads, or several
+    branches of a trainer's next job, goes through ``materialize_now``.
+    The row count comes from the parquet footer — zero Spark jobs.
+
+    Chain form: ``df.transform(materialize, sf_dir)``."""
+    eager = sf_dir is not None and table_rows(sf_dir, "lineitem") > SCALE_ROWS
+    return df.localCheckpoint(eager=eager)
+
+
+def materialize_now(df: DataFrame) -> DataFrame:
+    """An always-eager ``localCheckpoint``, for a frame that must exist
+    before the call returns: its source is overwritten or deleted next,
+    other threads read it, or several branches of a trainer's next job
+    would first-compute it."""
+    return df.localCheckpoint(eager=True)
 
 
 def scan_splits(sf_dir: str, name: str) -> int:

@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from recommender_systems_spark.functions.vector import dot_product
+from recommender_systems_spark.io import materialize
 
 # Reference hyperparameters (prac_1.py:35-39).
 DEFAULT_LMD = 0.1
@@ -404,33 +405,22 @@ def train_als_bias(
     monitor, stop when max parameter delta < tol (E8) or max_iter."""
     # Lazy checkpoints: run-level frames materialise inside the first
     # job that needs them; lineage still truncates at every checkpoint.
-    # Per-iteration actions: ONE (the fused monitor collect, which also
-    # materialises both lazy sweep checkpoints) on the sse-only monitor
-    # path, TWO (eager item checkpoint + monitor) when the delta
-    # subtrees multi-reference the sweeps — see the tol > 0 note below.
+    # Per-iteration actions: ONE — the fused monitor collect, which also
+    # materialises both sweep checkpoints.
     ratings = ratings.select(
         F.col(user_col).cast("long").alias("u"),
         F.col(item_col).cast("long").alias("i"),
         F.col(rating_col).cast("double").alias("r"),
-    ).localCheckpoint(eager=False)
+    ).transform(materialize)
     u_f = init_factors(
         ratings.select("u").distinct(), "u", rank, seed
-    ).localCheckpoint(eager=False)
+    ).transform(materialize)
     v_f = init_factors(
         ratings.select("i").distinct(), "i", rank, seed + 1
-    ).localCheckpoint(eager=False)
+    ).transform(materialize)
 
     rmse_hist: list[float] = []
     converged = False
-    # Monitor reference count decides the item checkpoint's eagerness
-    # (round-13): with the delta subtrees (tol > 0) the monitor's single
-    # plan scans new_u/new_v_ext MORE THAN ONCE, and concurrent scan
-    # stages of an unmaterialised lazy checkpoint inside one job can
-    # compute the Arrow solve twice — keep the checkpoint eager there.
-    # On the sse-only path (tol <= 0 — the m_als_train shape) the
-    # monitor reads each sweep exactly once, so the checkpoint goes
-    # LAZY and the monitor collect is the iteration's ONE action (the
-    # genre trainer's shape; was 2 actions/iteration).
     # Plan-pipelining (round-13, ported from train_genre_als): the user
     # half-sweep's DataFrame + lazy-checkpoint RDD conversion is pure
     # driver-side Catalyst, so iteration N+1's build runs on a helper
@@ -442,7 +432,7 @@ def train_als_bias(
     def build_user_sweep(uf, vf):
         return als_half_sweep(
             ratings, "u", "i", "r", uf, vf, lmd, tau, alpha, rank
-        ).localCheckpoint(eager=False)
+        ).transform(materialize)
 
     prebuild = ThreadPoolExecutor(max_workers=1)
     next_u_fut = None
@@ -461,7 +451,7 @@ def train_als_bias(
             new_v_ext = als_half_sweep(
                 ratings, "i", "u", "r", v_f, new_u, lmd, tau, alpha, rank,
                 with_sse=True,
-            ).localCheckpoint(eager=tol > 0)
+            ).transform(materialize)
             new_v = new_v_ext.drop("sse", "n")
             old_u, old_v = u_f, v_f
             u_f, v_f = new_u, new_v

@@ -37,6 +37,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from recommender_systems_spark.io import materialize, materialize_now
 from recommender_systems_spark.ml.als import bucketed, init_factors
 
 POOL_SIZE = 1024
@@ -373,16 +374,16 @@ def train_bpr(
     pos = positives.select(
         F.col(user_col).cast("long").alias("u"),
         F.col(item_col).cast("long").alias("i"),
-    ).localCheckpoint()
+    ).transform(materialize)
     u_f = (
         init_factors(pos.select("u").distinct(), "u", rank, seed, scale=0.1)
         .drop("bias")
-        .localCheckpoint()
+        .transform(materialize)
     )
     v_f = (
         init_factors(pos.select("i").distinct(), "i", rank, seed + 1, scale=0.1)
         .drop("bias")
-        .localCheckpoint()
+        .transform(materialize)
     )
     spark = positives.sparkSession
     metrics: list[tuple[float, float]] = []
@@ -513,8 +514,10 @@ def train_bpr(
             bucketed(epoch_src(), "__b", SGD_BUCKETS)
             .groupBy("__b")
             .applyInPandas(sgd, schema)
-            .localCheckpoint()
         )
+        # Blocked mode's eval reads ``out`` through two branches of one
+        # job (u_f and v_f's dv), so there it is written before the eval.
+        out = materialize_now(out) if blocked else materialize(out)
         # u_f / dv both derive lazily from the checkpointed SGD output —
         # no separate materialisation jobs.
         u_f = out.filter(F.col("kind") == "u").select(
@@ -539,7 +542,7 @@ def train_bpr(
                 .otherwise(F.col("features"))
                 .alias("features"),
             )
-            .localCheckpoint()
+            .transform(materialize)
         )
         epoch += n_local
         if eval_k and (eval_every_epoch or epoch >= epochs):

@@ -36,6 +36,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from recommender_systems_spark.io import materialize, materialize_now
 from recommender_systems_spark.ml.als import (
     DEFAULT_ALPHA,
     DEFAULT_LMD,
@@ -216,19 +217,19 @@ def train_als_genre(
         F.col(user_col).cast("long").alias("u"),
         F.col(item_col).cast("long").alias("i"),
         F.col(rating_col).cast("double").alias("r"),
-    ).localCheckpoint(eager=False)
+    ).transform(materialize)
     u_f = init_factors(
         r.select("u").distinct(), "u", rank, seed
-    ).localCheckpoint(eager=False)
+    ).transform(materialize)
     v_f = init_factors(
         r.select("i").distinct(), "i", rank, seed + 1
-    ).localCheckpoint(eager=False)
+    ).transform(materialize)
     f_state = np.zeros((n_genres, rank))
     # B/C genre co-membership weights are factor-independent: one
     # distributed pass per RUN, and not needed until the FIRST F-solve
     # — so it runs on the monitor thread concurrently with iteration
-    # 1's sweeps (genres is eagerly checkpointed above, so the two
-    # threads never race a first computation).
+    # 1's sweeps (genres is materialised below before that thread
+    # starts).
     b_vec = c_mat = None
 
     from concurrent.futures import ThreadPoolExecutor
@@ -238,7 +239,7 @@ def train_als_genre(
     # factor-VALUE-independent (only the pull term bakes in f_state),
     # so its DataFrame + lazy-checkpoint RDD conversion (~0.7 s of
     # driver-side Catalyst at sf0.1) can be built off the critical
-    # path: iteration 0's during the eager genres checkpoint below,
+    # path: iteration 0's during the genres checkpoint below,
     # iteration N+1's WHILE iteration N's A-stats collect keeps the
     # cluster busy. Plan construction never computes data, so racing an
     # in-flight job is safe; results are consumed strictly via
@@ -248,16 +249,14 @@ def train_als_genre(
     def build_user_sweep(uf, vf):
         return als_half_sweep(
             r, "u", "i", "r", uf, vf, lmd, tau, alpha, rank
-        ).localCheckpoint(eager=False)
+        ).transform(materialize)
 
     next_u_fut = prebuild.submit(build_user_sweep, u_f, v_f)
     # Three consumers per iteration (pull, A/B stats, C stats) re-derive
-    # the genre parse otherwise — materialise the small dimension once.
-    # EAGER: the weight-grid collect below runs on a background thread
-    # concurrently with iteration 1's sweeps, and two threads must not
-    # race the first computation of a lazy checkpoint. (This blocking
-    # action is also what the iteration-0 prebuild above overlaps.)
-    genres = genres.localCheckpoint()
+    # the genre parse otherwise — materialise the small dimension once,
+    # now: the weight-grid collect below reads it on a background thread
+    # concurrently with iteration 1's sweeps.
+    genres = materialize_now(genres)
     # Unrated genre items: the reference carries V rows for EVERY item
     # in the genre table (incl_genre.py:95-105), so its F-update's A
     # numerator reads a vector for each of them. An item with no
@@ -273,32 +272,23 @@ def train_als_genre(
         .join(
             r.select(F.col("i").alias("id")).distinct(), "id", "left_anti"
         )
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
 
     rmse_futures = []
     try:
         grid_future = monitor.submit(genre_weight_grid, genres, n_genres)
         for it in range(max_iter):
-            # User-side checkpoint stays LAZY: it materialises inside
-            # the item-side EAGER checkpoint's job, so the background
-            # RMSE thread only ever touches already-materialised
-            # snapshots (no concurrent first-computation race).
             new_u = (
                 next_u_fut.result()
                 if next_u_fut is not None
                 else build_user_sweep(u_f, v_f)
             )
             pull = genre_pull(genres, f_state, tau)
-            # Item-side checkpoint is LAZY too: the A-stats collect
-            # below is the iteration's ONE action — it materialises
-            # new_u and new_v inside its own job (the eager form paid a
-            # separate blocking checkpoint job per sweep, ~0.3-0.5 s of
-            # pure scheduling at sf0.1). The background RMSE monitor is
-            # submitted strictly AFTER that collect returns, so it only
-            # ever reads already-materialised snapshots — the lazy-
-            # checkpoint concurrency race needs a concurrent FIRST
-            # computation, which this ordering rules out.
+            # The A-stats collect below is the iteration's ONE action —
+            # it materialises new_u and new_v inside its own job. The
+            # background RMSE monitor is submitted strictly AFTER that
+            # collect returns, so it only reads materialised snapshots.
             # with_sse: the item solve emits per-item residual stats
             # computed with the fresh vectors (als._solve_bucket), so
             # the RMSE monitor below is a tiny aggregate over this
@@ -308,7 +298,7 @@ def train_als_genre(
             new_v = als_half_sweep(
                 r, "i", "u", "r", v_f, new_u, lmd, tau, alpha, rank,
                 rhs_pull=pull, with_sse=True,
-            ).localCheckpoint(eager=False)
+            ).transform(materialize)
             u_f, v_f = new_u, new_v
             # Kick off iteration N+1's user-sweep plan build now — it
             # overlaps the A-stats collect below (see `prebuild`).

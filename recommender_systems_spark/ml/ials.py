@@ -31,6 +31,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from recommender_systems_spark.io import materialize
 from recommender_systems_spark.ml.als import SOLVE_BUCKETS, bucketed, init_factors
 
 IALS_ALPHA = 1.0   # confidence slope: c = 1 + α r
@@ -248,23 +249,19 @@ def train_ials(
     # of the lazily-checkpointed item factors yields Gram(vf) for the
     # next user sweep AND the exact objective via the Gram identity
     #     L = tr(Gx·Gy) + Σ corr + λ(tr Gx + tr Gy)
-    # with no separate ratings⋈factors monitor pass at all. The r12
-    # shape paid a third action (eager item checkpoint) because the
-    # old monitor read vf from two subtrees; the fused stats remove
-    # the second subtree, so the checkpoint can go lazy and be
-    # materialised by the monitor collect itself. (A r12 experiment
-    # that split monitor work into extra data-sized jobs measured 60%
-    # SLOWER — fusion into existing passes is the only direction that
-    # pays.)
+    # with no separate ratings⋈factors monitor pass at all. (A r12
+    # experiment that split monitor work into extra data-sized jobs
+    # measured 60% SLOWER — fusion into existing passes is the only
+    # direction that pays.)
     uf = (
         init_factors(users, "id", rank, seed, scale=0.1)
         .drop("bias")
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     vf = (
         init_factors(items, "id", rank, seed + 1, scale=0.1)
         .drop("bias")
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     history: list[float] = []
     gram_v, _ = batch_gram(vf, "features", rank)  # materialises vf
@@ -272,12 +269,12 @@ def train_ials(
         uf = _half_sweep(
             ratings, user_col, item_col, rating_col, vf, rank, alpha, lmd,
             gram=gram_v,
-        ).localCheckpoint(eager=False)
+        ).transform(materialize)
         gram_u, _ = batch_gram(uf, "features", rank)  # materialises uf
         vf = _half_sweep(
             ratings, item_col, user_col, rating_col, uf, rank, alpha, lmd,
             gram=gram_u, with_objective_stats=True,
-        ).localCheckpoint(eager=False)
+        ).transform(materialize)
         # Single-read fused collect: materialises vf, returns Gram(vf)
         # + Σcorr; the exact objective is then pure driver arithmetic.
         gram_v, corr = batch_gram(vf, "features", rank, extra="corr")

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from recommender_systems_spark.io import materialize
+
 
 def dense_id_map(
     df: DataFrame,
@@ -51,13 +53,11 @@ def dense_id_map(
     # localCheckpoint pins the range partitioning: the counts job below
     # and the final ranking job must see the SAME partition boundaries
     # (a re-executed repartitionByRange re-samples them), and the
-    # distinct is computed once instead of twice. Lazy: the counts
-    # collect below is the first action and materialises the blocks in
-    # its own job (one blocking action, was two — round-14, guide §5).
+    # distinct is computed once instead of twice.
     parts = (
         ids.repartitionByRange(n, F.col(id_col))
         .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     # Tiny driver-side exclusive scan: one row per partition.
     sizes = sorted(

@@ -14,6 +14,8 @@ import os
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from recommender_systems_spark.io import materialize
+
 # Rows per range partition for the two-phase global-order operators
 # (midrank / running totals / densify). Partition count derives from
 # the DATA SIZE (caller-supplied row estimate from parquet footer
@@ -174,13 +176,10 @@ def two_phase_midrank(
     parts = (
         per_value.repartitionByRange(n, F.col(value_col))
         .withColumn("__pid", F.spark_partition_id())
-        # Lazy: the offsets collect below is the FIRST (and only
-        # pre-consumer) action, so it materialises the blocks inside
-        # its own job — one blocking driver action where the eager
-        # form paid two (round-14; guide §5 fewer driver actions).
-        # Boundaries stay pinned across jobs exactly as before: the
-        # consumer reads the stored blocks, never re-samples.
-        .localCheckpoint(eager=False)
+        # The offsets collect below materialises the blocks; the
+        # consumer reads the stored blocks, so boundaries stay pinned
+        # across jobs and are never re-sampled.
+        .transform(materialize)
     )
     extra = list(total_sums or [])
     aggs = [F.sum(count_col).alias("t")] + [
@@ -307,12 +306,10 @@ def global_running_totals(
     parts = (
         df.repartitionByRange(n, F.col(order_by))
         .withColumn("__pid", F.spark_partition_id())
-        # Lazy: the per-partition sums collect below is the first
-        # action and materialises the blocks in its own job (one
-        # blocking action, was two — round-14, guide §5). Callers that
-        # re-aggregate the returned frame for grand totals still read
-        # the stored blocks, exactly as with the eager form.
-        .localCheckpoint(eager=False)
+        # The per-partition sums collect below materialises the
+        # blocks; callers that re-aggregate the returned frame for
+        # grand totals read the stored blocks.
+        .transform(materialize)
     )
     sums = {
         r["__pid"]: r

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from recommender_systems_spark.io import materialize, materialize_now
 from recommender_systems_spark.queries._shared import (
     GENRE_CTE as _AB_GENRE_CTE,
     GENRE_WORDS as _AB_GENRE_WORDS,
@@ -140,7 +141,7 @@ def e_ab_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("grp"),
             "value",
         )
-        .localCheckpoint()
+        .transform(materialize_now)  # four threads read it concurrently
     )
     # The four statistics are independent jobs over the same checkpointed
     # frame — submit them concurrently (Spark's scheduler interleaves
@@ -256,7 +257,7 @@ def e_boxplot_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("lo", F.col("q1") - 1.5 * iqr)
         .withColumn("hi", F.col("q3") + 1.5 * iqr)
-        .localCheckpoint()
+        .transform(materialize, sf_dir)
     )
     outliers = (
         g.join(F.broadcast(s.select("grp", "lo", "hi")), "grp")
@@ -305,16 +306,6 @@ _AB_LMD, _AB_ALPHA = 0.1, 0.01
 # In-process cache of the dual-model serving blocks, keyed by the
 # content-addressed catalog dir (see e_ab_simulation).
 _AB_CAT_BLOCKS: dict[str, tuple] = {}
-
-
-def _ab_big(sf_dir: str) -> bool:
-    """True past the corpus size where multi-consumer LAZY checkpoints
-    become unsafe (concurrent first-computation of an unmaterialised
-    RDD under memory pressure — the sf10 "Block rdd_N does not exist"
-    failure mode). Row count from the parquet footer, zero Spark jobs."""
-    from recommender_systems_spark.io import table_rows
-
-    return table_rows(sf_dir, "lineitem") > 5_000_000
 
 
 def _ab_sim_users(spark: SparkSession) -> DataFrame:
@@ -489,7 +480,7 @@ def e_ab_foldin_bias_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     from recommender_systems_spark.queries.genre import _parts_with_genres
 
     parts_g = _parts_with_genres(spark, sf_dir)
-    users = _ab_sim_users(spark).localCheckpoint()
+    users = _ab_sim_users(spark).transform(materialize, sf_dir)
     hist = _ab_hist(users, parts_g)
     raters = (
         _t(spark, sf_dir, "lineitem")
@@ -637,16 +628,10 @@ def e_ab_simulation(
     # --- simulate users (ab_test.py:87-97) on md5 uniforms — shared
     # with the oracle-backed e_ab_arm_sizes_hash / e_ab_foldin_bias_hash
     # twins, which value-check this run's deterministic sub-frames ------
-    # Scale-guarded (VERDICT r12 #7): lazy below the big-corpus
-    # threshold (the arm_rows collect right below materialises it
-    # serially — one action instead of two); EAGER past it, where a
-    # still-unmaterialised lazy checkpoint read by the serving job's
-    # multiple subtrees is the documented "Block rdd_N does not exist"
-    # failure mode under memory pressure.
-    users = _ab_sim_users(spark).localCheckpoint(eager=_ab_big(sf_dir))
+    users = _ab_sim_users(spark).transform(materialize, sf_dir)
     # P8 two-arm guard (ab_test.py:240-246) before any serving work —
     # folded into the e_ab_arm_sizes_hash frame shape (grp-keyed
-    # count), whose single collect ALSO materialises the lazy users
+    # count), whose single collect ALSO materialises the users
     # checkpoint: one action where checkpoint + distinct previously
     # cost two.
     arm_rows = users.groupBy("grp").agg(F.count(F.lit(1)).alias("n")).collect()
@@ -733,16 +718,8 @@ def e_ab_simulation(
             F.when(F.col("grp") == "A", F.col("va")).otherwise(F.col("vb")).alias("v"),
             F.when(F.col("grp") == "A", F.col("ba")).otherwise(F.col("bb")).alias("bn"),
         )
-        # Two consumers (bias agg + ridge solve) sit in the ONE final
-        # action. Lazy at bench SFs: the first stage materialises the
-        # blocks once and the eager form paid a separate blocking
-        # driver action. Past the big-corpus threshold the checkpoint
-        # goes EAGER — two branches racing the first computation of a
-        # lazy checkpoint under memory pressure is the documented
-        # "Block rdd_N does not exist" failure (see dedup_clusters'
-        # near-table note), and one extra driver action is noise at
-        # that scale.
-        .localCheckpoint(eager=_ab_big(sf_dir))
+        # Two consumers (bias agg + ridge solve) sit in the ONE final action.
+        .transform(materialize, sf_dir)
     )
     ub = hm.groupBy("user_id").agg(
         (
@@ -1039,7 +1016,7 @@ def e_interleave_teamdraft(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # Both rankers read this catalog-sized frame — materialise it
         # so the fact table is scanned once, not once per ranker.
-        .localCheckpoint()
+        .transform(materialize, sf_dir)
     )
 
     def toplist(key: str) -> DataFrame:
@@ -1173,7 +1150,7 @@ def e_conformal_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         u01_col(
             F.col("l_orderkey") * 10 + F.col("l_linenumber"), "conf"
         ).alias("u"),
-    ).localCheckpoint()  # consumed by train/cal/test splits
+    ).transform(materialize, sf_dir)  # consumed by train/cal/test splits
     tr = (
         rows.filter(F.col("u") < 0.5)
         .groupBy("item")
@@ -1293,7 +1270,7 @@ def e_cluster_design_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
         orders.join(cust, orders["o_custkey"] == cust["uid"])
         .groupBy("cluster", "uid")
         .agg(F.count(F.lit(1)).alias("yv"))
-    ).localCheckpoint()  # grand + cluster aggregates share it
+    ).transform(materialize, sf_dir)  # grand + cluster aggregates share it
     g = y.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("yv").alias("s"),
@@ -1404,7 +1381,7 @@ def e_switchback_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
         "value",
         arm_b.alias("arm_a"),
         (arm_b != arm_prev).alias("washout"),
-    ).localCheckpoint()  # arm aggregate + washout count share it
+    ).transform(materialize, sf_dir)  # arm aggregate + washout count share it
     kept = lab.filter(~F.col("washout"))
     arms = kept.groupBy("arm_a").agg(
         F.countDistinct("b").cast("long").alias("n_buckets"),
@@ -1605,14 +1582,7 @@ def e_aa_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     (2·{_AA_REPS} groups); everything after is a {_AA_REPS}-row
     frame. At 100 TB this is the e_bootstrap_ci economics — one scan,
     sketch-sized state."""
-    # Scale-guarded (VERDICT r12 #7): the final action reads `p` from
-    # TWO subtrees (KS ranks + the z/sig aggregate) — at big-corpus
-    # scale a lazy checkpoint's concurrent first computation is the
-    # documented failure mode, so it goes eager there; below the
-    # threshold lazy saves the extra action.
-    p = _aa_replicate_pvals(spark, sf_dir).localCheckpoint(
-        eager=_ab_big(sf_dir)
-    )
+    p = _aa_replicate_pvals(spark, sf_dir).transform(materialize, sf_dir)
     # 20 rows; KS + z-max + sig-count read the one materialization
     wr = Window.orderBy("p6", "rep")
     r = p.select("p6", F.row_number().over(wr).alias("i"))

@@ -20,7 +20,7 @@ from recommender_systems_spark.operators.relational import (
     global_running_total,
     global_running_totals,
 )
-from recommender_systems_spark.io import ckpt_eager, table_rows
+from recommender_systems_spark.io import materialize, table_rows
 from recommender_systems_spark.registry import _t, register
 # SQL fragments come from the dependency-free _shared module, NEVER from
 # sibling query modules: a module-level import of queries.stats/.textops
@@ -1706,7 +1706,7 @@ def a_seasonality_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("dow", "hour")
         .agg(F.count(F.lit(1)).alias("n"), F.sum("cents").alias("s"))
-        .localCheckpoint()  # 168 rows, two consumers: cells + global total
+        .transform(materialize, sf_dir)  # 168 rows, two consumers: cells + global total
     )
     tot = cell.agg(F.sum("n").alias("gn"), F.sum("s").alias("gs"))
     return cell.crossJoin(F.broadcast(tot)).select(
@@ -1798,7 +1798,7 @@ def e_stratified_ate(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).cast("int").alias("t"),
         F.sum(F.round(F.col("value") * 100).cast("long")).alias("cents"),
         F.count(F.lit(1)).alias("n_ev"),
-    ).localCheckpoint()  # user-sized; consumers: stratum cut, count, join
+    ).transform(materialize, sf_dir)  # user-sized; consumers: stratum cut, count, join
     dist = u.groupBy("n_ev").agg(F.count(F.lit(1)).alias("c"))
     cum = global_running_total(
         dist, "n_ev", "c", out_col="cumt",
@@ -1984,7 +1984,7 @@ def a_assoc_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.groupBy(F.col("l_orderkey").alias("o"))
         .agg(F.array_sort(F.collect_set("l_partkey")).alias("xs"))
         .select("xs")
-        .localCheckpoint()  # consumed by nn, cnt and the pair explode
+        .transform(materialize, sf_dir)  # consumed by nn, cnt and the pair explode
     )
     nn = baskets.agg(F.count(F.lit(1)).alias("n"))
     cnt = (
@@ -2126,7 +2126,7 @@ def e_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("cents")
         )
-        .localCheckpoint()  # calendar-bounded; consumers: s, n, ties
+        .transform(materialize, sf_dir)  # calendar-bounded; consumers: s, n, ties
     )
     s = (
         cell.alias("a")
@@ -2418,7 +2418,7 @@ def a_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("last_touch", F.last("touch", ignorenulls=True).over(w))
         .withColumn("first_touch", F.first("touch", ignorenulls=True).over(w))
         .filter(F.col("event_type") == _ATTR_CONV)
-        .localCheckpoint()  # conversion-sized; consumers: both models
+        .transform(materialize, sf_dir)  # conversion-sized; consumers: both models
     )
     lt = conv.groupBy(
         F.coalesce(F.col("last_touch"), F.lit("none")).alias("channel")
@@ -2500,7 +2500,7 @@ def e_psm_att(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).cast("int").alias("t"),
         F.sum(F.round(F.col("value") * 100).cast("long")).alias("cents"),
         F.count(F.lit(1)).alias("n_ev"),
-    ).localCheckpoint()  # user-sized; consumers: treated, control, count
+    ).transform(materialize, sf_dir)  # user-sized; consumers: treated, control, count
     treated = u.filter(F.col("t") == 1).select(
         F.col("user_id").alias("tid"),
         F.col("cents").alias("t_cents"),
@@ -2710,9 +2710,8 @@ def a_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
         # calendar-bounded (~nations × months rows); referenced by BOTH
         # pair-join sides — unmaterialised, the orders⋈customer corpus
         # join ran twice (round-13 census; e_mann_kendall already
-        # checkpoints the identical frame). Lazy below the scale
-        # threshold (io.ckpt_eager): no separate blocking action.
-        .localCheckpoint(eager=ckpt_eager(sf_dir, "orders", 1_500_000))
+        # checkpoints the identical frame).
+        .transform(materialize, sf_dir)
     )
     slopes = (
         cell.alias("a")
@@ -3266,7 +3265,7 @@ def a_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             "freq",
             "mon_cents",
         )
-        .localCheckpoint()  # consumed by three rank passes + final join
+        .transform(materialize, sf_dir)  # consumed by three rank passes + final join
     )
 
     def rank_pass(col: str) -> DataFrame:
@@ -3407,7 +3406,7 @@ def a_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Class frame is QI-space-bounded (~nations x segments x bands);
         # materialize once so the total and the bucket rollup don't
         # each re-run the row-count-sized aggregation.
-        .localCheckpoint()
+        .transform(materialize, sf_dir)
     )
     tot = F.broadcast(cls.agg(F.sum("k").alias("n")))
     b = cls.select(
@@ -3623,7 +3622,7 @@ def e_fdr_storey(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = w.select(
         "segment",
         F.round(1.0 - F.abs(z6) / F.sqrt(2.0 + z6 * z6), 6).alias("p6"),
-    ).localCheckpoint()  # segment-sized; read by pi0 + ranking
+    ).transform(materialize, sf_dir)  # segment-sized; read by pi0 + ranking
     pi0 = p.agg(
         F.least(
             F.lit(1.0),
@@ -3722,7 +3721,7 @@ def a_join_skew_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
     kc = li.groupBy(F.col("l_suppkey").alias("key")).agg(
         F.count(F.lit(1)).alias("c")
-    ).localCheckpoint()  # key-sized; stats + p99 + partition sim read it
+    ).transform(materialize, sf_dir)  # key-sized; stats + p99 + partition sim read it
     st = kc.agg(
         F.count(F.lit(1)).alias("n_keys"),
         F.sum("c").alias("n_rows"),

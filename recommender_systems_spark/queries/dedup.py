@@ -40,7 +40,13 @@ from recommender_systems_spark.dedup.minhash import (
     sql_simhash,
     sql_tokens,
 )
-from recommender_systems_spark.io import cache_path, cache_ready, table_rows
+from recommender_systems_spark.io import (
+    cache_path,
+    cache_ready,
+    materialize,
+    materialize_now,
+    table_rows,
+)
 from recommender_systems_spark.registry import _t, register
 
 SIG_LEN = 16  # LSH_BANDS * LSH_ROWS
@@ -132,7 +138,7 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = (
         docs.select("doc_id", minhash_struct_pandas(F.col("text")).alias("s"))
         .select("doc_id", F.col("s.da").alias("da"), F.col("s.sig").alias("sig"))
-        .localCheckpoint()
+        .transform(materialize, sf_dir)
     )
     bands = sh.select(
         "doc_id",
@@ -247,7 +253,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Arrow simhash kernel runs once per doc, not once per join side.
     sh = docs.select(
         "doc_id", simhash_pandas(F.col("text")).alias("sim")
-    ).localCheckpoint()
+    ).transform(materialize, sf_dir)
     bands = sh.select(
         "doc_id",
         "sim",
@@ -385,8 +391,11 @@ def _cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     near = spark.read.parquet(near_dir)
     edges = near.union(near.select("doc_b", "doc_a")).toDF("src", "dst")
+    # The in-memory path's checkpoints take no ``sf_dir``: they stay lazy
+    # at every scale, since past CC_RELIABLE_ROWS the big path replaces
+    # them with parquet rounds.
     if not big:
-        edges = edges.localCheckpoint(eager=False)
+        edges = materialize(edges)
     labels = (
         edges.select(F.col("src").alias("id"))
         .distinct()
@@ -395,7 +404,7 @@ def _cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not big:
         # Big path: labels re-derive from the on-disk edge list (one
         # distinct, round 1 only) — no block-manager residency.
-        labels = labels.localCheckpoint(eager=False)
+        labels = materialize(labels)
     rnd_dirs = (
         [
             cache_path(f"cc_round{i}_{os.getpid()}", sf_dir, "documents")
@@ -475,7 +484,7 @@ def _cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
                 # Lazy checkpoint + count = ONE action per round: the count
                 # triggers the checkpoint's materialisation, and the next
                 # round's lineage starts from the stored blocks.
-                stepped = stepped.localCheckpoint(eager=False)
+                stepped = materialize(stepped)
                 changed = stepped.filter(F.col("__moved")).count()
             labels = stepped.drop("__moved")
             if changed == 0:
@@ -484,7 +493,7 @@ def _cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
             # Detach the converged labels from the per-run round dirs
             # before cleanup below — the returned frame must not read
             # removed files.
-            labels = labels.localCheckpoint(eager=True)
+            labels = materialize_now(labels)
     finally:
         if rnd_dirs is not None:
             import shutil
@@ -751,7 +760,7 @@ def dedup_lsh_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = (
         docs.select("doc_id", minhash_struct_pandas(F.col("text")).alias("s"))
         .select("doc_id", F.col("s.da").alias("da"), F.col("s.sig").alias("sig"))
-        .localCheckpoint()
+        .transform(materialize, sf_dir)
     )
     a = sh.select(
         F.col("doc_id").alias("doc_a"),
@@ -852,7 +861,7 @@ def dedup_canonical_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("id").alias("doc_id"), F.col("label").alias("cluster_id")
     )
     meta = _t(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    q = lab.join(meta, "doc_id").localCheckpoint()  # argmax + output share
+    q = lab.join(meta, "doc_id").transform(materialize, sf_dir)  # argmax + output share
     surv = q.groupBy("cluster_id").agg(
         F.max_by(
             "doc_id", F.col("n_chars") * _KEEP_ENC - F.col("doc_id")

@@ -21,7 +21,7 @@ from recommender_systems_spark.queries._shared import (
     CF_CAP as _CF_CAP,
     CF_MIN_COOC as _CF_MIN_COOC,
 )
-from recommender_systems_spark.io import ckpt_eager
+from recommender_systems_spark.io import materialize
 from recommender_systems_spark.registry import _t, register
 
 PR_ITERS = 3
@@ -180,8 +180,10 @@ def g_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
     # Degree rides the edge frame once — every iteration reuses it.
-    edges_d = edges.join(deg, "src").localCheckpoint()
-    nodes = edges_d.select(F.col("src").alias("id")).distinct().localCheckpoint()
+    edges_d = edges.join(deg, "src").transform(materialize, sf_dir)
+    nodes = materialize(
+        edges_d.select(F.col("src").alias("id")).distinct(), sf_dir
+    )
     n = nodes.count()
     base = (1.0 - PR_DAMPING) / n
     r = nodes.withColumn("r", F.lit(1.0 / n))
@@ -194,7 +196,8 @@ def g_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "r"
                 )
             )
-            .localCheckpoint()  # flat lineage: each iteration is one join+agg
+            # flat lineage: each iteration is one join+agg
+            .transform(materialize, sf_dir)
         )
     return r.select(
         F.col("id").alias("item"), F.round(F.col("r") * n, 5).alias("pr_scaled")
@@ -263,12 +266,10 @@ def g_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact integers except the rounded coefficient, so the oracle
     matches bit-for-bit."""
     cooc = _cooc_pairs(spark, sf_dir)
+    # Edge build reused 5× (degree, orient, closure, count).
     und = cooc.select(
         F.col("ia").alias("a"), F.col("ib").alias("b")
-    ).localCheckpoint()  # edge build reused 5× (degree, orient, closure,
-    # count). EAGER measured faster than the lazy-guard form here
-    # (0.69× vs 0.82× interleaved): the concurrent join-side stages of
-    # the final job race a lazy first-computation and duplicate it.
+    ).transform(materialize, sf_dir)
     # Degree table from the CHECKPOINTED edges, itself checkpointed:
     # referenced 4× below (da, db, wedge-count, node-count) — built from
     # the pre-checkpoint frame it re-ran the artifact scan + union +
@@ -278,7 +279,7 @@ def g_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionAll(und.select(F.col("b").alias("id")))
         .groupBy("id")
         .agg(F.count(F.lit(1)).alias("d"))
-        .localCheckpoint()  # node-dimension-sized; eager (see und above)
+        .transform(materialize, sf_dir)  # node-dimension-sized
     )
     da = degu.withColumnRenamed("id", "a").withColumnRenamed("d", "da")
     db = degu.withColumnRenamed("id", "b").withColumnRenamed("d", "db")
@@ -388,7 +389,7 @@ def _lp_state(spark: SparkSession, sf_dir: str):
     edges = (
         cooc.select(F.col("ia").alias("src"), F.col("ib").alias("dst"))
         .unionAll(cooc.select(F.col("ib").alias("src"), F.col("ia").alias("dst")))
-        .localCheckpoint()  # reused every iteration
+        .transform(materialize, sf_dir)  # reused every iteration
     )
     labels = edges.select(F.col("src").alias("id")).distinct().withColumn(
         "label", F.col("id")
@@ -404,7 +405,7 @@ def _lp_state(spark: SparkSession, sf_dir: str):
             counts.withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") == 1)
             .select("id", "label")
-            .localCheckpoint()  # flat lineage per round
+            .transform(materialize, sf_dir)  # flat lineage per round
         )
     return edges, labels
 
@@ -470,7 +471,7 @@ def g_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     accumulation order."""
     from pyspark.sql import Window
 
-    pairs = _cooc_pairs(spark, sf_dir).localCheckpoint()
+    pairs = _cooc_pairs(spark, sf_dir).transform(materialize, sf_dir)
     edges = pairs.select(
         F.col("ia").alias("src"), F.col("ib").alias("dst")
     ).unionAll(pairs.select(F.col("ib").alias("src"), F.col("ia").alias("dst")))
@@ -583,24 +584,17 @@ def g_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     of an exact-operand division, and (jac desc, u, w) is total."""
     from pyspark.sql import Window
 
-    pairs = _cooc_pairs(spark, sf_dir).localCheckpoint()
+    pairs = _cooc_pairs(spark, sf_dir).transform(materialize, sf_dir)
     edges = pairs.select(
         F.col("ia").alias("src"), F.col("ib").alias("dst")
     ).unionAll(pairs.select(F.col("ib").alias("src"), F.col("ia").alias("dst")))
     # Node-dimension-sized; referenced by BOTH endpoint broadcasts —
     # unmaterialised it re-ran the symmetrised-edge aggregate per
-    # reference (round-13 census). Lazy below the ckpt_eager threshold
-    # is SAFE here despite the dual reference: both consumers are
-    # broadcast subqueries, and broadcast exchanges materialise
-    # sequentially on the driver's broadcast thread before the probe
-    # stage launches — no concurrent first-computation race (unlike
-    # self-join/union SIDES, which race as parallel stages of one job;
-    # the g_triangles adjudication). Measured 1.035× local (noise) in
-    # the round-13 interleaved gate.
+    # reference (round-13 census).
     deg = (
         edges.groupBy("src")
         .agg(F.count(F.lit(1)).alias("d"))
-        .localCheckpoint(eager=ckpt_eager(sf_dir))
+        .transform(materialize, sf_dir)
     )
     common = (
         edges.alias("e1")
@@ -715,7 +709,7 @@ def g_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = (
         cooc.select(F.col("ia").alias("src"), F.col("ib").alias("dst"))
         .unionAll(cooc.select(F.col("ib").alias("src"), F.col("ia").alias("dst")))
-        .localCheckpoint()
+        .transform(materialize, sf_dir)
     )
     e = edges
     for _ in range(KCORE_ROUNDS):
@@ -729,7 +723,7 @@ def g_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             e.join(keep, "src")
             .join(keep.withColumnRenamed("src", "dst"), "dst")
             .select("src", "dst")
-            .localCheckpoint()  # flat lineage per peel round
+            .transform(materialize, sf_dir)  # flat lineage per peel round
         )
     return e.groupBy(F.col("src").alias("item")).agg(
         F.count(F.lit(1)).cast("long").alias("degree")
@@ -802,7 +796,7 @@ def g_khop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = (
         cooc.select(F.col("ia").alias("src"), F.col("ib").alias("dst"))
         .unionAll(cooc.select(F.col("ib").alias("src"), F.col("ia").alias("dst")))
-        .localCheckpoint()
+        .transform(materialize, sf_dir)
     )
     srcs = (
         edges.select(F.col("src").alias("s"))
@@ -814,7 +808,7 @@ def g_khop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
         srcs.join(edges, srcs["s"] == edges["src"])
         .select("s", F.col("dst").alias("u"))
         .distinct()
-        .localCheckpoint()
+        .transform(materialize, sf_dir)
     )
     hops = [r]
     for _ in range(2):
@@ -824,7 +818,7 @@ def g_khop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("s", F.col("dst").alias("u"))
             .unionAll(hops[-1])
             .distinct()
-            .localCheckpoint()  # flat lineage per hop
+            .transform(materialize, sf_dir)  # flat lineage per hop
         )
         hops.append(nxt)
     counts = [
@@ -911,13 +905,13 @@ def g_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionAll(cooc.select(F.col("ib").alias("src"), F.col("ia").alias("dst")))
     )
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-    edges_d = edges.join(deg, "src").localCheckpoint()
+    edges_d = edges.join(deg, "src").transform(materialize, sf_dir)
     seeds = (
         edges_d.select(F.col("src").alias("id"))
         .distinct()
         .orderBy("id")
         .limit(PPR_SEEDS)
-        .localCheckpoint()
+        .transform(materialize, sf_dir)
     )
     restart = (1.0 - PPR_DAMPING) / PPR_SEEDS
     r = seeds.withColumn("r", F.lit(1.0 / PPR_SEEDS))
@@ -936,7 +930,7 @@ def g_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                     + F.when(F.col("__s").isNotNull(), F.lit(restart)).otherwise(0.0)
                 ).alias("r"),
             )
-            .localCheckpoint()  # flat lineage: one join+agg per iteration
+            .transform(materialize, sf_dir)  # flat lineage: one join+agg per iteration
         )
     return r.select(
         F.col("id").cast("long").alias("item"), F.round("r", 6).alias("ppr")
@@ -998,17 +992,11 @@ def g_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Node-dimension-sized degree table, referenced by BOTH endpoint
     # joins — unmaterialised it re-ran the artifact scan + union +
-    # exchange per reference (round-13 census). Lazy below the
-    # ckpt_eager threshold is SAFE despite the dual reference: both
-    # consumers are dimension-sized broadcast builds that materialise
-    # sequentially before the probe stage (no concurrent
-    # first-computation race — the g_triangles eager adjudication
-    # applies to racing self-join/union sides, not broadcasts).
-    # Measured 0.979× local in the round-13 interleaved gate.
+    # exchange per reference (round-13 census).
     deg = (
         edges.groupBy("src")
         .agg(F.count(F.lit(1)).alias("d"))
-        .localCheckpoint(eager=ckpt_eager(sf_dir))
+        .transform(materialize, sf_dir)
     )
     p = (
         edges.join(deg.withColumnRenamed("d", "dx"), "src")
@@ -1112,11 +1100,10 @@ def g_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     node-dimension-sized. All outputs exact integers except the
     rounded coefficient."""
     cooc = _cooc_pairs(spark, sf_dir)
+    # Reused by degree, orient and the closure join.
     und = cooc.select(
         F.col("ia").alias("a"), F.col("ib").alias("b")
-    ).localCheckpoint()  # reused by degree, orient and the closure
-    # join; eager — concurrent join-side stages race a lazy checkpoint
-    # and duplicate its computation (round-13 measurement).
+    ).transform(materialize, sf_dir)
     # Checkpointed degree table (node-dimension-sized): referenced 3×
     # below (da, db, final join) — unmaterialised it re-ran the
     # artifact scan + union + exchange per reference (round-13 census).
@@ -1125,7 +1112,7 @@ def g_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionAll(und.select(F.col("b").alias("id")))
         .groupBy("id")
         .agg(F.count(F.lit(1)).alias("d"))
-        .localCheckpoint()  # eager (see und above)
+        .transform(materialize, sf_dir)
     )
     da = degu.withColumnRenamed("id", "a").withColumnRenamed("d", "da")
     db = degu.withColumnRenamed("id", "b").withColumnRenamed("d", "db")
@@ -1232,7 +1219,7 @@ def g_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = (
         cooc.select(F.col("ia").alias("src"), F.col("ib").alias("dst"))
         .unionAll(cooc.select(F.col("ib").alias("src"), F.col("ia").alias("dst")))
-        .localCheckpoint()
+        .transform(materialize, sf_dir)
     )
     srcs = (
         edges.select(F.col("src").alias("s"))
@@ -1244,7 +1231,7 @@ def g_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
         srcs.join(edges, srcs["s"] == edges["src"])
         .select("s", F.col("dst").alias("u"))
         .distinct()
-        .localCheckpoint()
+        .transform(materialize, sf_dir)
     )
     hops = [r]
     for _ in range(2):
@@ -1254,7 +1241,7 @@ def g_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("s", F.col("dst").alias("u"))
             .unionAll(hops[-1])
             .distinct()
-            .localCheckpoint()  # flat lineage per hop
+            .transform(materialize, sf_dir)  # flat lineage per hop
         )
         hops.append(nxt)
     counts = [
@@ -1331,7 +1318,7 @@ def g_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation on the capped bipartite list — per-user caps bound the
     fan-out exactly like the co-occurrence build; final ranking is
     TakeOrderedAndProject."""
-    capped = _capped_history(spark, sf_dir).localCheckpoint()
+    capped = _capped_history(spark, sf_dir).transform(materialize, sf_dir)
     h1 = capped.groupBy("uid").agg(F.count(F.lit(1)).alias("h"))
     a1 = (
         capped.join(h1, "uid")
@@ -1481,7 +1468,7 @@ def _random_walks(
             "rk",
             F.row_number().over(Window.partitionBy("src").orderBy("dst")),
         )
-        .localCheckpoint()  # reused every step (+ degree build)
+        .transform(materialize, sf_dir)  # reused every step (+ degree build)
     )
     deg = adj.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
     srcs = (
@@ -1700,7 +1687,7 @@ def g_neighbor_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("ia").alias("src"), F.col("ib").alias("dst")
     ).unionAll(
         cooc.select(F.col("ib").alias("src"), F.col("ia").alias("dst"))
-    ).localCheckpoint()  # ranked twice (one window per layer salt)
+    ).transform(materialize, sf_dir)  # ranked twice (one window per layer salt)
 
     def ranked(salt: str) -> DataFrame:
         w = Window.partitionBy("src").orderBy(

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from recommender_systems_spark.functions.vector import dot_product
-from recommender_systems_spark.io import ckpt_eager, table_rows
+from recommender_systems_spark.io import materialize, table_rows
 from recommender_systems_spark.registry import _t, register
 
 # Reference hyperparameters (prac_1.py:35-39).
@@ -229,14 +229,14 @@ def _bias_sweeps(spark: SparkSession, sf_dir: str, ckpt_bu: bool = False):
     bv's lineage AND in the delta join), where unmaterialised it
     re-runs the uid exchange over the corpus blocks per reference.
     Off by default: every other caller uses bu once and the extra
-    blocking action is a measured loss (the §6q pattern)."""
-    j = _scored(spark, sf_dir).localCheckpoint()
+    checkpoint is a measured loss (the §6q pattern)."""
+    j = _scored(spark, sf_dir).transform(materialize, sf_dir)
     bu = j.groupBy("uid").agg(
         (F.lit(LMD) * F.sum(F.col("r") - F.col("uv"))
          / (F.lit(ALPHA) + F.lit(LMD) * F.count(F.lit(1)))).alias("bu")
     )
     if ckpt_bu:
-        bu = bu.localCheckpoint()
+        bu = materialize(bu, sf_dir)
     bv = (
         j.join(bu, "uid")
         .groupBy("iid")
@@ -640,7 +640,7 @@ def _cf_frames(
         .filter(F.col("rn") <= _CF_CAP)
         .groupBy("uid")
         .agg(F.array_sort(F.collect_list("iid")).alias("xs"))
-        .localCheckpoint()  # consumed by the pair explode, deg, capped
+        .transform(materialize, sf_dir)  # consumed by the pair explode, deg, capped
     )
     capped = seqs.select("uid", F.explode("xs").alias("iid"))
     pair_structs = F.flatten(
@@ -872,7 +872,7 @@ def e_rec_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         hist.withColumn("rn", F.row_number().over(wtop))
         .filter(F.col("rn") <= _COV_K)
         .select("uid", "iid")
-        .localCheckpoint()  # consumed twice: rec counts + distinct users
+        .transform(materialize, sf_dir)  # consumed twice: rec counts + distinct users
     )
     reccnt = top3.groupBy("iid").agg(F.count(F.lit(1)).alias("x"))
     ranked = reccnt.withColumn(
@@ -946,17 +946,11 @@ def e_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unmaterialised, the (lo, hi) broadcast subquery inlined the whole
     # _scored lineage a second time (2× corpus scan+score per run;
     # plan: 6 parquet scans → 3, plans/r13/e_calibration_*). Round-13,
-    # guide §2.4/§5. Lazy below the ckpt_eager threshold (round-14):
-    # the two consumers are strictly SEQUENTIAL — the (lo, hi)
-    # broadcast build materialises the blocks before the main probe
-    # stage launches — so the unconditional eager form only added a
-    # blocking corpus-sized block write as its own driver action
-    # (driver measured 7.3 s @32 cores vs 2.1 s @8 — the fixed action
-    # cost grew with core count; VERDICT r13 "What's wrong" #2).
+    # guide §2.4/§5.
     sc = (
         _scored(spark, sf_dir)
         .select("uv", "r")
-        .localCheckpoint(eager=ckpt_eager(sf_dir))
+        .transform(materialize, sf_dir)
     )
     b = sc.agg(F.min("uv").alias("lo"), F.max("uv").alias("hi"))
     lo, hi = F.col("lo"), F.col("hi")
@@ -1163,7 +1157,7 @@ def m_ips_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: propensity and npop broadcast; the top-k window and the
     final reduction ride the scoring join's existing distribution —
     nothing fact-sized shuffles twice."""
-    j = _scored(spark, sf_dir).localCheckpoint()  # scored twice below
+    j = _scored(spark, sf_dir).transform(materialize, sf_dir)  # scored twice below
     pop = j.groupBy("iid").agg(F.count(F.lit(1)).alias("c"))
     npop = pop.agg(F.sum("c").alias("n"))
     wtop = Window.partitionBy("uid").orderBy(F.col("uv").desc(), "iid")
@@ -1363,7 +1357,7 @@ def e_bandit_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("arm").alias("logged"), "value", "greedy_arm", "random_arm"
         )
-        .localCheckpoint()  # scanned twice (one pass per policy row)
+        .transform(materialize, sf_dir)  # scanned twice (one pass per policy row)
     )
 
     def policy_row(name: str, col: str) -> DataFrame:
@@ -1438,7 +1432,7 @@ def e_rec_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
         _ratings(spark, sf_dir)
         .groupBy("uid", "iid")
         .agg(F.sum("r").alias("w"))
-        .localCheckpoint()  # consumed twice: top-k + popularity
+        .transform(materialize, sf_dir)  # consumed twice: top-k + popularity
     )
     wtop = Window.partitionBy("uid").orderBy(F.col("w").desc(), F.col("iid"))
     topk = (
@@ -1558,7 +1552,8 @@ def m_slope_one(spark: SparkSession, sf_dir: str) -> DataFrame:
         hist.withColumn("rn", F.row_number().over(wcap))
         .filter(F.col("rn") <= _CF_CAP)
         .select("uid", "iid", "w")
-        .localCheckpoint()  # consumers: devs self-join ×2, sample, anti-join
+        # consumers: devs self-join ×2, sample, anti-join
+        .transform(materialize, sf_dir)
     )
     devs = (
         capped.alias("a")
@@ -1666,13 +1661,10 @@ def e_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract), so threshold comparisons need no pre-rounding."""
     # Same shape as e_calibration: materialise the scored frame once so
     # the (lo, hi) broadcast subquery doesn't inline the scoring
-    # lineage a second time (round-13, guide §2.4/§5). Lazy below the
-    # ckpt_eager threshold: the (lo, hi) broadcast build materialises
-    # the blocks before the main probe stage — sequential consumers,
-    # no separate blocking action needed (round-14).
+    # lineage a second time (round-13, guide §2.4/§5).
     sc = _scored(spark, sf_dir).select(
         "uv", (F.col("r") >= _AUC_POS).cast("int").alias("pos")
-    ).localCheckpoint(eager=ckpt_eager(sf_dir))
+    ).transform(materialize, sf_dir)
     b = sc.agg(F.min("uv").alias("lo"), F.max("uv").alias("hi"))
     j = sc.crossJoin(F.broadcast(b))
     aggs = []
@@ -2171,7 +2163,9 @@ def m_loo_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("dt").desc(), F.col("ok").desc(), F.col("ln").desc(),
         F.col("item").desc(),
     )
-    marked = inter.withColumn("rn", F.row_number().over(w)).localCheckpoint()
+    marked = materialize(
+        inter.withColumn("rn", F.row_number().over(w)), sf_dir
+    )
     test = marked.filter(F.col("rn") == 1).select("c", "item")
     train = marked.filter(F.col("rn") > 1).select("c", "item")
     pop = train.groupBy("item").agg(F.count(F.lit(1)).alias("n"))
@@ -2488,7 +2482,7 @@ def m_tree_depth2(spark: SparkSession, sf_dir: str) -> DataFrame:
         # The level boundary: materialize the 1-row winner once so the
         # level-1 scan runs exactly once (it otherwise plans twice —
         # under the output row AND under the broadcast side-assign).
-        .localCheckpoint()
+        .transform(materialize, sf_dir)
     )
     sided = base.crossJoin(F.broadcast(root)).select(
         F.when(
@@ -2966,7 +2960,7 @@ def e_dr_ope(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape: the reward model and DM value add two item/user-keyed
     aggregates to the IPS plan — everything stays id-keyed equi-joins
     on interaction-sized frames; no new corpus passes."""
-    j = _scored(spark, sf_dir).localCheckpoint()  # consumed 3× below
+    j = _scored(spark, sf_dir).transform(materialize, sf_dir)  # consumed 3× below
     rew_case = F.when(F.col("r") >= _IPS_REWARD, 1.0).otherwise(0.0)
     # Popularity count and reward model share the SAME iid grouping —
     # one hash aggregate (and later one equi-join) where two ran, with
@@ -3161,7 +3155,7 @@ def m_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("a", "b")
         .agg(F.sum("w").alias("n"))
-        .localCheckpoint()  # reused by both MM sweeps + degree table
+        .transform(materialize, sf_dir)  # reused by both MM sweeps + degree table
     )
     wins = wl.groupBy(F.col("winner").alias("item")).agg(
         F.sum("w").alias("wins")
@@ -3180,10 +3174,10 @@ def m_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
         # its strength table THREE times (γ_a side, γ_b side, the
         # update join). Unmaterialised, that re-executed the whole
         # lineitem pair-mining subtree per reference — the before plan
-        # shows 10 parquet scans and zero ReusedExchange. One eager
+        # shows 10 parquet scans and zero ReusedExchange. One
         # materialisation makes pair mining a single corpus pass
         # (round-13; exact integer state, results unchanged).
-        .localCheckpoint()
+        .transform(materialize, sf_dir)
     )
 
     def mm_sweep(g: DataFrame) -> DataFrame:
@@ -3207,7 +3201,7 @@ def m_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Same 3-reference pattern between the sweeps: materialise sweep
     # 1's items-sized output so sweep 2 reads a checkpointed RDD
     # instead of inlining (and re-executing) the sweep-1 ladder 3×.
-    g2 = mm_sweep(mm_sweep(items).localCheckpoint())
+    g2 = mm_sweep(mm_sweep(items).transform(materialize, sf_dir))
     deg = (
         und.select(F.col("a").alias("item"), "n")
         .unionAll(und.select(F.col("b").alias("item"), "n"))
@@ -3294,13 +3288,10 @@ def m_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     with per-segment curves runs the same plan keyed by segment."""
     # Materialised once: the (lo, hi) broadcast subquery otherwise
     # inlines the scoring lineage a second time (round-13, §2.4/§5).
-    # Lazy below the ckpt_eager threshold: the broadcast build
-    # materialises the blocks before the main probe stage — sequential
-    # consumers (round-14).
     sc = _scored(spark, sf_dir).select(
         "uv",
         F.when(F.col("r") >= _IPS_REWARD, 1).otherwise(0).alias("y"),
-    ).localCheckpoint(eager=ckpt_eager(sf_dir))
+    ).transform(materialize, sf_dir)
     b = sc.agg(F.min("uv").alias("lo"), F.max("uv").alias("hi"))
     bucket = F.least(
         F.floor(
@@ -3313,7 +3304,7 @@ def m_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         sc.crossJoin(F.broadcast(b))
         .groupBy(bucket.alias("bucket"))
         .agg(F.count(F.lit(1)).alias("n"), F.sum("y").alias("s"))
-        .localCheckpoint()  # B rows; reused by the triangle + output
+        .transform(materialize, sf_dir)  # B rows; reused by the triangle + output
     )
     lo = bins.select(F.col("bucket").alias("jb"))
     hi = bins.select(F.col("bucket").alias("kb"))
@@ -3409,7 +3400,7 @@ def e_variance_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     it per segment with the same plan keyed by segment."""
     r = _ratings(spark, sf_dir).select(
         F.col("uid"), F.col("iid"), F.col("r").alias("y")
-    ).localCheckpoint()  # grand + user + residual passes share the scan
+    ).transform(materialize, sf_dir)  # grand + user + residual passes share the scan
     g = r.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("y").alias("s"),

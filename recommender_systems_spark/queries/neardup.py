@@ -32,7 +32,7 @@ from recommender_systems_spark.dedup.minhash import (
     sql_tokens,
 )
 from recommender_systems_spark.functions.vector import dot_product
-from recommender_systems_spark.io import spread_scan, table_rows
+from recommender_systems_spark.io import materialize, spread_scan, table_rows
 from recommender_systems_spark.registry import _t, register
 from recommender_systems_spark.similarity.ann import (
     adaptive_bits,
@@ -390,7 +390,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id", "v", l2_norm("v").alias("nrm"),
             bucket_keys("v", bits).alias("keys"),
         )
-        .localCheckpoint()
+        .transform(materialize, sf_dir)
     )
     eb = e.select("vec_id", F.explode("keys").alias("key"))
     pairs = (
@@ -515,7 +515,8 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
         .repartition(spark.sparkContext.defaultParallelism)
         .withColumn("nrm", l2_norm("v"))
-        .localCheckpoint()  # consumed by centroid scan + assignment + pair join
+        # consumed by centroid scan + assignment + pair join
+        .transform(materialize, sf_dir)
     )
     n_vecs = table_rows(sf_dir, "embeddings")  # 1:1 with e; footer metadata
     # isqrt(n-1)+1 == DuckDB's ceil(sqrt(n)) exactly for n <= 2^52
@@ -630,7 +631,7 @@ def dedup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
             F.explode(shingle_hashes_pandas(F.col("text"), SPAN_N)).alias("fp"),
         )
-        .localCheckpoint()  # consumed by the freq agg and the flag join
+        .transform(materialize, sf_dir)  # consumed by the freq agg and the flag join
     )
     freq = spans.groupBy("fp").agg(F.count_distinct("doc_id").alias("nd"))
     return (
@@ -707,7 +708,7 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id", "v", l2_norm("v").alias("nrm"),
             bucket_keys("v", adaptive_bits(n_vec)).alias("keys"),
         )
-        .localCheckpoint()
+        .transform(materialize, sf_dir)
     )
     eb = e.select("vec_id", F.explode("keys").alias("key"))
     pairs = (
@@ -829,7 +830,7 @@ def t_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("text"), SPAN_N, WINNOW_W
             ).alias("fps"),
         )
-        .localCheckpoint()
+        .transform(materialize, sf_dir)
     )
     e = docs.select("doc_id", F.explode("fps").alias("f"))
     freq = (
@@ -954,20 +955,11 @@ def t_bleu_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus (map-side combined) and the clipped overlap is an equi-join
     on (gram) keyed to candidate docs only — pairs × shared-grams
     work, the two-stage funnel economics."""
-    # Both checkpoints here feed MULTIPLE join branches of one action —
-    # lazy is a measured win at bench SFs (first stage materialises the
-    # blocks once), but past the big-corpus threshold it goes EAGER:
-    # concurrent first-computation of a lazy checkpoint under memory
-    # pressure is the documented "Block rdd_N does not exist" failure
-    # (see dedup_clusters' near-table note).
-    from recommender_systems_spark.queries.dedup import CC_RELIABLE_ROWS
-
-    eager = table_rows(sf_dir, "documents") > CC_RELIABLE_ROWS
     pairs = (
         _lsh_candidate_grams(spark, sf_dir)
         .select("doc_a", "doc_b")
         # Both overlap joins + the output sit in one action.
-        .localCheckpoint(eager=eager)
+        .transform(materialize, sf_dir)
     )
     docs = _t(spark, sf_dir, "documents")
     from recommender_systems_spark.functions.text import tokens
@@ -978,7 +970,7 @@ def t_bleu_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select("doc_id", "text"), sf_dir, "documents"
     ).select(
         "doc_id", tokens(F.col("text")).alias("l")
-    ).localCheckpoint(eager=eager)  # uni + bigram consumers, one action
+    ).transform(materialize, sf_dir)  # uni + bigram consumers, one action
     uni = tk.select("doc_id", F.explode("l").alias("g"))
     n_ = F.size("l")
     big = tk.filter(F.size("l") >= 2).select(
@@ -993,18 +985,16 @@ def t_bleu_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Each per-doc n-gram count table feeds BOTH sides of its clipped
     # join (hypothesis + reference) — unmaterialised, the explode +
-    # (doc_id, g) exchange ran twice per order (round-13). Eager:
-    # the two join sides are concurrent stages and would race (and
-    # duplicate) a lazy first-computation.
+    # (doc_id, g) exchange ran twice per order (round-13).
     uc = (
         uni.groupBy("doc_id", "g")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint()
+        .transform(materialize, sf_dir)
     )
     bc = (
         big.groupBy("doc_id", "g")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint()
+        .transform(materialize, sf_dir)
     )
     lens = tk.select("doc_id", F.size("l").alias("n"))
 

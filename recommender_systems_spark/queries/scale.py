@@ -25,6 +25,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from recommender_systems_spark.io import materialize
 from recommender_systems_spark.registry import _t, register
 
 _CACHE = os.path.join(
@@ -434,7 +435,7 @@ def a_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = _t(spark, sf_dir, "orders")
     k = orders.groupBy(F.col("o_custkey").alias("key")).agg(
         F.count(F.lit(1)).alias("c")
-    ).localCheckpoint()  # consumed twice: stats + top-k
+    ).transform(materialize, sf_dir)  # consumed twice: stats + top-k
     s = k.agg(
         F.count(F.lit(1)).alias("n_keys"),
         F.sum("c").alias("n_rows"),

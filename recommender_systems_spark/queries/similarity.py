@@ -20,7 +20,7 @@ from recommender_systems_spark.functions.vector import (
     dot_product,
 )
 from recommender_systems_spark.queries._shared import u01_col, u01_sql
-from recommender_systems_spark.io import ckpt_eager, table_rows
+from recommender_systems_spark.io import materialize, table_rows
 from recommender_systems_spark.ml.ials import batch_gram
 from recommender_systems_spark.registry import _t, register
 from recommender_systems_spark.similarity.ann import (
@@ -241,7 +241,8 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         # split count (2 at sf1, 13 at sf10) under-parallelises the
         # widest stage — measured 24.6 s → ~3 s at sf1.
         .repartition(spark.sparkContext.defaultParallelism)
-        .localCheckpoint()  # consumers: codebook, assignment, queries, re-rank
+        # consumers: codebook, assignment, queries, re-rank
+        .transform(materialize, sf_dir)
     )
     cents = _codebook(e).select(
         F.col("vec_id").alias("cid"), F.col("v").alias("cv")
@@ -388,7 +389,8 @@ def sim_ivf_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
         # split count (13 at sf10) under-parallelises the widest stage
         # of this query by 2.5× on local[32].
         .repartition(spark.sparkContext.defaultParallelism)
-        .localCheckpoint()  # consumers: codebook, assignment, queries, re-rank
+        # consumers: codebook, assignment, queries, re-rank
+        .transform(materialize, sf_dir)
     )
     cents = (
         e.orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
@@ -471,7 +473,7 @@ def _ensure_ivf_adaptive_index(spark: SparkSession, sf_dir: str) -> tuple[str, s
         _t(spark, sf_dir, "embeddings")
         .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
         .repartition(spark.sparkContext.defaultParallelism)
-        .localCheckpoint()  # consumers: codebook + assignment
+        .transform(materialize, sf_dir)  # consumers: codebook + assignment
     )
     # Identical codebook + assignment to sim_ivf_adaptive (same md5
     # order, same round(cos,5)/lowest-cid tie-break via max_by) — the
@@ -533,7 +535,7 @@ def sim_ivf_adaptive_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("rnk", F.row_number().over(w_probe))
         .filter(F.col("rnk") <= NPROBE)
         .select("qid", F.col("cid").alias("cell"))
-        .localCheckpoint()  # consumed by the driver collect AND the join
+        .transform(materialize, sf_dir)  # consumed by the driver collect AND the join
     )
     probe_cells = sorted(r["cell"] for r in probes.select("cell").distinct().collect())
     idx = spark.read.parquet(path).filter(F.col("cell").isin(probe_cells))
@@ -613,7 +615,7 @@ def sim_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         # File-split count under-parallelises the N×K assignment at
         # sf ≥ 1 (see sim_ivf_topk) — spread it across every core.
         .repartition(spark.sparkContext.defaultParallelism)
-        .localCheckpoint()
+        .transform(materialize, sf_dir)
     )
     cents = _codebook(e).select(
         F.col("vec_id").alias("cid"), F.col("v").alias("cv")
@@ -681,7 +683,7 @@ def sim_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
         .repartition(spark.sparkContext.defaultParallelism)
         .withColumn("keys", bucket_keys("v", adaptive_bits(n_vec)))
-        .localCheckpoint()  # three consumers: q, key explode, join-back
+        .transform(materialize, sf_dir)  # three consumers: q, key explode, join-back
     )
     q = e.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("qid"),
@@ -740,7 +742,7 @@ def _ensure_ivf_index(spark: SparkSession, sf_dir: str) -> str:
     e = (
         _t(spark, sf_dir, "embeddings")
         .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-        .localCheckpoint()  # two consumers: codebook filter + assignment
+        .transform(materialize, sf_dir)  # two consumers: codebook filter + assignment
     )
     cents = _codebook(e).select(
         F.col("vec_id").alias("cid"), F.col("v").alias("cv")
@@ -802,7 +804,7 @@ def sim_ivf_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("rnk", F.row_number().over(w_probe))
         .filter(F.col("rnk") <= NPROBE)
         .select("qid", F.col("cid").alias("cell"))
-        .localCheckpoint()  # consumed by the driver collect AND the join
+        .transform(materialize, sf_dir)  # consumed by the driver collect AND the join
     )
     probe_cells = sorted(r["cell"] for r in probes.select("cell").distinct().collect())
     idx = spark.read.parquet(path).filter(F.col("cell").isin(probe_cells))
@@ -932,7 +934,8 @@ def m_kmeans(
     emb = (
         _t(spark, sf_dir, "embeddings")
         .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-        .localCheckpoint()  # three consumers: two assignment scans + final agg
+        # three consumers: two assignment scans + final agg
+        .transform(materialize, sf_dir)
     )
     cents = [
         (int(r["vec_id"]), [float(x) for x in r["v"]])
@@ -1427,7 +1430,7 @@ def v_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         c0.withColumn("rn", F.row_number().over(wq))
         .filter(F.col("rn") <= _MMR_SHORTLIST)
         .select("qid", "vec_id", "rel", "ev")
-        .localCheckpoint()  # consumed twice: shortlist + pair grid
+        .transform(materialize, sf_dir)  # consumed twice: shortlist + pair grid
     )
     a, b = cand.alias("a"), cand.alias("b")
     pairs = a.join(
@@ -2067,9 +2070,8 @@ def _pq_frames(
         .repartition(spark.sparkContext.defaultParallelism)
         # Consumers: codebook sample, subspace distances, and the
         # callers' query/assignment branches — unmaterialised each
-        # re-scanned embeddings (round-13 census: 4 scans → 1). Lazy
-        # below the scale threshold (io.ckpt_eager).
-        .localCheckpoint(eager=ckpt_eager(sf_dir, "embeddings", 1_000_000))
+        # re-scanned embeddings (round-13 census: 4 scans → 1).
+        .transform(materialize, sf_dir)
     )
     wcb = Window.orderBy(F.md5(F.col("vec_id").cast("string")), F.col("vec_id"))
     codebook = (
@@ -2079,7 +2081,7 @@ def _pq_frames(
         .select("cid", F.col("v").alias("cw"))
         # K rows; consumers: subspace distances + the caller's LUT —
         # each re-ran the TakeOrdered sample pass.
-        .localCheckpoint(eager=ckpt_eager(sf_dir, "embeddings", 1_000_000))
+        .transform(materialize, sf_dir)
     )
     sub = spark.range(PQ_M).select(F.col("id").cast("int").alias("s"))
     sq_dist = F.aggregate(
@@ -2450,7 +2452,7 @@ def v_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id", "label", F.col("embedding").cast("array<double>").alias("v")
         )
         .repartition(spark.sparkContext.defaultParallelism)
-        .localCheckpoint()  # consumers: codebook + assignment
+        .transform(materialize, sf_dir)  # consumers: codebook + assignment
     )
     cents = _codebook(e).select(
         F.col("vec_id").alias("cid"), F.col("v").alias("cv")
@@ -2596,7 +2598,7 @@ def v_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(cosine_similarity(F.col("av"), F.col("v")), 5).alias("cos_x"),
             F.round(cosine_similarity(F.col("aq"), F.col("qv")), 5).alias("cos_q"),
         )
-        .localCheckpoint()  # one scoring pass feeds both rankings
+        .transform(materialize, sf_dir)  # one scoring pass feeds both rankings
     )
     wx = Window.partitionBy("qid").orderBy(F.col("cos_x").desc(), F.col("vec_id"))
     wq = Window.partitionBy("qid").orderBy(F.col("cos_q").desc(), F.col("vec_id"))
@@ -2727,7 +2729,7 @@ def v_ivf_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         # File-split count under-parallelises the N×K assignment at
         # sf ≥ 1 (see sim_ivf_topk) — spread it across every core.
         .repartition(spark.sparkContext.defaultParallelism)
-        .localCheckpoint()
+        .transform(materialize, sf_dir)
     )
     cents = _codebook(e).select(
         F.col("vec_id").alias("cid"), F.col("v").alias("cv")
@@ -2875,7 +2877,7 @@ def v_binary_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     b = emb.select(
         "vec_id", "v", pack(1, 32).alias("blo"), pack(33, 64).alias("bhi")
-    ).localCheckpoint()  # packed once; probe + catalog sides both read it
+    ).transform(materialize, sf_dir)  # packed once; probe + catalog sides both read it
     probes = (
         b.orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
         .limit(_BH_PROBES)
@@ -3211,7 +3213,7 @@ def v_ivf_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
         # File-split count under-parallelises the N×K assignment at
         # sf ≥ 1 (see sim_ivf_topk) — spread it across every core.
         .repartition(spark.sparkContext.defaultParallelism)
-        .localCheckpoint()
+        .transform(materialize, sf_dir)
     )
     cents = _codebook(e).select(
         F.col("vec_id").alias("cid"), F.col("v").alias("cv")
@@ -3230,7 +3232,7 @@ def v_ivf_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(asg, "cid", "left")
         .groupBy("cid")
         .agg(F.count("vec_id").alias("sz"))
-        .localCheckpoint()  # K rows; read by every summary stat below
+        .transform(materialize, sf_dir)  # K rows; read by every summary stat below
     )
     tot = sizes.agg(
         F.count(F.lit(1)).alias("k"), F.sum("sz").alias("n")
@@ -3336,7 +3338,7 @@ def v_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent = pos.groupBy("is_a", "pos").agg(
         F.round(F.avg("val") * _DRIFT_SCALE).cast("long").alias("c"),
         F.countDistinct("vec_id").alias("n"),
-    ).localCheckpoint()  # 2·D rows; read by counts + both dot passes
+    ).transform(materialize, sf_dir)  # 2·D rows; read by counts + both dot passes
     a = cent.filter(F.col("is_a")).select(
         "pos", F.col("c").alias("ca"), F.col("n").alias("na")
     )
@@ -3423,7 +3425,7 @@ def v_distance_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     smp = (
         e.orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
         .limit(_DC_SAMPLE)
-        .localCheckpoint()  # both sides of the bounded pair join
+        .transform(materialize, sf_dir)  # both sides of the bounded pair join
     )
     a = smp.select(F.col("vec_id").alias("ia"), F.col("v").alias("va"))
     b = smp.select(F.col("vec_id").alias("ib"), F.col("v").alias("vb"))

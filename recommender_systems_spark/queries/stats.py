@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from recommender_systems_spark.functions.vector import cosine_similarity
-from recommender_systems_spark.io import table_rows
+from recommender_systems_spark.io import materialize, table_rows
 from recommender_systems_spark.operators.densify import dense_id_map
 from recommender_systems_spark.operators.relational import (
     anti_join_below_threshold,
@@ -1579,7 +1579,7 @@ def e_powerlaw_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         _t(spark, sf_dir, "lineitem")
         .groupBy(F.col("l_partkey").alias("item"))
         .agg(F.count(F.lit(1)).alias("k"))
-        .localCheckpoint()  # consumed twice: histogram + MLE tail
+        .transform(materialize, sf_dir)  # consumed twice: histogram + MLE tail
     )
     hist = deg.groupBy("k").agg(F.count(F.lit(1)).cast("long").alias("n_items"))
     fit = deg.filter(F.col("k") >= _PL_KMIN).agg(
@@ -2014,7 +2014,7 @@ def w_trailing_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     # magnitude below events — the cheap side to pin). Round-13.
     presence = ev.select(
         "user_id", F.date_trunc("hour", "ts").alias("hour")
-    ).distinct().localCheckpoint()
+    ).distinct().transform(materialize, sf_dir)
     h1 = presence.agg(F.max("hour").alias("h1"))
     off = spark.range(24).select(F.col("id").cast("int").alias("off"))
     covered = (
@@ -2186,9 +2186,7 @@ def v_ild_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # queries×K rows; referenced by BOTH pair-join sides —
     # unmaterialised, the whole scoring + ranking chain ran twice
     # (round-13 census: 3 parquet scans → 1).
-    pv = top.join(ev, "vec_id").localCheckpoint()  # eager: the pair
-    # join's two concurrent sides would race (and duplicate) a lazy
-    # first-computation
+    pv = top.join(ev, "vec_id").transform(materialize, sf_dir)
     d = (
         F.round(
             (1 - F.round(cosine_similarity(F.col("a.v"), F.col("b.v")), 5))
@@ -2439,7 +2437,7 @@ def e_meta_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(1000000.0 * F.col("d") / F.col("se2"))
         .cast("long")
         .alias("wd_micros"),
-    ).localCheckpoint()  # |segments|-sized; consumers: pool + Q pass
+    ).transform(materialize, sf_dir)  # |segments|-sized; consumers: pool + Q pass
     pool = scaled.agg(
         F.count(F.lit(1)).alias("k"),
         F.sum("w_micros").alias("sw"),

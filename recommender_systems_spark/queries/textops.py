@@ -19,6 +19,7 @@ from recommender_systems_spark.functions.text import (
     rolling_fingerprint,
     tokens,
 )
+from recommender_systems_spark.io import materialize
 from recommender_systems_spark.registry import _t, register
 
 
@@ -1251,7 +1252,7 @@ def t_bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("p.k").alias("k"), F.col("p.x").alias("x"),
                  F.col("p.y").alias("y"))
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint()
+        .transform(materialize, sf_dir)
     )
     ucnt = combo.filter(F.col("k") == 0).select(
         F.col("x").alias("w"), "c"
@@ -1376,7 +1377,7 @@ def t_vocab_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("source", "tok")
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    sc = sc.localCheckpoint()  # scanned 3× (corpus counts, totals, contribs)
+    sc = materialize(sc, sf_dir)  # scanned 3× (corpus counts, totals, contribs)
     cc = sc.groupBy("tok").agg(F.sum("c").alias("cc"))
     st = sc.groupBy("source").agg(
         F.sum("c").alias("ns"), F.count(F.lit(1)).alias("n_terms")
@@ -1644,16 +1645,12 @@ def t_naive_bayes_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # vocab×langs-sized; referenced by the stats broadcast AND the
     # pivoted model — unmaterialised, the corpus explode + exchange ran
-    # twice (round-13). EAGER by adjudication: both eagerness modes
-    # were measured interleaved (lazy 1.113×, eager 1.074× vs pinned)
-    # — the lazy form's first computation lands inside the broadcast
-    # build where its job is serialised behind the broadcast timeout
-    # path, so the separate blocking action is the cheaper mode here.
+    # twice (round-13).
     cagg = (
         train.select("lang", F.explode("toks").alias("tok"))
         .groupBy("lang", "tok")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint()
+        .transform(materialize, sf_dir)
     )
     stats = cagg.agg(
         *[
@@ -2319,7 +2316,9 @@ def t_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z0-9]+"), 0)
         ).alias("t")
     )
-    counts = tok.groupBy("t").agg(F.count(F.lit(1)).alias("n")).localCheckpoint()
+    counts = materialize(
+        tok.groupBy("t").agg(F.count(F.lit(1)).alias("n")), sf_dir
+    )
     w = Window.orderBy(F.col("n").desc(), F.col("t"))  # post-limit frame
     vocab = (
         counts.orderBy(F.col("n").desc(), F.col("t"))
@@ -2497,7 +2496,7 @@ def t_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     words = wf.select(
         "cnt", F.concat_ws("|", F.split("w", "")).alias("s")
-    ).localCheckpoint()
+    ).transform(materialize, sf_dir)
     rows = []
     for k in range(1, BPE_ROUNDS + 1):
         t = F.split(F.col("s"), r"\|")
@@ -2534,7 +2533,9 @@ def t_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"'|', '{merged}') "
             "ELSE concat(acc, '|', x) END), 2)"
         )
-        words = words.select("cnt", F.expr(fold).alias("s")).localCheckpoint()
+        words = materialize(
+            words.select("cnt", F.expr(fold).alias("s")), sf_dir
+        )
     return spark.createDataFrame(
         rows,
         "round int, left_sym string, right_sym string, merged string,"
@@ -2653,7 +2654,7 @@ def t_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.when(F.col("lang") == _DSIR_TARGET, 1).otherwise(0)
             ).alias("ct"),
         )
-        .localCheckpoint()
+        .transform(materialize, sf_dir)
     )
     tots = F.broadcast(
         cnt.agg(F.sum("cr").alias("r"), F.sum("ct").alias("t"))
@@ -2771,7 +2772,7 @@ def t_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(tokens(F.col("text"))).alias("tok"),
     )
     loc = tok.groupBy("shard", "tok").agg(F.count(F.lit(1)).alias("f"))
-    loc = loc.localCheckpoint()  # consumed by shard totals + verify + total
+    loc = materialize(loc, sf_dir)  # consumed by shard totals + verify + total
     st = loc.groupBy("shard").agg(F.sum("f").alias("ns"))
     cand = (
         loc.join(F.broadcast(st), "shard")
@@ -2869,7 +2870,7 @@ def t_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("p")
     ).select("p.w1", "p.w2")
     c = pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
-    c = c.localCheckpoint()  # consumed by ctx, cont, type total, and output
+    c = materialize(c, sf_dir)  # consumed by ctx, cont, type total, and output
     ctx = c.groupBy("w1").agg(
         F.sum("c12").alias("c1"), F.count(F.lit(1)).alias("n1f")
     )
@@ -3028,7 +3029,7 @@ def t_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
                 lambda a, b: F.concat_ws(" ", a, b),
             )
         ).alias("g"),
-    ).localCheckpoint()  # train vocab + test probe read the same pass
+    ).transform(materialize, sf_dir)  # train vocab + test probe read the same pass
     tr = big.filter(F.col("is_train")).select("g").distinct()
     te = big.filter(~F.col("is_train")).select("doc_id", "g")
     novel = F.sum(F.when(F.col("tg").isNull(), 1).otherwise(0))

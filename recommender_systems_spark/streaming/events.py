@@ -17,6 +17,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from recommender_systems_spark.io import materialize_now
+
 EVENTS_SCHEMA = T.StructType(
     [
         T.StructField("event_id", T.LongType(), True),
@@ -334,7 +336,7 @@ def cdc_apply_batch(
         reduced = _cdc_reduce(
             cur.unionByName(reduced.drop("bucket"))
         ).withColumn("bucket", _cdc_bucket(F.col("user_id"), n_buckets))
-    merged = reduced.localCheckpoint(eager=True)
+    merged = materialize_now(reduced)
     (
         merged.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")

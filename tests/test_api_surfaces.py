@@ -124,3 +124,22 @@ def test_survey_covers_registry():
     ).read()
     missing = sorted(n for n in registry.QUERIES if n not in survey)
     assert not missing, f"SURVEY.md is stale for: {missing}"
+
+
+def test_checkpoints_go_through_io_materialize():
+    """Every lineage cut in the package goes through io.materialize or
+    io.materialize_now, so eagerness is decided in one place: no module
+    but io.py may call ``.localCheckpoint(`` or pass ``eager=``."""
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "recommender_systems_spark"
+    pattern = re.compile(r"\.localCheckpoint\(|\beager=")
+    offenders = [
+        f"{path.relative_to(pkg)}:{i}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path != pkg / "io.py"
+        for i, line in enumerate(path.read_text(encoding="utf-8").splitlines(), 1)
+        if pattern.search(line)
+    ]
+    assert not offenders, offenders

@@ -4,6 +4,7 @@ frame-sampling edge cases, IVF invariants, partition-pruning plan shape.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from recommender_systems_spark.multimodal.binary import (
@@ -12,7 +13,7 @@ from recommender_systems_spark.multimodal.binary import (
     MAX_FRAMES,
     sample_frames,
 )
-from tests.conftest import SF_MED
+from tests.conftest import SF_MED, SF_SMALL
 
 
 def _frames_reference(payload: bytes):
@@ -2684,3 +2685,52 @@ def test_midrank_total_sums_rejects_double_column(spark):
     )
     with pytest.raises(TypeError, match="integral"):
         two_phase_midrank(df, "value", "cnt", total_sums=["w"])
+
+
+_POLICY_ROWS = 97
+
+
+def _counted_aggregate(spark):
+    """A 97-row aggregate whose final stage runs a Python UDF that
+    counts its calls — the number of rows the plan evaluated."""
+    calls = spark.sparkContext.accumulator(0)
+
+    @F.udf("long")
+    def tick(n):
+        calls.add(1)
+        return n
+
+    df = (
+        spark.range(_POLICY_ROWS)
+        .groupBy((F.col("id") % _POLICY_ROWS).alias("k"))
+        .agg(F.count(F.lit(1)).alias("n"))
+        .select("k", tick("n").alias("n"))
+    )
+    return df, calls
+
+
+@pytest.mark.parametrize("mode", ["lazy", "below_scale", "past_scale", "now"])
+def test_materialize_policy(spark, monkeypatch, mode):
+    """io.materialize is lazy unless the data set is past SCALE_ROWS;
+    io.materialize_now is always eager. Either way the checkpointed
+    rows are evaluated exactly once: a self-join and a later aggregate
+    read the stored blocks."""
+    from recommender_systems_spark import io
+
+    df, calls = _counted_aggregate(spark)
+    if mode == "lazy":
+        m = io.materialize(df)
+    elif mode == "below_scale":
+        m = io.materialize(df, SF_SMALL)
+    elif mode == "past_scale":
+        monkeypatch.setattr(io, "SCALE_ROWS", 0)
+        m = io.materialize(df, SF_SMALL)
+    else:
+        m = io.materialize_now(df)
+    eager = mode in ("past_scale", "now")
+    assert calls.value == (_POLICY_ROWS if eager else 0)
+
+    pairs = m.alias("a").join(m.alias("b"), "k").count()
+    total = m.agg(F.sum("n")).collect()[0][0]
+    assert (pairs, total) == (_POLICY_ROWS, _POLICY_ROWS)
+    assert calls.value == _POLICY_ROWS

@@ -23,6 +23,7 @@ import os
 import sys
 import time
 import urllib.request
+from datetime import datetime
 
 # Resolve the package from cwd first (pinned-worktree runs), falling
 # back to this file's own repo.
@@ -38,6 +39,12 @@ def _rest(url: str):
         return json.load(r)
 
 
+def _rest_time(stamp: str) -> datetime:
+    """Parse a REST timestamp such as ``2026-10-17T08:36:02.123GMT``:
+    the zone suffix is always GMT, so strip it."""
+    return datetime.fromisoformat(stamp.rstrip("ABCDEFGHIJKLMNOPQRSTUVWXYZ"))
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     names = sys.argv[1:] or sorted(registry.QUERIES)
@@ -49,6 +56,9 @@ def main() -> None:
     sc = spark.sparkContext
     base = sc.uiWebUrl  # e.g. http://host:4040
     app_id = sc.applicationId
+    # Warm-ups and every other job outside a measured run go here.
+    idle = ("census-idle", "between queries")
+    sc.setJobGroup(*idle)
     # Warm the session like bench.py does.
     registry.QUERIES["flagship_top_customers"](spark, sf_dir).collect()
 
@@ -72,25 +82,17 @@ def main() -> None:
         t0 = time.perf_counter()
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         wall = time.perf_counter() - t0
-        sc.setJobGroup(None, None)
+        sc.setJobGroup(*idle)
         jobs = _rest(f"{base}/api/v1/applications/{app_id}/jobs?status=succeeded")
         mine = [j for j in jobs if j.get("jobGroup") == group]
         per_job = []
         for j in sorted(mine, key=lambda j: j["jobId"]):
-            try:
-                sub = j.get("submissionTime", "")
-                comp = j.get("completionTime", "")
-                from datetime import datetime
-
-                fmt = "%Y-%m-%dT%H:%M:%S.%f%Z"
-                dur = (
-                    datetime.strptime(comp, fmt) - datetime.strptime(sub, fmt)
-                ).total_seconds()
-            except Exception:
-                dur = None
+            dur = (
+                _rest_time(j["completionTime"]) - _rest_time(j["submissionTime"])
+            ).total_seconds()
             per_job.append({
                 "id": j["jobId"],
-                "sec": round(dur, 3) if dur is not None else None,
+                "sec": round(dur, 3),
                 "tasks": j.get("numTasks"),
                 "stages": len(j.get("stageIds", [])),
                 "desc": (j.get("description") or j.get("name") or "")[:120],
