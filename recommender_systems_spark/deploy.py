@@ -9,6 +9,13 @@ about us — so the engine ships itself: zip the package once per
 process and ``addPyFile`` it once per SparkContext. This is exactly
 how a real cluster deployment distributes the code (spark-submit
 --py-files), done automatically.
+
+Sessions built by ``session.get_spark`` on a local master do not need
+the zip: their workers fork from ``pydaemon``, which has already
+imported the package from its source directory
+(``spark.executorEnv.PYTHONPATH``), so the package directory wins over
+the zip there. The zip serves the sessions the engine did not build,
+such as the external driver's plain SparkSession, and cluster masters.
 """
 
 from __future__ import annotations

@@ -13,6 +13,15 @@ One builder for the whole engine. Defaults are chosen for correctness at
 - ``spark.sql.shuffle.partitions`` is a *starting* value; AQE coalesces
   down. On a real cluster this should be ~2-3x total cores; callers can
   override via env.
+- Local masters run Python workers under ``pydaemon``, PySpark's daemon
+  with one rule added: a worker re-reads a zip archive's directory only
+  when the file changed. Without it every Python task (pandas UDF
+  solves, SGD partitions, fold-in) spends about 0.25 s of CPU re-parsing
+  the ~27k directory entries of pyspark.zip, the spark-core jar and
+  py4j. The daemon module is imported from the directory that holds this
+  package (``spark.executorEnv.PYTHONPATH``), which local executors share
+  with the driver. Cluster executors may not have the package on their
+  path when the daemon starts, so other masters keep PySpark's daemon.
 """
 
 from __future__ import annotations
@@ -20,6 +29,19 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_PKG_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def worker_conf(master: str) -> dict[str, str]:
+    """Python-worker settings for ``master``: the ``pydaemon`` daemon for
+    local masters, nothing for any other."""
+    if master != "local" and not master.startswith("local["):
+        return {}
+    return {
+        "spark.python.daemon.module": "recommender_systems_spark.pydaemon",
+        "spark.executorEnv.PYTHONPATH": _PKG_PARENT,
+    }
 
 
 def get_spark(
@@ -56,7 +78,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "128m")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**worker_conf(master), **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -143,3 +143,127 @@ def test_checkpoints_go_through_io_materialize():
         if pattern.search(line)
     ]
     assert not offenders, offenders
+
+
+def test_pydaemon_rereads_only_changed_archives(tmp_path, monkeypatch):
+    """The worker daemon's rule, without Spark: invalidating an
+    unchanged archive re-reads nothing; after the archive is rewritten,
+    one invalidation re-reads it once and its new module is found."""
+    import zipfile
+    import zipimport
+
+    from recommender_systems_spark import pydaemon
+
+    # Undone at teardown, so the patch stays inside this test.
+    monkeypatch.setattr(
+        zipimport.zipimporter, "invalidate_caches",
+        zipimport.zipimporter.invalidate_caches,
+    )
+    pydaemon.install()
+    reads = []
+    read_directory = zipimport._read_directory
+    monkeypatch.setattr(
+        zipimport, "_read_directory",
+        lambda archive: reads.append(archive) or read_directory(archive),
+    )
+
+    archive = tmp_path / "mods.zip"
+    with zipfile.ZipFile(archive, "w") as zf:
+        zf.writestr("first_mod.py", "X = 1\n")
+    importer = zipimport.zipimporter(str(archive))
+    assert reads == [str(archive)]  # the constructor's own read
+
+    reads.clear()
+    for _ in range(5):
+        importer.invalidate_caches()
+    assert reads == []
+    # The counter sees what stock zipimport does on every invalidation.
+    zipimport.zipimporter.invalidate_caches.__wrapped__(importer)
+    assert reads == [str(archive)]
+
+    reads.clear()
+    with zipfile.ZipFile(archive, "w") as zf:
+        zf.writestr("first_mod.py", "X = 1\n")
+        zf.writestr("second_mod.py", "Y = 2\n")
+    for _ in range(3):
+        importer.invalidate_caches()
+    assert reads == [str(archive)]
+    assert importer.find_spec("second_mod") is not None
+
+
+def test_worker_conf_only_for_local_masters():
+    """Only local masters get the daemon keys: cluster executors may not
+    have the package on their path when the daemon starts."""
+    from recommender_systems_spark.session import worker_conf
+
+    keys = {"spark.python.daemon.module", "spark.executorEnv.PYTHONPATH"}
+    for master in ("local", "local[2]", "local[*]"):
+        conf = worker_conf(master)
+        assert set(conf) == keys
+        assert conf["spark.python.daemon.module"] == "recommender_systems_spark.pydaemon"
+        assert os.path.isfile(os.path.join(
+            conf["spark.executorEnv.PYTHONPATH"],
+            "recommender_systems_spark", "pydaemon.py",
+        ))
+    for master in ("spark://host:7077", "yarn", "k8s://https://host:6443",
+                   "local-cluster[2,1,1024]"):
+        assert worker_conf(master) == {}
+
+
+def test_local_workers_run_under_pydaemon(spark):
+    """The shared session's Python workers are forked from pydaemon and
+    import the package from the driver's own source directory."""
+    import recommender_systems_spark
+
+    def probe(batches):
+        import sys
+
+        import pandas as pd
+
+        import recommender_systems_spark as pkg
+
+        for _ in batches:
+            yield pd.DataFrame({
+                "main": [sys.modules["__main__"].__spec__.name],
+                "pkg": [pkg.__file__],
+            })
+
+    row = (
+        spark.range(1, numPartitions=1)
+        .mapInPandas(probe, "main string, pkg string")
+        .collect()[0]
+    )
+    assert row["main"] == "recommender_systems_spark.pydaemon"
+    assert os.path.abspath(row["pkg"]) == os.path.abspath(
+        recommender_systems_spark.__file__
+    )
+
+
+def test_pydaemon_starts_outside_the_repository(tmp_path):
+    """A process started elsewhere, with the package on its own sys.path
+    only, still gets a working daemon on a local master."""
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = "\n".join([
+        "import sys",
+        f"sys.path.insert(0, {root!r})",
+        "from recommender_systems_spark.session import get_spark",
+        "spark = get_spark('pydaemon-outside', master='local[2]')",
+        "def probe(batches):",
+        "    import sys",
+        "    for b in batches:",
+        "        yield b.assign(main=sys.modules['__main__'].__spec__.name)",
+        "df = spark.range(1, numPartitions=1).mapInPandas(probe, 'id long, main string')",
+        "print(df.collect()[0]['main'])",
+        "spark.stop()",
+    ])
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    r = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert r.returncode == 0, r.stderr[-2000:]
+    assert r.stdout.split()[-1] == "recommender_systems_spark.pydaemon"
