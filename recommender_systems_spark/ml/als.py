@@ -92,20 +92,59 @@ def bucketed(df: DataFrame, key: str, n_buckets: int) -> DataFrame:
     return df.repartition(min(n_buckets, sc.defaultParallelism * 2), key)
 
 
+def spd_solve(a_mat: np.ndarray, rhs: np.ndarray) -> np.ndarray:
+    """The one solve of every normal equation in the engine (ALS,
+    genre-ALS, iALS, fold-in): Cholesky, as the reference does
+    (functions.py:283-357), falling back to ``np.linalg.solve`` on
+    ``LinAlgError`` (the τI / λI ridge term keeps every caller's matrix
+    SPD, so the fallback is a guard)."""
+    try:
+        c = np.linalg.cholesky(a_mat)
+        return np.linalg.solve(c.T, np.linalg.solve(c, rhs))
+    except np.linalg.LinAlgError:
+        return np.linalg.solve(a_mat, rhs)
+
+
+def bias_ridge_step(
+    vtv: np.ndarray,
+    vtd: np.ndarray,
+    sv: np.ndarray,
+    sd: float,
+    n: int,
+    u_prev: np.ndarray,
+    lmd: float,
+    tau: float,
+    alpha: float,
+    pull: np.ndarray | None = None,
+) -> tuple[float, np.ndarray]:
+    """One entity's bias-ALS update (reference update_user,
+    functions.py:283-357) from its sums over the n rated rows, with
+    d = r − b_other: ``vtv`` = VᵀV, ``vtd`` = Vᵀd, ``sv`` = Σv,
+    ``sd`` = Σd. Returns (bias, vec):
+
+        bias = λ(Σd − Σv·u_prev) / (α + λn)
+        vec  = (λVᵀV + τI)⁻¹ · (λ(Vᵀd − bias·Σv) [+ pull])
+
+    — the reference's per-row form with both sums expanded linearly.
+    Cold-start fold-in (find_user_trait_vector, functions.py:551-596)
+    is the same step at u_prev = 0; taking sums lets fold-in assemble
+    them from per-partition partials."""
+    bias = lmd * (sd - sv @ u_prev) / (alpha + lmd * n)
+    rhs = lmd * (vtd - bias * sv)
+    if pull is not None:
+        rhs = rhs + pull
+    return float(bias), spd_solve(lmd * vtv + tau * np.eye(len(sv)), rhs)
+
+
 def _solve_bucket(
     pdf: pd.DataFrame,
     lmd: float,
     tau: float,
     alpha: float,
-    k: int,
     with_sse: bool = False,
 ):
-    """Solve EVERY entity in one hash bucket (reference update_user,
-    functions.py:283-357), executed per bucket inside applyInPandas.
-
-    Per entity:
-        bias = λ Σ(r - u_old·v - b_other) / (α + λ|Ω|)
-        vec  = (λ Σ v vᵀ + τI)⁻¹ · (λ Σ (r - b_other - bias) v [+ pull])
+    """Solve EVERY entity in one hash bucket with ``bias_ridge_step``,
+    executed per bucket inside applyInPandas.
 
     Bucketing matters: applyInPandas pays per-GROUP Arrow/pandas
     overhead, so grouping by id (10⁴-10⁵ groups of ~30 rows) spends
@@ -126,7 +165,6 @@ def _solve_bucket(
     aggregate over the factor frame instead of a separate data-sized
     scoring join (identical value: same residuals ``predict``+``rmse``
     would compute on the new factors)."""
-    tau_eye = tau * np.eye(k)
     out_ids: list[int] = []
     out_feat: list[list[float]] = []
     out_bias: list[float] = []
@@ -152,8 +190,9 @@ def _solve_bucket(
             empty["n"] = pd.Series([], dtype="int64")
         return pd.DataFrame(empty)
     v_all = np.stack(data["of"].to_numpy())
-    r_all = data["rating"].to_numpy(dtype=np.float64)
-    b_all = data["ob"].to_numpy(dtype=np.float64)
+    d_all = data["rating"].to_numpy(dtype=np.float64) - data["ob"].to_numpy(
+        dtype=np.float64
+    )
     for vid, idx in data.groupby("id", sort=False).indices.items():
         u_prev = self_map.get(vid)
         if u_prev is None:
@@ -161,28 +200,20 @@ def _solve_bucket(
             # such ratings; keep that contract.
             continue
         v = v_all[idx]
-        r = r_all[idx]
-        b_other = b_all[idx]
-        u_old = np.asarray(u_prev, dtype=np.float64)
-        n = len(r)
-        bias = lmd * float(np.sum(r - v @ u_old - b_other)) / (alpha + lmd * n)
-        a_mat = lmd * (v.T @ v) + tau_eye
-        rhs = lmd * (v.T @ (r - b_other - bias))
+        d = d_all[idx]
         pull = pull_map.get(vid)
-        if pull is not None:
-            rhs = rhs + np.asarray(pull, dtype=np.float64)
-        try:
-            c = np.linalg.cholesky(a_mat)
-            vec = np.linalg.solve(c.T, np.linalg.solve(c, rhs))
-        except np.linalg.LinAlgError:  # τI makes this near-impossible
-            vec = np.linalg.solve(a_mat, rhs)
+        bias, vec = bias_ridge_step(
+            v.T @ v, v.T @ d, v.sum(axis=0), d.sum(), len(d),
+            np.asarray(u_prev, dtype=np.float64), lmd, tau, alpha,
+            None if pull is None else np.asarray(pull, dtype=np.float64),
+        )
         out_ids.append(int(vid))
         out_feat.append(vec.tolist())
         out_bias.append(bias)
         if with_sse:
-            resid = r - v @ vec - b_other - bias
+            resid = d - v @ vec - bias
             out_sse.append(float(resid @ resid))
-            out_n.append(n)
+            out_n.append(len(d))
     cols = {"id": out_ids, "features": out_feat, "bias": out_bias}
     if with_sse:
         cols["sse"] = out_sse
@@ -200,7 +231,6 @@ def als_half_sweep(
     lmd: float = DEFAULT_LMD,
     tau: float = DEFAULT_TAU,
     alpha: float = DEFAULT_ALPHA,
-    rank: int = DEFAULT_RANK,
     rhs_pull: DataFrame | None = None,
     with_sse: bool = False,
 ) -> DataFrame:
@@ -261,7 +291,7 @@ def als_half_sweep(
         )
 
     def solve(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _solve_bucket(pdf, lmd, tau, alpha, rank, with_sse=with_sse)
+        return _solve_bucket(pdf, lmd, tau, alpha, with_sse=with_sse)
 
     schema = _FACTOR_SCHEMA + (", sse double, n long" if with_sse else "")
     # Deliberately NOT `bucketed`-pinned: the ALS sweep is shuffle/Arrow
@@ -431,7 +461,7 @@ def train_als_bias(
 
     def build_user_sweep(uf, vf):
         return als_half_sweep(
-            ratings, "u", "i", "r", uf, vf, lmd, tau, alpha, rank
+            ratings, "u", "i", "r", uf, vf, lmd, tau, alpha
         ).transform(materialize)
 
     prebuild = ThreadPoolExecutor(max_workers=1)
@@ -449,7 +479,7 @@ def train_als_bias(
             # touches only dimension-sized frames — no ratings pass
             # outside the sweeps.
             new_v_ext = als_half_sweep(
-                ratings, "i", "u", "r", v_f, new_u, lmd, tau, alpha, rank,
+                ratings, "i", "u", "r", v_f, new_u, lmd, tau, alpha,
                 with_sse=True,
             ).transform(materialize)
             new_v = new_v_ext.drop("sse", "n")

@@ -562,17 +562,54 @@ def train_bpr(
                 metrics.append(
                     _eval_pr_driver(
                         pos, eval_users, v_f, eval_k,
-                        rank=rank, n_blocks=eval_blocks,
+                        n_blocks=eval_blocks,
                     )
                 )
             else:
                 metrics.append(
                     precision_recall_at_k(
                         pos, u_f, v_f, eval_k,
-                        rank=rank, n_blocks=eval_blocks,
+                        n_blocks=eval_blocks,
                     )
                 )
     return BprModel(u_f, v_f, metrics)
+
+
+def rank_top_k(
+    users,
+    item_mat: np.ndarray,
+    item_ids: np.ndarray,
+    k: int,
+    item_bias: np.ndarray | None = None,
+    bias_w: float = 0.0,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """The one score-and-rank kernel of the NumPy layer (BPR's E1
+    evals and blocked tiles, the A/B serving run): score = U·Vᵀ
+    [+ bias_w·b], then each user's top ``k`` items by (score desc, id
+    asc), the Window merges' ``orderBy(score.desc(), id)`` order.
+    ``users`` stacks into an (m, K) matrix (e.g. a Series of factor
+    arrays). Returns flat user-major arrays (user row, item id, score,
+    rank 1..k), min(k, |items|) entries per user."""
+    u_mat = np.asarray(list(users), dtype=np.float64).reshape(-1, item_mat.shape[1])
+    scores = u_mat @ item_mat.T
+    if item_bias is not None:
+        scores = scores + bias_w * item_bias
+    kk = min(k, len(item_ids))
+    cols = np.array(
+        [np.lexsort((item_ids, -row))[:kk] for row in scores], dtype=np.int64
+    ).reshape(-1)
+    rows = np.repeat(np.arange(len(u_mat)), kk)
+    ranks = np.tile(np.arange(1, kk + 1), len(u_mat))
+    return rows, item_ids[cols], scores[rows, cols], ranks
+
+
+def _item_matrix(item_factors: DataFrame) -> tuple[np.ndarray, np.ndarray]:
+    """(ids, |items|×K float64 matrix) of a broadcast-sized factor frame."""
+    rows = item_factors.collect()
+    return (
+        np.array([r["id"] for r in rows], dtype=np.int64),
+        np.array([r["features"] for r in rows], dtype=np.float64),
+    )
 
 
 def _eval_pr_driver(
@@ -580,7 +617,6 @@ def _eval_pr_driver(
     eval_users: DataFrame,
     item_factors: DataFrame,
     k: int | list[int],
-    rank: int | None = None,
     n_blocks: int | None = None,
 ) -> tuple[float, float] | dict[int, tuple[float, float]]:
     """E1 for a FIXED-COUNT user sample: everything that reaches the
@@ -597,32 +633,27 @@ def _eval_pr_driver(
     blocked GEMM (``_topk_blocked``) and only its N·kmax (u, i, rnk)
     rows are collected; without it the catalog is below the broadcast
     threshold, so the same item matrix the epoch already broadcasts is
-    scored against N user vectors driver-side with the identical
-    lexsort tie order (score desc, id asc)."""
+    scored against N user vectors driver-side with ``rank_top_k``."""
     ks = sorted({k} if isinstance(k, int) else set(k))
     kmax = ks[-1]
-    ranked: dict[int, list[int]] = {}
     if n_blocks is not None and n_blocks > 1:
-        for r in _topk_blocked(eval_users, item_factors, kmax, n_blocks).collect():
-            ranked.setdefault(int(r["u"]), []).append((int(r["rnk"]), int(r["i"])))
-        ranked = {
-            u: [i for _, i in sorted(pairs)] for u, pairs in ranked.items()
-        }
+        top = [
+            (int(r["u"]), int(r["i"]), int(r["rnk"]))
+            for r in _topk_blocked(eval_users, item_factors, kmax, n_blocks).collect()
+        ]
     else:
         ev_rows = eval_users.collect()
-        item_rows = item_factors.collect()
-        item_ids = np.array([r["id"] for r in item_rows], dtype=np.int64)
-        item_mat = np.stack(
-            [np.asarray(r["features"], dtype=np.float64) for r in item_rows]
+        item_ids, item_mat = _item_matrix(item_factors)
+        rows, items, _, ranks = rank_top_k(
+            [r["features"] for r in ev_rows], item_mat, item_ids, kmax
         )
-        u_ids = [int(r["id"]) for r in ev_rows]
-        u_mat = np.stack(
-            [np.asarray(r["features"], dtype=np.float64) for r in ev_rows]
-        )
-        scores = u_mat @ item_mat.T
-        for n, uid in enumerate(u_ids):
-            order = np.lexsort((item_ids, -scores[n]))[:kmax]
-            ranked[uid] = [int(item_ids[o]) for o in order]
+        top = [
+            (int(ev_rows[n]["id"]), int(i), int(rk))
+            for n, i, rk in zip(rows, items, ranks)
+        ]
+    ranked: dict[int, list[int]] = {}
+    for u, i, _ in sorted(top, key=lambda t: (t[0], t[2])):
+        ranked.setdefault(u, []).append(i)
     pos_sets: dict[int, set[int]] = {}
     for r in (
         positives.join(
@@ -647,22 +678,28 @@ def _eval_pr_driver(
 
 
 def _topk_blocked(
-    user_factors: DataFrame, item_factors: DataFrame, kmax: int, n_blocks: int
+    user_factors: DataFrame,
+    item_factors: DataFrame,
+    kmax: int,
+    n_blocks: int,
+    bias_w: float = 0.0,
 ) -> DataFrame:
-    """Per-user top-``kmax`` when the catalog is too big to broadcast:
-    the classic blocked GEMM. Items hash into ``n_blocks`` blocks and
-    users into SGD_BUCKETS buckets; each (bucket, block) tile is a
-    cogroup whose kernel runs the same dense scoring product and keeps
-    the tile-local top-kmax (a superset of each user's global top-kmax,
-    since the global top-kmax within any block ⊆ that block's top-kmax).
-    A row_number window then merges |U|·n_blocks·kmax candidate rows to
-    the global ranking. Nothing driver-side or broadcast-side grows
-    with the catalog; tile memory is (|U|/buckets + |I|/blocks)·k
-    floats. Same tie order as the broadcast path (score desc, item id
-    asc) and the same float64 dot products, so results are
-    bit-identical."""
-    import numpy as np
-
+    """Per-user top-``kmax`` (u, i, score, rnk) when the catalog is too
+    big to broadcast: the classic blocked GEMM. Items hash into
+    ``n_blocks`` blocks and users into SGD_BUCKETS buckets; each
+    (bucket, block) tile is a cogroup whose kernel is ``rank_top_k``
+    and keeps the tile-local top-kmax (a superset of each user's global
+    top-kmax, since the global top-kmax within any block ⊆ that block's
+    top-kmax). A row_number window then merges |U|·n_blocks·kmax
+    candidate rows to the global ranking. Nothing driver-side or
+    broadcast-side grows with the catalog; tile memory is
+    (|U|/buckets + |I|/blocks)·k floats. Same kernel and tie order as
+    the broadcast path (score desc, item id asc); BLAS may round a
+    tile's dot product differently in the last bit than the full GEMM,
+    so only scores within one ulp can rank differently (the parity
+    tests pin equality on the test data). A non-zero ``bias_w`` adds
+    bias_w·b_i from the item side's ``bias`` column to every score
+    (the A/B serving run's M13 blend)."""
     from pyspark.sql import Window
 
     items_b = item_factors.withColumn(
@@ -686,18 +723,14 @@ def _topk_blocked(
                     "score": pd.Series(dtype="float64"),
                 }
             )
-        ids = itdf["id"].to_numpy()
         mat = np.stack([np.asarray(f, dtype=np.float64) for f in itdf["features"]])
-        u_ids = updf["id"].to_numpy()
-        u_mat = np.stack([np.asarray(f, dtype=np.float64) for f in updf["features"]])
-        scores = u_mat @ mat.T
-        out_u, out_i, out_s = [], [], []
-        for r in range(scores.shape[0]):
-            order = np.lexsort((ids, -scores[r]))[:kmax]
-            out_u.extend([int(u_ids[r])] * len(order))
-            out_i.extend(int(ids[o]) for o in order)
-            out_s.extend(float(scores[r, o]) for o in order)
-        return pd.DataFrame({"u": out_u, "i": out_i, "score": out_s})
+        bias = itdf["bias"].to_numpy(dtype=np.float64) if bias_w else None
+        rows, items, scores, _ = rank_top_k(
+            updf["features"], mat, itdf["id"].to_numpy(), kmax, bias, bias_w
+        )
+        return pd.DataFrame(
+            {"u": updf["id"].to_numpy()[rows], "i": items, "score": scores}
+        )
 
     tiles = (
         users_rep.groupBy("__b", "__blk")
@@ -708,7 +741,7 @@ def _topk_blocked(
     return (
         tiles.withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= kmax)
-        .select("u", "i", "rnk")
+        .select("u", "i", "score", "rnk")
     )
 
 
@@ -717,7 +750,6 @@ def precision_recall_at_k(
     user_factors: DataFrame,
     item_factors: DataFrame,
     k: int | list[int],
-    rank: int | None = None,
     n_blocks: int | None = None,
 ) -> tuple[float, float] | dict[int, tuple[float, float]]:
     """E1: mean P@k / R@k over users (functions.py:212-246): score the
@@ -739,39 +771,20 @@ def precision_recall_at_k(
     scoring runs as a blocked GEMM with a per-user top-k merge instead
     (``_topk_blocked``) — bit-identical results, nothing catalog-sized
     on the driver."""
-    import numpy as np
-
     ks = sorted({k} if isinstance(k, int) else set(k))
     kmax = ks[-1]
     spark = positives.sparkSession
     if n_blocks is not None and n_blocks > 1:
         top = _topk_blocked(user_factors, item_factors, kmax, n_blocks)
     else:
-        item_rows = item_factors.collect()
-        item_ids = np.array([r["id"] for r in item_rows], dtype=np.int64)
-        item_mat = np.stack(
-            [np.asarray(r["features"], dtype=np.float64) for r in item_rows]
-        )
-        bc = spark.sparkContext.broadcast((item_ids, item_mat))
+        bc = spark.sparkContext.broadcast(_item_matrix(item_factors))
 
         def topk_block(pdf: pd.DataFrame) -> pd.DataFrame:
             ids, mat = bc.value
-            u_ids = pdf["id"].to_numpy()
-            u_mat = np.stack(
-                [np.asarray(f, dtype=np.float64) for f in pdf["features"]]
+            rows, items, _, ranks = rank_top_k(pdf["features"], mat, ids, kmax)
+            return pd.DataFrame(
+                {"u": pdf["id"].to_numpy()[rows], "i": items, "rnk": ranks}
             )
-            scores = u_mat @ mat.T  # (block_users, n_items)
-            out_u: list[int] = []
-            out_i: list[int] = []
-            out_r: list[int] = []
-            for r in range(scores.shape[0]):
-                # score desc, item id asc — the same tie order as a
-                # struct(score, -i) max-heap.
-                order = np.lexsort((ids, -scores[r]))[:kmax]
-                out_u.extend([int(u_ids[r])] * len(order))
-                out_i.extend(int(ids[o]) for o in order)
-                out_r.extend(range(1, len(order) + 1))
-            return pd.DataFrame({"u": out_u, "i": out_i, "rnk": out_r})
 
         top = (
             bucketed(

@@ -2,26 +2,38 @@
 
 The reference serves recommendations to NEW users (the A/B harness,
 ab_test.py:134-186) by folding their rating history into the trained
-model without retraining:
+model without retraining. Three stages:
 
 1. M11 ``find_user_bias`` (functions.py:522-548): with u=0,
    b_u = λ Σ(r − b_n) / (α + λ|hist|) — a single aggregation.
 2. M12 ``find_user_trait_vector`` (functions.py:551-596): one ridge
    solve u = (λΣv vᵀ + τI)⁻¹ λΣ(r − b_n − b_u)v over the history.
-   k=12 ⇒ the k×k system is solved on the driver (SURVEY: correct
-   design, not a cop-out); the Σ assembly is distributed.
+   M11+M12 together are ONE bias-ALS user update with a zero prior
+   vector: ``fold_in_bias_and_trait_vector`` feeds the history's sums
+   to ``als.bias_ridge_step`` at u_prev = 0, the same function every
+   ALS half-sweep calls. k=12 ⇒ the k×k system is solved on the driver
+   (SURVEY: correct design, not a cop-out); the Σ assembly is
+   distributed.
 3. M13 ``top_n_recommendations`` (functions.py:599-647): score the full
    catalogue u·v_n + 0.05·b_n, drop rarely-rated items (P6/P7), top-N.
 """
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from recommender_systems_spark.functions.vector import dot_product
-from recommender_systems_spark.ml.als import DEFAULT_ALPHA, DEFAULT_LMD, DEFAULT_TAU
+from recommender_systems_spark.ml.als import (
+    DEFAULT_ALPHA,
+    DEFAULT_LMD,
+    DEFAULT_TAU,
+    bias_ridge_step,
+    spd_solve,
+)
 from recommender_systems_spark.operators.relational import anti_join_below_threshold
 
 
@@ -50,19 +62,18 @@ def fold_in_bias(
     )
 
 
-def fold_in_trait_vector(
+def _history_sums(
     history: DataFrame,
     item_col: str,
     rating_col: str,
     item_factors: DataFrame,
-    user_bias: float,
-    lmd: float = DEFAULT_LMD,
-    tau: float = DEFAULT_TAU,
-    dim: int | None = None,
-) -> np.ndarray:
-    """M12: assemble λΣv vᵀ and λΣ(r−b_n−b_u)v distributed (k² + k
-    doubles shipped to the driver — independent of history size), then
-    Cholesky-solve the k×k system on the driver."""
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, float, int]:
+    """The sums ``als.bias_ridge_step`` takes, over one user's history
+    with d = r − b_n: (VᵀV, Vᵀd, Σv, Σd, |hist|). ONE history⋈factors
+    pass whose per-partition NumPy partials (mapInPandas) carry
+    k²+2k+2 doubles each, so driver traffic is independent of history
+    size and the inner products are BLAS, not per-element expressions;
+    k is read back from the partial's length."""
     joined = history.join(
         item_factors.select(
             F.col("id").alias(item_col),
@@ -72,43 +83,54 @@ def fold_in_trait_vector(
         item_col,
     ).select(
         F.col("__v").alias("v"),
-        (F.col(rating_col) - F.col("__bn") - F.lit(user_bias)).alias("resid"),
+        (F.col(rating_col) - F.col("__bn")).alias("d"),
     )
-    # Σ resid·v and Σ v vᵀ via per-partition NumPy partial reduction
-    # (mapInPandas): each partition emits ONE k²+k row (a Gram-matrix
-    # partial), the driver sums #partitions tiny rows — traffic is
-    # independent of history size and the inner product is BLAS, not
-    # per-element expressions.
-    if dim is None:
-        k_row = joined.select(F.size("v").alias("k")).first()
-        if k_row is None:
-            raise ValueError("empty history")
-        dim = int(k_row["k"])
-    k = dim
 
     def partials(batches):
         import pandas as pd  # noqa: PLC0415 (worker-side import)
 
-        a_mat = np.zeros((k, k))
-        rvec = np.zeros(k)
-        seen = False
+        total = None
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            seen = True
             v = np.stack(pdf["v"].to_numpy())
-            resid = pdf["resid"].to_numpy(dtype=np.float64)
-            a_mat += v.T @ v
-            rvec += v.T @ resid
-        if seen:
-            yield pd.DataFrame({"p": [np.concatenate([a_mat.ravel(), rvec]).tolist()]})
+            d = pdf["d"].to_numpy(dtype=np.float64)
+            p = np.concatenate(
+                [(v.T @ v).ravel(), v.T @ d, v.sum(axis=0), [d.sum(), len(d)]]
+            )
+            total = p if total is None else total + p
+        if total is not None:
+            yield pd.DataFrame({"p": [total.tolist()]})
 
     parts = joined.mapInPandas(partials, schema="p array<double>").collect()
+    if not parts:
+        raise ValueError("empty history")
     total = np.sum([np.asarray(r["p"]) for r in parts], axis=0)
-    a_mat = lmd * total[: k * k].reshape(k, k) + tau * np.eye(k)
-    rhs = lmd * total[k * k :]
-    c = np.linalg.cholesky(a_mat)
-    return np.linalg.solve(c.T, np.linalg.solve(c, rhs))
+    k = math.isqrt(len(total) - 1) - 1  # len = (k + 1)² + 1
+    k2 = k * k
+    return (
+        total[:k2].reshape(k, k),
+        total[k2 : k2 + k],
+        total[k2 + k : k2 + 2 * k],
+        float(total[-2]),
+        int(total[-1]),
+    )
+
+
+def fold_in_trait_vector(
+    history: DataFrame,
+    item_col: str,
+    rating_col: str,
+    item_factors: DataFrame,
+    user_bias: float,
+    lmd: float = DEFAULT_LMD,
+    tau: float = DEFAULT_TAU,
+) -> np.ndarray:
+    """M12 for a GIVEN user bias: u = (λΣv vᵀ + τI)⁻¹ λΣ(r−b_n−b_u)v,
+    with the RHS expanded as λ(Vᵀd − b_u·Σv) over ``_history_sums``
+    and one ``spd_solve`` on the driver."""
+    vtv, vtd, sv, _, _ = _history_sums(history, item_col, rating_col, item_factors)
+    return spd_solve(lmd * vtv + tau * np.eye(len(sv)), lmd * (vtd - user_bias * sv))
 
 
 def fold_in_bias_and_trait_vector(
@@ -121,72 +143,18 @@ def fold_in_bias_and_trait_vector(
     tau: float = DEFAULT_TAU,
     dim: int = 12,
 ) -> tuple[float, int, np.ndarray]:
-    """Fused M11+M12: ONE history⋈factors pass whose per-partition
-    partials carry Σv vᵀ, Σ(r−b_n)·v, Σv, Σ(r−b_n) and |hist| —
-    k²+2k+2 doubles per partition, independent of history size. The
-    driver then derives b_u = λΣ(r−b_n)/(α+λ|hist|) and the ridge RHS
-    as λ(Σ(r−b_n)v − b_u·Σv), which is algebraically identical to
-    assembling residuals after the bias (resid = r−b_n−b_u enters the
-    RHS linearly), so the M11 collect and the M12 partials collect
-    collapse into a single Spark action over a single join (fp
-    association differs ≤1e-16 from the two-action form; outputs are
-    reported at 6 decimals). Returns (user_bias, n_history, vector)."""
-    joined = history.join(
-        item_factors.select(
-            F.col("id").alias(item_col),
-            F.col("features").alias("__v"),
-            F.col("bias").alias("__bn"),
-        ),
-        item_col,
-    ).select(
-        F.col("__v").alias("v"),
-        (F.col(rating_col) - F.col("__bn")).alias("d"),
+    """Fused M11+M12 in ONE Spark action: the history's sums
+    (``_history_sums``) go through ``als.bias_ridge_step`` with a zero
+    prior vector — the bias-ALS user update a trained user gets, for a
+    user the model has never seen (b_u = λΣ(r−b_n)/(α+λ|hist|), then
+    the ridge solve on λ(Σ(r−b_n)v − b_u·Σv)). Equal to that user's
+    ``als_half_sweep`` row with a zero self vector to fp-association
+    slack. Returns (user_bias, n_history, vector)."""
+    vtv, vtd, sv, sd, n = _history_sums(history, item_col, rating_col, item_factors)
+    user_bias, vec = bias_ridge_step(
+        vtv, vtd, sv, sd, n, np.zeros(dim), lmd, tau, alpha
     )
-    k = dim
-
-    def partials(batches):
-        import pandas as pd  # noqa: PLC0415 (worker-side import)
-
-        a_mat = np.zeros((k, k))
-        bvec = np.zeros(k)
-        svec = np.zeros(k)
-        sr = 0.0
-        cnt = 0
-        seen = False
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            seen = True
-            v = np.stack(pdf["v"].to_numpy())
-            d = pdf["d"].to_numpy(dtype=np.float64)
-            a_mat += v.T @ v
-            bvec += v.T @ d
-            svec += v.sum(axis=0)
-            sr += d.sum()
-            cnt += len(pdf)
-        if seen:
-            yield pd.DataFrame(
-                {
-                    "p": [
-                        np.concatenate(
-                            [a_mat.ravel(), bvec, svec, [sr, float(cnt)]]
-                        ).tolist()
-                    ]
-                }
-            )
-
-    parts = joined.mapInPandas(partials, schema="p array<double>").collect()
-    if not parts:
-        raise ValueError("empty history")
-    total = np.sum([np.asarray(r["p"]) for r in parts], axis=0)
-    k2 = k * k
-    sr, cnt = total[-2], total[-1]
-    user_bias = lmd * sr / (alpha + lmd * cnt)
-    a_mat = lmd * total[:k2].reshape(k, k) + tau * np.eye(k)
-    rhs = lmd * (total[k2 : k2 + k] - user_bias * total[k2 + k : k2 + 2 * k])
-    c = np.linalg.cholesky(a_mat)
-    vec = np.linalg.solve(c.T, np.linalg.solve(c, rhs))
-    return float(user_bias), int(cnt), vec
+    return user_bias, n, vec
 
 
 def top_n_recommendations(

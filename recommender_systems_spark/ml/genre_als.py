@@ -248,7 +248,7 @@ def train_als_genre(
 
     def build_user_sweep(uf, vf):
         return als_half_sweep(
-            r, "u", "i", "r", uf, vf, lmd, tau, alpha, rank
+            r, "u", "i", "r", uf, vf, lmd, tau, alpha
         ).transform(materialize)
 
     next_u_fut = prebuild.submit(build_user_sweep, u_f, v_f)
@@ -296,7 +296,7 @@ def train_als_genre(
             # join per iteration (round-13; the rmse() job was the one
             # remaining data pass outside the sweeps).
             new_v = als_half_sweep(
-                r, "i", "u", "r", v_f, new_u, lmd, tau, alpha, rank,
+                r, "i", "u", "r", v_f, new_u, lmd, tau, alpha,
                 rhs_pull=pull, with_sse=True,
             ).transform(materialize)
             u_f, v_f = new_u, new_v

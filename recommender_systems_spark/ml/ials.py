@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from recommender_systems_spark.io import materialize
-from recommender_systems_spark.ml.als import SOLVE_BUCKETS, bucketed, init_factors
+from recommender_systems_spark.ml.als import SOLVE_BUCKETS, init_factors, spd_solve
 
 IALS_ALPHA = 1.0   # confidence slope: c = 1 + α r
 IALS_LMD = 0.1     # L2 regularisation
@@ -98,7 +98,8 @@ def _half_sweep(
     """Re-solve every `self_col` entity against frozen other-side
     factors, given ``gram`` = Gram(other_factors). One join (ratings ⋈
     other factors), one bucketed applyInPandas; the shared Gram rides
-    the closure (k² doubles).
+    the closure (k² doubles). Each entity's system goes through
+    ``als.spd_solve``; only its normal matrix differs from bias-ALS's.
 
     ``with_objective_stats=True`` (the fused-monitor item sweep) adds a
     ``corr`` column: each entity's observed-correction contribution
@@ -128,7 +129,7 @@ def _half_sweep(
             cm1 = alpha * r_all[idx]  # c − 1, observed rows only
             a_mat = gram + (y.T * cm1) @ y + lam_eye
             rhs = y.T @ (1.0 + cm1)  # Yᵀ C p, p = 1 on observed
-            vec = np.linalg.solve(a_mat, rhs)
+            vec = spd_solve(a_mat, rhs)
             out_ids.append(int(eid))
             out_feat.append(vec.tolist())
             if with_objective_stats:

@@ -15,6 +15,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from recommender_systems_spark.io import materialize, materialize_now
+from recommender_systems_spark.ml.als import DEFAULT_ALPHA, DEFAULT_LMD, DEFAULT_TAU
 from recommender_systems_spark.queries._shared import (
     GENRE_CTE as _AB_GENRE_CTE,
     GENRE_WORDS as _AB_GENRE_WORDS,
@@ -299,8 +300,6 @@ AB_CATALOG_BROADCAST_THRESHOLD = 500_000
 _AB_G = len(_AB_GENRE_WORDS)
 _AB_N_USERS = 200
 _AB_MIN_RATERS = 2
-# M11 fold-in constants (= ml/als.py DEFAULT_LMD / DEFAULT_ALPHA).
-_AB_LMD, _AB_ALPHA = 0.1, 0.01
 
 
 # In-process cache of the dual-model serving blocks, keyed by the
@@ -458,8 +457,8 @@ _AB_FOLDIN_SQL = f"""
     )
     SELECT user_id,
            CAST(count(*) AS BIGINT) AS n_hist,
-           round({_AB_LMD} * sum(r - bn)
-                 / ({_AB_ALPHA} + {_AB_LMD} * count(*)), 6) AS ub
+           round({DEFAULT_LMD} * sum(r - bn)
+                 / ({DEFAULT_ALPHA} + {DEFAULT_LMD} * count(*)), 6) AS ub
     FROM hm GROUP BY user_id
 """
 
@@ -510,79 +509,11 @@ def e_ab_foldin_bias_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return hm.groupBy("user_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_hist"),
         F.round(
-            F.lit(_AB_LMD)
+            F.lit(DEFAULT_LMD)
             * F.sum(F.col("r") - F.col("bn"))
-            / (F.lit(_AB_ALPHA) + F.lit(_AB_LMD) * F.count(F.lit(1))),
+            / (F.lit(DEFAULT_ALPHA) + F.lit(DEFAULT_LMD) * F.count(F.lit(1))),
             6,
         ).alias("ub"),
-    )
-
-
-def _ab_topn_blocked(
-    users_grp: DataFrame,
-    catalog: DataFrame,
-    n_rec: int,
-    bias_w: float,
-    n_blocks: int = 8,
-    n_buckets: int = 16,
-) -> DataFrame:
-    """Past-broadcast-reach serving stage for ``e_ab_simulation``: the
-    dual-model analogue of ``ml.bpr._topk_blocked``. Catalog items hash
-    into ``n_blocks`` blocks and users into ``n_buckets`` buckets; each
-    (bucket, block) tile is a cogroup whose kernel runs the identical
-    arm-selected dense scoring product (``mat @ u + bias_w·bias``) and
-    keeps the tile-local top-``n_rec`` — a superset of each user's
-    global top-``n_rec``. A row_number window merges the
-    |U|·n_blocks·n_rec candidates. Per-item scores are the same float64
-    dot products in the same order as the broadcast kernel, and the tie
-    order (score desc, item asc) matches, so results are bit-identical.
-    Tile memory is (|U|/buckets + |I|/blocks)·K floats — nothing
-    driver-side or broadcast-side grows with the catalog."""
-    import numpy as np
-    import pandas as pd
-
-    cat_rep = catalog.withColumn(
-        "__blk", F.pmod(F.col("item"), F.lit(n_blocks)).cast("int")
-    ).withColumn("__b", F.explode(F.array(*[F.lit(b) for b in range(n_buckets)])))
-    users_rep = users_grp.withColumn(
-        "__b", F.pmod(F.col("user_id"), F.lit(n_buckets)).cast("int")
-    ).withColumn("__blk", F.explode(F.array(*[F.lit(b) for b in range(n_blocks)])))
-
-    def tile(updf: pd.DataFrame, itdf: pd.DataFrame) -> pd.DataFrame:
-        if updf.empty or itdf.empty:
-            return pd.DataFrame(
-                {
-                    "user_id": pd.Series(dtype="int64"),
-                    "item": pd.Series(dtype="int64"),
-                    "score": pd.Series(dtype="float64"),
-                }
-            )
-        c_ids = itdf["item"].to_numpy()
-        c_va = np.stack([np.asarray(v, dtype=np.float64) for v in itdf["va"]])
-        c_vb = np.stack([np.asarray(v, dtype=np.float64) for v in itdf["vb"]])
-        c_ba = itdf["ba"].to_numpy(dtype=np.float64)
-        c_bb = itdf["bb"].to_numpy(dtype=np.float64)
-        out_u, out_i, out_s = [], [], []
-        for _, row in updf.iterrows():
-            u = np.asarray(row["uvec"], dtype=np.float64)
-            mat, bias = (c_va, c_ba) if row["grp"] == "A" else (c_vb, c_bb)
-            scores = mat @ u + bias_w * bias
-            order = np.lexsort((c_ids, -scores))[:n_rec]
-            out_u += [int(row["user_id"])] * len(order)
-            out_i += [int(c_ids[o]) for o in order]
-            out_s += [float(scores[o]) for o in order]
-        return pd.DataFrame({"user_id": out_u, "item": out_i, "score": out_s})
-
-    tiles = (
-        users_rep.groupBy("__b", "__blk")
-        .cogroup(cat_rep.groupBy("__b", "__blk"))
-        .applyInPandas(tile, "user_id long, item long, score double")
-    )
-    w = Window.partitionBy("user_id").orderBy(F.col("score").desc(), F.col("item"))
-    return (
-        tiles.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= n_rec)
-        .select("user_id", "item", "score", F.col("rank").cast("int").alias("rank"))
     )
 
 
@@ -601,29 +532,33 @@ def e_ab_simulation(
     item, title, score, group; ab_test.py:222-232), 20 rows per user.
 
     Spark-first re-expression: the reference's per-user Python loop
-    becomes four set-level stages — ONE genre-keyed join builds all
-    histories, ONE aggregation folds in every user's bias, ONE
-    applyInPandas group solves every user's k×k ridge system, ONE
-    bucketed GEMM scores all users against the (dimension-sized,
-    broadcast) dual-model catalog. Nothing iterates per user on the
-    driver; past ``catalog_broadcast_threshold`` rows the scoring stage
-    swaps to ``_ab_topn_blocked`` (the coded tile cogroup above —
-    bit-identical results, nothing catalog-sized collected or
-    broadcast). The two 'loaded models'
-    (ab_test.py:73-86 .npy files) are deterministic constructions over
-    the embeddings table — arm A and arm B differ in factor lookup and
-    bias formula, like the reference's 25-iter vs 30-iter+genre
-    checkpoints. Rows-only: the per-user Cholesky ridge solves are not
+    becomes three set-level stages — ONE genre-keyed join builds all
+    histories; ONE bucketed applyInPandas folds every user into their
+    arm's model, each user being the zero-prior bias-ALS update
+    (``als.bias_ridge_step`` at u_prev = 0, the step ``ml.foldin`` and
+    the ALS half-sweeps call: M11 bias and M12 ridge solve together);
+    ONE bucketed GEMM per arm (``bpr.rank_top_k``) scores its users
+    against the (dimension-sized, broadcast) dual-model catalog.
+    Nothing iterates per user on the driver; past
+    ``catalog_broadcast_threshold`` rows the scoring stage swaps to one
+    ``bpr._topk_blocked`` tile cogroup per arm, unioned (bit-identical
+    results, nothing catalog-sized collected or broadcast). The two
+    'loaded models' (ab_test.py:73-86 .npy files) are deterministic
+    constructions over the embeddings table — arm A and arm B differ in
+    factor lookup and bias formula, like the reference's 25-iter vs
+    30-iter+genre checkpoints. Rows-only: the per-user Cholesky ridge solves are not
     SQL-expressible — but the population and fold-in-bias sub-frames
     ARE value-hashed via the e_ab_arm_sizes_hash /
     e_ab_foldin_bias_hash twins (md5-uniform simulation)."""
     import numpy as np
     import pandas as pd
 
+    from recommender_systems_spark.ml.als import bias_ridge_step, bucketed
+    from recommender_systems_spark.ml.bpr import _topk_blocked, rank_top_k
     from recommender_systems_spark.queries.genre import _parts_with_genres
-    from recommender_systems_spark.queries.ml import ALPHA, EMB_MOD, LMD, TAU
+    from recommender_systems_spark.queries.ml import EMB_MOD
 
-    K, N_REC, MIN_RATERS, BIAS_W = 8, 20, _AB_MIN_RATERS, 0.05
+    K, N_REC, MIN_RATERS, BIAS_W, N_BUCKETS = 8, 20, _AB_MIN_RATERS, 0.05, 16
 
     # --- simulate users (ab_test.py:87-97) on md5 uniforms — shared
     # with the oracle-backed e_ab_arm_sizes_hash / e_ab_foldin_bias_hash
@@ -707,50 +642,46 @@ def e_ab_simulation(
     # genre-constrained draw, made deterministic via md5 order) ---------
     hist = _ab_hist(users, parts_g)
 
-    # --- fold-in: M11 bias for every user in one aggregation, M12 ridge
-    # solve for every user in one applyInPandas pass --------------------
+    # --- fold-in: every user's zero-prior bias-ALS step over its arm's
+    # model (d = r − b_n), all users in ONE bucketed applyInPandas -------
+    is_a = F.col("grp") == "A"
     hm = (
         hist.join(F.broadcast(users.select("user_id", "grp")), "user_id")
         .join(F.broadcast(catalog), "item")
         .select(
             "user_id",
-            "r",
-            F.when(F.col("grp") == "A", F.col("va")).otherwise(F.col("vb")).alias("v"),
-            F.when(F.col("grp") == "A", F.col("ba")).otherwise(F.col("bb")).alias("bn"),
+            "grp",
+            F.when(is_a, F.col("va")).otherwise(F.col("vb")).alias("v"),
+            (F.col("r") - F.when(is_a, F.col("ba")).otherwise(F.col("bb"))).alias("d"),
         )
-        # Two consumers (bias agg + ridge solve) sit in the ONE final action.
-        .transform(materialize, sf_dir)
-    )
-    ub = hm.groupBy("user_id").agg(
-        (
-            F.lit(LMD)
-            * F.sum(F.col("r") - F.col("bn"))
-            / (F.lit(ALPHA) + F.lit(LMD) * F.count(F.lit(1)))
-        ).alias("ub")
     )
 
-    def solve(pdf: pd.DataFrame) -> pd.DataFrame:
-        v = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-        resid = (pdf["r"] - pdf["bn"] - pdf["ub"]).to_numpy(dtype=np.float64)
-        a = LMD * (v.T @ v) + TAU * np.eye(K)
-        rhs = LMD * (v.T @ resid)
-        c = np.linalg.cholesky(a)
-        u = np.linalg.solve(c.T, np.linalg.solve(c, rhs))
-        return pd.DataFrame(
-            {"user_id": [int(pdf["user_id"].iloc[0])], "uvec": [u.tolist()]}
-        )
+    def fold_in(pdf: pd.DataFrame) -> pd.DataFrame:
+        v_all = np.stack(pdf["v"].to_numpy())
+        d_all = pdf["d"].to_numpy(dtype=np.float64)
+        grp = pdf["grp"].to_numpy()
+        out_u, out_g, out_v = [], [], []
+        for uid, idx in pdf.groupby("user_id", sort=False).indices.items():
+            v, d = v_all[idx], d_all[idx]
+            _, u = bias_ridge_step(
+                v.T @ v, v.T @ d, v.sum(axis=0), d.sum(), len(d), np.zeros(K),
+                DEFAULT_LMD, DEFAULT_TAU, DEFAULT_ALPHA,
+            )
+            out_u.append(int(uid))
+            out_g.append(grp[idx[0]])
+            out_v.append(u.tolist())
+        return pd.DataFrame({"user_id": out_u, "grp": out_g, "uvec": out_v})
 
-    uvecs = (
-        hm.join(ub, "user_id")
-        .groupBy("user_id")
-        .applyInPandas(solve, "user_id long, uvec array<double>")
+    ug = (
+        hm.withColumn("__b", F.pmod(F.col("user_id"), F.lit(N_BUCKETS)))
+        .groupBy("__b")
+        .applyInPandas(fold_in, "user_id long, grp string, uvec array<double>")
     )
 
     # --- top-20 per user against the dual-model catalog (M13): bucketed
     # GEMM with the catalog broadcast while it is dimension-sized; past
     # the threshold, the blocked tile cogroup (nothing catalog-sized
-    # ever reaches the driver) ------------------------------------------
-    ug = uvecs.join(F.broadcast(users.select("user_id", "grp")), "user_id")
+    # ever reaches the driver). Either way one rank_top_k call per arm.
     # The catalog is the part dimension minus inner-join pruning, so the
     # part row count is a cheap upper bound: conservative in the safe
     # direction (switches to the blocked path no later than the exact
@@ -759,9 +690,33 @@ def e_ab_simulation(
     # trip per run.
     from recommender_systems_spark.io import table_rows
 
+    arm_cols = (("A", "va", "ba"), ("B", "vb", "bb"))
     n_items_bound = table_rows(sf_dir, "part")
     if n_items_bound > catalog_broadcast_threshold:
-        recs = _ab_topn_blocked(ug, catalog, N_REC, BIAS_W)
+        # Both arms' tile jobs read the fold-in frame: build it once.
+        ug = materialize_now(ug)
+        arm_recs = [
+            _topk_blocked(
+                ug.filter(F.col("grp") == arm).select(
+                    F.col("user_id").alias("id"), F.col("uvec").alias("features")
+                ),
+                catalog.select(
+                    F.col("item").alias("id"),
+                    F.col(vcol).alias("features"),
+                    F.col(bcol).alias("bias"),
+                ),
+                N_REC,
+                8,
+                bias_w=BIAS_W,
+            )
+            for arm, vcol, bcol in arm_cols
+        ]
+        recs = arm_recs[0].unionByName(arm_recs[1]).select(
+            F.col("u").alias("user_id"),
+            F.col("i").alias("item"),
+            "score",
+            F.col("rnk").alias("rank"),
+        )
         return _ab_log(spark, sf_dir, recs, users)
 
     # Driver-side model blocks memoized per catalog artifact (keyed by
@@ -775,38 +730,42 @@ def e_ab_simulation(
     if blocks is None:
         cat_rows = catalog.collect()
         ids = np.array([r["item"] for r in cat_rows], dtype=np.int64)
-        mva = np.stack([np.asarray(r["va"], dtype=np.float64) for r in cat_rows])
-        mvb = np.stack([np.asarray(r["vb"], dtype=np.float64) for r in cat_rows])
-        vba = np.array([r["ba"] for r in cat_rows], dtype=np.float64)
-        vbb = np.array([r["bb"] for r in cat_rows], dtype=np.float64)
-        blocks = (ids, mva, vba, mvb, vbb)
+        blocks = {
+            arm: (
+                np.stack([np.asarray(r[vcol], dtype=np.float64) for r in cat_rows]),
+                np.array([r[bcol] for r in cat_rows], dtype=np.float64),
+                ids,
+            )
+            for arm, vcol, bcol in arm_cols
+        }
         _AB_CAT_BLOCKS.clear()  # hold one catalog at a time
         _AB_CAT_BLOCKS[cat_dir] = blocks
     bc = spark.sparkContext.broadcast(blocks)
 
     def topn(pdf: pd.DataFrame) -> pd.DataFrame:
-        c_ids, c_va, c_ba, c_vb, c_bb = bc.value
-        out_u, out_i, out_s, out_r = [], [], [], []
-        for _, row in pdf.iterrows():
-            u = np.asarray(row["uvec"], dtype=np.float64)
-            mat, bias = (c_va, c_ba) if row["grp"] == "A" else (c_vb, c_bb)
-            scores = mat @ u + BIAS_W * bias
-            order = np.lexsort((c_ids, -scores))[:N_REC]
-            out_u += [int(row["user_id"])] * len(order)
-            out_i += [int(c_ids[o]) for o in order]
-            out_s += [float(scores[o]) for o in order]
-            out_r += list(range(1, len(order) + 1))
-        return pd.DataFrame(
-            {"user_id": out_u, "item": out_i, "score": out_s, "rank": out_r}
-        )
-
-    from recommender_systems_spark.ml.als import bucketed
+        out = []
+        for arm, (mat, bias, c_ids) in bc.value.items():
+            sel = pdf[pdf["grp"] == arm]
+            rows, items, scores, ranks = rank_top_k(
+                sel["uvec"], mat, c_ids, N_REC, bias, BIAS_W
+            )
+            out.append(
+                pd.DataFrame(
+                    {
+                        "user_id": sel["user_id"].to_numpy()[rows],
+                        "item": items,
+                        "score": scores,
+                        "rank": ranks,
+                    }
+                )
+            )
+        return pd.concat(out, ignore_index=True)
 
     recs = (
         bucketed(
-            ug.withColumn("__b", F.pmod(F.col("user_id"), F.lit(16))),
+            ug.withColumn("__b", F.pmod(F.col("user_id"), F.lit(N_BUCKETS))),
             "__b",
-            16,
+            N_BUCKETS,
         )
         .groupBy("__b")
         .applyInPandas(topn, "user_id long, item long, score double, rank int")

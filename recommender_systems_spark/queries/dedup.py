@@ -362,10 +362,7 @@ def _cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     # with the driver PID (concurrent runs over the same corpus must
     # not clobber each other's round state) and removed when the loop
     # finishes. Small corpora keep the in-memory path.
-    big = (
-        table_rows(sf_dir, "documents") > CC_RELIABLE_ROWS
-        or os.environ.get("SPARK_GRAFT_CC_RELIABLE") == "1"
-    )
+    big = table_rows(sf_dir, "documents") > CC_RELIABLE_ROWS
     # The near-pair list is the persisted OUTPUT of the detection
     # stage (deterministic in the corpus): clustering consumes the
     # table, it does not re-run detection — so it goes to parquet once

@@ -26,10 +26,11 @@ from pyspark.sql import functions as F
 
 from recommender_systems_spark.functions.vector import dot_product
 from recommender_systems_spark.io import materialize, table_rows
+from recommender_systems_spark.ml.als import DEFAULT_ALPHA as ALPHA
+from recommender_systems_spark.ml.als import DEFAULT_LMD as LMD
+from recommender_systems_spark.ml.als import DEFAULT_TAU as TAU
 from recommender_systems_spark.registry import _t, register
 
-# Reference hyperparameters (prac_1.py:35-39).
-LMD, TAU, ALPHA = 0.1, 0.01, 0.01
 EMB_MOD = 500  # embeddings rows at sf0.01; modular join key for factors
 
 # Deterministic bias formulas — same IEEE ops in both engines.

@@ -145,6 +145,35 @@ def test_checkpoints_go_through_io_materialize():
     assert not offenders, offenders
 
 
+def test_solves_and_ranks_go_through_the_kernels():
+    """Every normal-equation solve goes through ml/als.spd_solve and
+    every (score desc, id asc) top-k through ml/bpr.rank_top_k: no other
+    code may reference np.linalg.cholesky, np.linalg.solve or np.lexsort."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "recommender_systems_spark"
+    banned = {"np.linalg.cholesky", "np.linalg.solve", "np.lexsort"}
+    kernels = {("ml/als.py", "spd_solve"), ("ml/bpr.py", "rank_top_k")}
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        tree = ast.parse(path.read_text(encoding="utf-8"))
+        allowed = [
+            range(node.lineno, node.end_lineno + 1)
+            for node in ast.walk(tree)
+            if isinstance(node, ast.FunctionDef) and (rel, node.name) in kernels
+        ]
+        offenders += [
+            f"{rel}:{node.lineno}"
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Attribute)
+            and ast.unparse(node) in banned
+            and not any(node.lineno in r for r in allowed)
+        ]
+    assert not offenders, offenders
+
+
 def test_pydaemon_rereads_only_changed_archives(tmp_path, monkeypatch):
     """The worker daemon's rule, without Spark: invalidating an
     unchanged archive re-reads nothing; after the archive is rewritten,

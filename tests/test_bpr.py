@@ -137,6 +137,27 @@ def test_sync_every_one_is_unbatched_schedule(spark):
     assert a == b
 
 
+def test_rank_top_k_ties_break_by_id():
+    """The one top-k kernel: score desc, then item id asc on equal
+    scores (whatever the catalog order), with the optional bias blend
+    in the score."""
+    import numpy as np
+
+    from recommender_systems_spark.ml.bpr import rank_top_k
+
+    item_ids = np.array([40, 10, 30, 20, 50], dtype=np.int64)
+    items = np.array([[1.0, 0.0], [1.0, 0.0], [0.0, 1.0], [1.0, 0.0], [0.0, 1.0]])
+    rows, ids, scores, ranks = rank_top_k([[2.0, 1.0], [1.0, 1.0]], items, item_ids, 4)
+    assert rows.tolist() == [0, 0, 0, 0, 1, 1, 1, 1]
+    assert ids.tolist() == [10, 20, 40, 30, 10, 20, 30, 40]
+    assert scores.tolist() == [2.0, 2.0, 2.0, 1.0, 1.0, 1.0, 1.0, 1.0]
+    assert ranks.tolist() == [1, 2, 3, 4, 1, 2, 3, 4]
+    bias = np.array([0.0, 0.0, 40.0, 0.0, 40.0])
+    _, ids, scores, _ = rank_top_k([[2.0, 1.0]], items, item_ids, 3, bias, 0.05)
+    assert ids.tolist() == [30, 50, 10]
+    assert scores.tolist() == [3.0, 3.0, 2.0]
+
+
 def test_precision_recall_blocked_matches(spark):
     """_topk_blocked: blocked-GEMM scoring + window merge must equal
     the broadcast GEMM for every k in a multi-k sweep."""

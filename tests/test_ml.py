@@ -124,7 +124,11 @@ def test_fold_in_vector_solves_normal_equations(spark):
 def test_fused_fold_in_matches_two_step(spark):
     """Round-13 fusion: the single-action fold_in_bias_and_trait_vector
     must agree with the separate M11 bias + M12 trait-vector path on
-    the same history (bias exactly; vector to fp-association slack)."""
+    the same history (bias exactly; vector to fp-association slack).
+    And fold-in IS the bias-ALS update at a zero prior vector: the
+    history's user, given a zero self vector, gets the same bias and
+    vector from one als_half_sweep (next to a trained user 1)."""
+    from recommender_systems_spark.ml.als import als_half_sweep
     from recommender_systems_spark.ml.foldin import (
         fold_in_bias,
         fold_in_bias_and_trait_vector,
@@ -150,6 +154,23 @@ def test_fused_fold_in_matches_two_step(spark):
     assert n == 3
     assert ub == pytest.approx(ub_ref, abs=1e-12)
     np.testing.assert_allclose(u, u_ref, atol=1e-12)
+
+    ratings = spark.createDataFrame(
+        [(0, 1, 7.0), (0, 2, 9.0), (0, 3, 4.0), (1, 1, 2.0), (1, 3, 5.0)],
+        "u long, i long, r double",
+    )
+    users = spark.createDataFrame(
+        [(0, [0.0, 0.0], 0.0), (1, [0.3, -0.7], 0.4)],
+        "id long, features array<double>, bias double",
+    )
+    row = {
+        r["id"]: r
+        for r in als_half_sweep(
+            ratings, "u", "i", "r", users, factors, LMD, TAU, ALPHA
+        ).collect()
+    }[0]
+    assert row["bias"] == pytest.approx(ub, abs=1e-12)
+    np.testing.assert_allclose(row["features"], u, atol=1e-12)
 
 
 def test_top_n_recommendations_scoring_and_exclusion(spark):
