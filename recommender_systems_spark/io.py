@@ -17,6 +17,8 @@ calls ``localCheckpoint``.
 from __future__ import annotations
 
 import os
+import threading
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -296,7 +298,7 @@ def cache_ready(path: str) -> bool:
     return os.path.exists(os.path.join(path, "_SUCCESS"))
 
 
-_ROW_COUNT_CACHE: dict[str, int] = {}
+_ROW_COUNT_CACHE: dict[tuple[str, str], tuple[tuple, int]] = {}
 
 
 # Past this many lineitem rows (about sf0.83) a checkpoint is written
@@ -349,25 +351,7 @@ def scan_splits(sf_dir: str, name: str) -> int:
     with one row group is ONE task no matter how the byte range is
     sliced — the sf0.1 tables are all single-file single-row-group, so
     every scan stage is serial at any core count (round-14 census)."""
-    path = f"{sf_dir}/{name}.parquet"
-    try:
-        st = os.stat(path)
-        key = f"rg|{path}|{st.st_size}|{st.st_mtime_ns}"
-    except OSError:
-        key = f"rg|{path}"
-    if key not in _ROW_COUNT_CACHE:
-        import pyarrow.parquet as pq
-
-        if os.path.isdir(path):
-            n = sum(
-                pq.ParquetFile(os.path.join(path, f)).metadata.num_row_groups
-                for f in os.listdir(path)
-                if f.endswith(".parquet")
-            )
-        else:
-            n = pq.ParquetFile(path).metadata.num_row_groups
-        _ROW_COUNT_CACHE[key] = n
-    return _ROW_COUNT_CACHE[key]
+    return _footer_sum(f"{sf_dir}/{name}.parquet", "num_row_groups")
 
 
 def spread_scan(df, sf_dir: str, table: str):
@@ -390,31 +374,79 @@ def spread_scan(df, sf_dir: str, table: str):
 def table_rows(sf_dir: str, name: str) -> int:
     """Row count of a driver parquet table from footer METADATA — a
     driver-local pyarrow read, zero Spark jobs. Memoized per file
-    identity (path+size+mtime): the adaptive-LSH capacity ladders
+    identity (``file_stamps``): the adaptive-LSH capacity ladders
     (``similarity.ann.adaptive_bits``, ``dedup.minhash.simhash_n_tables``)
     need only this scalar, and an eager ``df.count()`` per query was a
     measured fixed-overhead regression (VERDICT r10 #2). At 100 TB the
     same scalar comes from the table catalog / manifest statistics —
     never from a full scan."""
-    path = f"{sf_dir}/{name}.parquet"
-    try:
+    return parquet_rows(f"{sf_dir}/{name}.parquet")
+
+
+def parquet_rows(path: str) -> int:
+    """Row count of the parquet file or directory at ``path`` from its
+    footers, as ``table_rows``."""
+    return _footer_sum(path, "num_rows")
+
+
+def file_stamps(path: str) -> tuple[tuple[str, int, int], ...]:
+    """``(name, st_size, st_mtime_ns)`` of each data file of ``path``: the
+    file itself, or a directory's entries that Spark reads (not ``_`` or
+    ``.`` prefixed). A Spark overwrite writes part files under new names,
+    so any rewrite changes the stamps. Raises ``OSError`` when ``path`` is
+    not a local file or directory."""
+    if not os.path.isdir(path):
         st = os.stat(path)
-        key = f"{path}|{st.st_size}|{st.st_mtime_ns}"
-    except OSError:
-        key = path
-    if key not in _ROW_COUNT_CACHE:
+        return ((os.path.basename(path), st.st_size, st.st_mtime_ns),)
+    out = []
+    for f in sorted(os.listdir(path)):
+        if not f.startswith(("_", ".")):
+            st = os.stat(os.path.join(path, f))
+            out.append((f, st.st_size, st.st_mtime_ns))
+    return tuple(out)
+
+
+def _footer_sum(path: str, field: str) -> int:
+    """Sum of one parquet footer field over ``path``'s files, memoized per
+    path while its ``file_stamps`` hold (a rewrite replaces the entry)."""
+    stamps = file_stamps(path)
+    held = _ROW_COUNT_CACHE.get((field, path))
+    if held is None or held[0] != stamps:
         import pyarrow.parquet as pq
 
-        if os.path.isdir(path):
-            n = sum(
-                pq.ParquetFile(os.path.join(path, f)).metadata.num_rows
-                for f in os.listdir(path)
-                if f.endswith(".parquet")
-            )
-        else:
-            n = pq.ParquetFile(path).metadata.num_rows
-        _ROW_COUNT_CACHE[key] = n
-    return _ROW_COUNT_CACHE[key]
+        files = (
+            [os.path.join(path, f) for f, _, _ in stamps if f.endswith(".parquet")]
+            if os.path.isdir(path)
+            else [path]
+        )
+        held = (stamps, sum(getattr(pq.ParquetFile(f).metadata, field) for f in files))
+        _ROW_COUNT_CACHE[(field, path)] = held
+    return held[1]
+
+
+class PathMemo:
+    """One driver-side value built from the files at one path — a loaded
+    model — reused while the path's ``file_stamps`` are unchanged and
+    rebuilt once they change, so a rewrite of the path needs no manual
+    invalidation. Holds one path's value at a time; a path that is not
+    a local file or directory raises ``OSError``."""
+
+    def __init__(self) -> None:
+        self._lock = threading.Lock()
+        self._key: tuple | None = None
+        self._value = None
+
+    def get(self, path: str, build):
+        """The value for ``path``'s current files; ``build()`` makes it.
+        The stamps are read before the build, so files that change
+        during it are seen as changed on the next call."""
+        key = (path, file_stamps(path))
+        with self._lock:
+            if self._key != key:
+                self._key, self._value = None, None
+                self._value = build()
+                self._key = key
+            return self._value
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -519,6 +551,20 @@ def write_factors(df: DataFrame, path: str) -> None:
     df.write.mode("overwrite").parquet(path)
 
 
+# Each frame ``read_factors`` returned, mapped to the path it read.
+_FACTOR_PATHS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
 def read_factors(spark: SparkSession, path: str) -> DataFrame:
-    """S6: model-state source (ab_test.py:72-85 ``np.load``)."""
-    return spark.read.parquet(path)
+    """S6: model-state source (ab_test.py:72-85 ``np.load``). The frame's
+    path is recorded (``factors_path``), so serving can hold the model
+    on the driver (``ml.foldin``)."""
+    df = spark.read.parquet(path)
+    _FACTOR_PATHS[df] = path
+    return df
+
+
+def factors_path(df: DataFrame) -> str | None:
+    """The path ``read_factors`` read ``df`` from; None for any other
+    frame, a frame derived from one included."""
+    return _FACTOR_PATHS.get(df)

@@ -43,6 +43,13 @@ from recommender_systems_spark.ml.als import bucketed, init_factors
 POOL_SIZE = 1024
 ATTEMPTS = 4
 
+# Catalogs up to this many items are held whole on the driver and
+# broadcast (about 150 B per item at K = 8 with two factor sets and two
+# biases: ~75 MB here): BPR's eval, the A/B serving run and the
+# ``ml.foldin`` serving snapshot. Past it each keeps its blocked or Spark
+# path, which collects and broadcasts nothing catalog-sized.
+CATALOG_BROADCAST_THRESHOLD = 500_000
+
 
 def popularity_pool_distributed(
     positives: DataFrame, item_col: str, size: int, seed: int
@@ -339,7 +346,7 @@ def train_bpr(
     eval_k: int | None = None,
     eval_every_epoch: bool = True,
     eval_user_count: int | None = None,
-    catalog_broadcast_threshold: int = 1_000_000,
+    catalog_broadcast_threshold: int = CATALOG_BROADCAST_THRESHOLD,
     eval_block_size: int = 200_000,
     sync_every: int = 1,
 ) -> BprModel:

@@ -10,23 +10,38 @@ model without retraining. Three stages:
    solve u = (λΣv vᵀ + τI)⁻¹ λΣ(r − b_n − b_u)v over the history.
    M11+M12 together are ONE bias-ALS user update with a zero prior
    vector: ``fold_in_bias_and_trait_vector`` feeds the history's sums
-   to ``als.bias_ridge_step`` at u_prev = 0, the same function every
-   ALS half-sweep calls. k=12 ⇒ the k×k system is solved on the driver
-   (SURVEY: correct design, not a cop-out); the Σ assembly is
-   distributed.
+   (``history_partial``) to ``als.bias_ridge_step`` at u_prev = 0, the
+   same function every ALS half-sweep calls. k=12 ⇒ the k×k system is
+   solved on the driver (SURVEY: correct design, not a cop-out).
 3. M13 ``top_n_recommendations`` (functions.py:599-647): score the full
    catalogue u·v_n + 0.05·b_n, drop rarely-rated items (P6/P7), top-N.
+
+Serving snapshot: the model does not change between requests, so a
+factor frame that ``io.read_factors`` returned, of at most
+``bpr.CATALOG_BROADCAST_THRESHOLD`` rows (parquet footers, no Spark
+job), is served from a driver-side copy — sorted ids, V and b — held
+per path and file stamps (``io.PathMemo``, one model at a time) with
+the per-item rater counts of the last ``ratings`` frame. A request then
+collects only its history: the sums come from ``history_partial``, the
+solve from ``bias_ridge_step``, the ranking from ``bpr.rank_top_k``,
+and the top-N returns as a local frame. Every other frame — derived
+factor frames and larger catalogs — keeps the distributed path.
 """
 
 from __future__ import annotations
 
 import math
+import weakref
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from recommender_systems_spark import io
 from recommender_systems_spark.functions.vector import dot_product
+from recommender_systems_spark.ml import bpr
 from recommender_systems_spark.ml.als import (
     DEFAULT_ALPHA,
     DEFAULT_LMD,
@@ -62,6 +77,31 @@ def fold_in_bias(
     )
 
 
+def history_partial(v: np.ndarray, d: np.ndarray) -> np.ndarray:
+    """The additive partial of ``als.bias_ridge_step``'s sums over
+    history rows v with d = r − b_n, flat: VᵀV, Vᵀd, Σv, Σd, n
+    (k²+2k+2 doubles; inner products in BLAS)."""
+    return np.concatenate(
+        [(v.T @ v).ravel(), v.T @ d, v.sum(axis=0), [d.sum(), len(d)]]
+    )
+
+
+def _split_sums(
+    total: np.ndarray,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, float, int]:
+    """(VᵀV, Vᵀd, Σv, Σd, n) from a summed ``history_partial``; k is read
+    back from its length, (k + 1)² + 1."""
+    k = math.isqrt(len(total) - 1) - 1
+    k2 = k * k
+    return (
+        total[:k2].reshape(k, k),
+        total[k2 : k2 + k],
+        total[k2 + k : k2 + 2 * k],
+        float(total[-2]),
+        int(total[-1]),
+    )
+
+
 def _history_sums(
     history: DataFrame,
     item_col: str,
@@ -69,11 +109,14 @@ def _history_sums(
     item_factors: DataFrame,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, float, int]:
     """The sums ``als.bias_ridge_step`` takes, over one user's history
-    with d = r − b_n: (VᵀV, Vᵀd, Σv, Σd, |hist|). ONE history⋈factors
-    pass whose per-partition NumPy partials (mapInPandas) carry
-    k²+2k+2 doubles each, so driver traffic is independent of history
-    size and the inner products are BLAS, not per-element expressions;
-    k is read back from the partial's length."""
+    with d = r − b_n: (VᵀV, Vᵀd, Σv, Σd, |hist|). Served from the
+    factor snapshot when there is one; otherwise ONE history⋈factors
+    pass whose per-partition ``history_partial`` sums (mapInPandas)
+    reach the driver, so driver traffic is independent of history
+    size."""
+    snap = _snapshot(item_factors)
+    if snap is not None:
+        return snap.history_sums(history, item_col, rating_col)
     joined = history.join(
         item_factors.select(
             F.col("id").alias(item_col),
@@ -93,10 +136,8 @@ def _history_sums(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            v = np.stack(pdf["v"].to_numpy())
-            d = pdf["d"].to_numpy(dtype=np.float64)
-            p = np.concatenate(
-                [(v.T @ v).ravel(), v.T @ d, v.sum(axis=0), [d.sum(), len(d)]]
+            p = history_partial(
+                np.stack(pdf["v"].to_numpy()), pdf["d"].to_numpy(dtype=np.float64)
             )
             total = p if total is None else total + p
         if total is not None:
@@ -105,16 +146,90 @@ def _history_sums(
     parts = joined.mapInPandas(partials, schema="p array<double>").collect()
     if not parts:
         raise ValueError("empty history")
-    total = np.sum([np.asarray(r["p"]) for r in parts], axis=0)
-    k = math.isqrt(len(total) - 1) - 1  # len = (k + 1)² + 1
-    k2 = k * k
-    return (
-        total[:k2].reshape(k, k),
-        total[k2 : k2 + k],
-        total[k2 + k : k2 + 2 * k],
-        float(total[-2]),
-        int(total[-1]),
-    )
+    return _split_sums(np.sum([np.asarray(r["p"]) for r in parts], axis=0))
+
+
+class _Snapshot:
+    """A factor model held on the driver: ids sorted ascending (unique),
+    V and b in the same order, and the catalog that passed the last
+    rater cut."""
+
+    def __init__(self, ids: np.ndarray, mat: np.ndarray, bias: np.ndarray) -> None:
+        self.ids, self.mat, self.bias = ids, mat, bias
+        self._cut: tuple = (None, None)  # (key, (ids, V, b)), swapped whole
+
+    def rows(self, ids: np.ndarray) -> np.ndarray:
+        """Snapshot row of each id, −1 where the model has no such item."""
+        pos = np.searchsorted(self.ids, ids).clip(max=len(self.ids) - 1)
+        return np.where(self.ids[pos] == ids, pos, -1)
+
+    def history_sums(self, history: DataFrame, item_col: str, rating_col: str):
+        """``_history_sums`` from ONE collect of the history; rows whose
+        item the model lacks drop out, as in the join."""
+        hist = [
+            (r[0], r[1])
+            for r in history.select(item_col, rating_col).collect()
+            if r[0] is not None
+        ]
+        pos = self.rows(np.array([i for i, _ in hist], dtype=np.int64))
+        hit = pos >= 0
+        if not hit.any():
+            raise ValueError("empty history")
+        rating = np.array([r for _, r in hist], dtype=np.float64)[hit]
+        return _split_sums(
+            history_partial(self.mat[pos[hit]], rating - self.bias[pos[hit]])
+        )
+
+    def kept(self, ratings: DataFrame, item_col: str, limit: int):
+        """(ids, V, b) of the items not rated by fewer than ``limit`` users
+        of ``ratings`` (items it never rates stay, as in the anti-join).
+        Kept per ``ratings`` frame identity, item column and limit."""
+        key = (weakref.ref(ratings), item_col, limit)
+        held_key, held = self._cut
+        if held_key != key:
+            counts = [
+                (r[0], r[1])
+                for r in ratings.groupBy(item_col).count().collect()
+                if r[0] is not None
+            ]
+            pos = self.rows(np.array([i for i, _ in counts], dtype=np.int64))
+            n = np.array([c for _, c in counts], dtype=np.int64)
+            keep = np.ones(len(self.ids), dtype=bool)
+            keep[pos[(pos >= 0) & (n < limit)]] = False
+            held = (self.ids[keep], self.mat[keep], self.bias[keep])
+            self._cut = (key, held)
+        return held
+
+
+_SNAPSHOTS = io.PathMemo()
+
+
+def _snapshot(item_factors: DataFrame) -> _Snapshot | None:
+    """The driver-side snapshot serving ``item_factors``, or None when
+    the frame keeps the Spark path: it did not come from
+    ``io.read_factors``, its path is not local, its footers count more
+    than ``bpr.CATALOG_BROADCAST_THRESHOLD`` rows, or its ids repeat."""
+    path = io.factors_path(item_factors)
+    if path is None:
+        return None
+
+    def build() -> _Snapshot | None:
+        pdf = item_factors.select("id", "features", "bias").toPandas().sort_values("id")
+        ids = pdf["id"].to_numpy(dtype=np.int64)
+        if len(ids) == 0 or (np.diff(ids) == 0).any():
+            return None
+        return _Snapshot(
+            ids,
+            np.stack(pdf["features"].to_numpy()).astype(np.float64),
+            pdf["bias"].to_numpy(dtype=np.float64),
+        )
+
+    try:
+        if io.parquet_rows(path) > bpr.CATALOG_BROADCAST_THRESHOLD:
+            return None
+        return _SNAPSHOTS.get(path, build)
+    except OSError:
+        return None
 
 
 def fold_in_trait_vector(
@@ -143,10 +258,11 @@ def fold_in_bias_and_trait_vector(
     tau: float = DEFAULT_TAU,
     dim: int = 12,
 ) -> tuple[float, int, np.ndarray]:
-    """Fused M11+M12 in ONE Spark action: the history's sums
-    (``_history_sums``) go through ``als.bias_ridge_step`` with a zero
-    prior vector — the bias-ALS user update a trained user gets, for a
-    user the model has never seen (b_u = λΣ(r−b_n)/(α+λ|hist|), then
+    """Fused M11+M12 in ONE Spark action (from the factor snapshot, the
+    history's collect): the history's sums (``_history_sums``) go
+    through ``als.bias_ridge_step`` with a zero prior vector — the
+    bias-ALS user update a trained user gets, for a user the model has
+    never seen (b_u = λΣ(r−b_n)/(α+λ|hist|), then
     the ridge solve on λ(Σ(r−b_n)v − b_u·Σv)). Equal to that user's
     ``als_half_sweep`` row with a zero self vector to fp-association
     slack. Returns (user_bias, n_history, vector)."""
@@ -168,8 +284,34 @@ def top_n_recommendations(
 ) -> DataFrame:
     """M13+P6+P7+W3: score = u·v_n + 0.05·b_n over the full catalogue,
     exclude items rated by fewer than ``remove_items_limit`` users, top-N
-    (functions.py:599-647). The user vector is a literal array column
-    (broadcast by value); top-N is TakeOrderedAndProject."""
+    by (score desc, id asc) (functions.py:599-647).
+
+    From the factor snapshot (module docstring): ``bpr.rank_top_k`` over
+    the items past the cut (the rater counts are one Spark aggregate per
+    model and ``ratings`` frame), returned as a local frame, so
+    collecting it runs no Spark job. Otherwise the user vector is a
+    literal array column, the cut a left-anti join against
+    ``ratings.groupBy(item_col).count()``, and the top-N a
+    TakeOrderedAndProject.
+
+    Known limit: ``rank_top_k`` scores with BLAS, whose last bits differ
+    from ``dot_product``'s sequential fold, so items whose scores tie
+    exactly (or nearly) can come out in a different order on the two
+    paths. A sequential k-loop in NumPy matches the fold bit for bit but
+    is far slower than the GEMM; that cost decision is open (ROADMAP
+    direction 3)."""
+    snap = _snapshot(item_factors)
+    if snap is not None:
+        ids, mat, bias = snap.kept(ratings, item_col, remove_items_limit)
+        _, top, scores, _ = bpr.rank_top_k(
+            [np.asarray(user_vector, dtype=np.float64)], mat, ids, n, bias, bias_weight
+        )
+        schema = T.StructType(
+            [T.StructField(item_col, T.LongType()), T.StructField("score", T.DoubleType())]
+        )
+        return item_factors.sparkSession.createDataFrame(
+            pd.DataFrame({item_col: top, "score": scores}), schema
+        )
     uv = F.array(*[F.lit(float(x)) for x in np.asarray(user_vector)])
     scored = item_factors.select(
         F.col("id").alias(item_col),

@@ -14,8 +14,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from recommender_systems_spark.io import materialize, materialize_now
+from recommender_systems_spark.io import PathMemo, materialize, materialize_now
 from recommender_systems_spark.ml.als import DEFAULT_ALPHA, DEFAULT_LMD, DEFAULT_TAU
+from recommender_systems_spark.ml.bpr import CATALOG_BROADCAST_THRESHOLD
 from recommender_systems_spark.queries._shared import (
     GENRE_CTE as _AB_GENRE_CTE,
     GENRE_WORDS as _AB_GENRE_WORDS,
@@ -289,12 +290,6 @@ def e_boxplot_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Catalogs under this row count are broadcast to the serving kernel as one
-# dense NumPy block (item + 2·K float64 factors + 2 biases ≈ 150 B/row →
-# ~75 MB at the threshold); past it the top-N stage swaps to the blocked
-# tile shape below, which broadcasts nothing catalog-sized.
-AB_CATALOG_BROADCAST_THRESHOLD = 500_000
-
 # --- deterministic A/B simulation population (shared by e_ab_simulation
 # and its oracle-backed sub-frame twins below) ---------------------------
 _AB_G = len(_AB_GENRE_WORDS)
@@ -302,9 +297,9 @@ _AB_N_USERS = 200
 _AB_MIN_RATERS = 2
 
 
-# In-process cache of the dual-model serving blocks, keyed by the
-# content-addressed catalog dir (see e_ab_simulation).
-_AB_CAT_BLOCKS: dict[str, tuple] = {}
+# The dual-model serving blocks, held per catalog dir and its file
+# stamps (see e_ab_simulation).
+_AB_CAT_BLOCKS = PathMemo()
 
 
 def _ab_sim_users(spark: SparkSession) -> DataFrame:
@@ -521,7 +516,7 @@ def e_ab_foldin_bias_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
 def e_ab_simulation(
     spark: SparkSession,
     sf_dir: str,
-    catalog_broadcast_threshold: int = AB_CATALOG_BROADCAST_THRESHOLD,
+    catalog_broadcast_threshold: int = CATALOG_BROADCAST_THRESHOLD,
 ) -> DataFrame:
     """The reference's END-TO-END A/B serving run (ab_test.py:72-234):
     simulate users (preferred genre pair, 5-10-item history, A/B arm) →
@@ -630,12 +625,6 @@ def e_ab_simulation(
     )
     if not cache_ready(cat_dir):
         catalog.write.mode("overwrite").parquet(cat_dir)
-        # A same-process wipe+rebuild must not serve the pre-wipe NumPy
-        # blocks: the memo is keyed by path only, so invalidate it on
-        # the rebuild branch or a build-path divergence would be masked
-        # and the cold bench would omit the collect+packing cost
-        # (ADVICE r12).
-        _AB_CAT_BLOCKS.pop(cat_dir, None)
     catalog = spark.read.parquet(cat_dir)
 
     # --- all histories from ONE genre-keyed join (simulate_user's
@@ -719,18 +708,17 @@ def e_ab_simulation(
         )
         return _ab_log(spark, sf_dir, recs, users)
 
-    # Driver-side model blocks memoized per catalog artifact (keyed by
-    # the content-addressed cache dir, so data changes invalidate):
-    # the collect + NumPy packing is identical every serving run — a
+    # Driver-side model blocks memoized per catalog artifact and its
+    # file stamps, so a wipe+rebuild of the dir is a new key: the
+    # collect + NumPy packing is identical every serving run — a
     # production server holds the loaded model in memory, it does not
     # re-read the checkpoint per request. Result-deterministic in any
     # collect order: scoring is per-id and the top-N lexsort ties break
     # on the id.
-    blocks = _AB_CAT_BLOCKS.get(cat_dir)
-    if blocks is None:
+    def load_blocks():
         cat_rows = catalog.collect()
         ids = np.array([r["item"] for r in cat_rows], dtype=np.int64)
-        blocks = {
+        return {
             arm: (
                 np.stack([np.asarray(r[vcol], dtype=np.float64) for r in cat_rows]),
                 np.array([r[bcol] for r in cat_rows], dtype=np.float64),
@@ -738,8 +726,8 @@ def e_ab_simulation(
             )
             for arm, vcol, bcol in arm_cols
         }
-        _AB_CAT_BLOCKS.clear()  # hold one catalog at a time
-        _AB_CAT_BLOCKS[cat_dir] = blocks
+
+    blocks = _AB_CAT_BLOCKS.get(cat_dir, load_blocks)
     bc = spark.sparkContext.broadcast(blocks)
 
     def topn(pdf: pd.DataFrame) -> pd.DataFrame:

@@ -120,7 +120,7 @@ def test_ab_simulation_log_shape(spark):
 
 def test_ab_simulation_blocked_serving_parity(spark):
     """Forcing catalog_broadcast_threshold=0 routes the top-20 stage
-    through the blocked tile cogroup (_ab_topn_blocked); the log must be
+    through the blocked tile cogroup (_topk_blocked); the log must be
     IDENTICAL to the broadcast-kernel path — same float64 dot products,
     same (score desc, item asc) tie order, so bit-identical rows."""
     from recommender_systems_spark.queries.abtest import e_ab_simulation

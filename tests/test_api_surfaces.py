@@ -268,6 +268,34 @@ def test_local_workers_run_under_pydaemon(spark):
     )
 
 
+def test_sql_and_rdd_workers_share_one_daemon(spark):
+    """A SQL UDF worker and an RDD worker are forked by the same daemon:
+    the first RDD job of a process (reading a createDataFrame list) does
+    not start a second one."""
+
+    def probe(batches):
+        import os
+
+        import pandas as pd
+
+        for _ in batches:
+            yield pd.DataFrame({"ppid": [os.getppid()]})
+
+    sql_parents = {
+        r["ppid"]
+        for r in spark.range(4, numPartitions=4)
+        .mapInPandas(probe, "ppid long")
+        .collect()
+    }
+    rdd_parents = set(
+        spark.sparkContext.parallelize(range(4), 4)
+        .map(lambda _: __import__("os").getppid())
+        .collect()
+    )
+    assert len(sql_parents) == 1
+    assert rdd_parents == sql_parents
+
+
 def test_pydaemon_starts_outside_the_repository(tmp_path):
     """A process started elsewhere, with the package on its own sys.path
     only, still gets a working daemon on a local master."""

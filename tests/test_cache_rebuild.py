@@ -162,3 +162,30 @@ def test_gc_reaps_superseded_identity_artifact(tmp_path):
     finally:
         for p in (live, live_now):
             shutil.rmtree(p, ignore_errors=True)
+
+
+def test_path_memo_rebuilds_only_on_rewrite(tmp_path):
+    """io.PathMemo (the A/B catalog blocks and the serving snapshot)
+    reuses its value while the path's file stamps hold and rebuilds once
+    a file is rewritten or added, with no manual invalidation."""
+    from recommender_systems_spark.io import PathMemo
+
+    path = tmp_path / "model"
+    path.mkdir()
+    (path / "part-0.parquet").write_bytes(b"a")
+    (path / "_SUCCESS").write_bytes(b"")
+    memo, builds = PathMemo(), []
+
+    def build():
+        builds.append(1)
+        return len(builds)
+
+    assert memo.get(str(path), build) == 1
+    assert memo.get(str(path), build) == 1
+    (path / "part-1.parquet").write_bytes(b"bb")
+    assert memo.get(str(path), build) == 2
+    (path / "part-1.parquet").write_bytes(b"ccc")
+    assert memo.get(str(path), build) == 3
+    assert memo.get(str(path), build) == 3
+    with pytest.raises(OSError):
+        memo.get(str(tmp_path / "missing"), build)

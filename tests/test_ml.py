@@ -193,6 +193,123 @@ def test_top_n_recommendations_scoring_and_exclusion(spark):
     assert out[1]["score"] == pytest.approx(2.0 + 0.05 * 2.0)
 
 
+def _snapshot_model(spark, path, seed, n_items=60, k=4):
+    """A factor model written and read through io (so it is served from
+    the driver snapshot), random floats: no exact score ties."""
+    from recommender_systems_spark import io
+
+    rng = np.random.default_rng(seed)
+    rows = [
+        (i, rng.normal(size=k).tolist(), float(rng.normal()))
+        for i in range(1, n_items + 1)
+    ]
+    io.write_factors(
+        spark.createDataFrame(rows, "id long, features array<double>, bias double"),
+        path,
+    )
+    return io.read_factors(spark, path)
+
+
+def _serve(spark, items, ratings, history, k=4):
+    from recommender_systems_spark.ml.foldin import (
+        fold_in_bias_and_trait_vector,
+        top_n_recommendations,
+    )
+
+    hist = spark.createDataFrame(history, "i long, r double")
+    ub, n, u = fold_in_bias_and_trait_vector(hist, "i", "r", items, dim=k)
+    top = top_n_recommendations(u, items, ratings, "i", n=10, remove_items_limit=3)
+    return ub, n, u, [(r["i"], r["score"]) for r in top.collect()]
+
+
+def _snapshot_ratings(spark, n_items=60):
+    # item i rated (i % 5) times: a fifth of the catalogue is never rated
+    # (kept by the anti-join), and items with 1-2 raters fall under 3.
+    return spark.createDataFrame(
+        [(i,) for i in range(1, n_items + 1) for _ in range(i % 5)], "i long"
+    )
+
+
+_HISTORY = [(3, 7.0), (11, 2.5), (19, 9.0), (42, 5.5), (11, 4.0), (999, 8.0)]
+
+
+def test_serving_snapshot_matches_spark_path(spark, tmp_path, monkeypatch):
+    """A frame from io.read_factors is served from the driver snapshot;
+    forcing the Spark path (catalog constant 0) gives the same ids and
+    the same bias, vector and scores to 1e-12. The history repeats an
+    item and names one the model lacks."""
+    from recommender_systems_spark import io
+    from recommender_systems_spark.ml import bpr
+
+    items = _snapshot_model(spark, str(tmp_path / "f"), seed=5)
+    assert io.factors_path(items) == str(tmp_path / "f")
+    assert io.factors_path(items.select("*")) is None
+    ratings = _snapshot_ratings(spark)
+    ub, n, u, top = _serve(spark, items, ratings, _HISTORY)
+    monkeypatch.setattr(bpr, "CATALOG_BROADCAST_THRESHOLD", 0)
+    ub_s, n_s, u_s, top_s = _serve(spark, items, ratings, _HISTORY)
+    assert n == n_s == 5
+    assert [i for i, _ in top] == [i for i, _ in top_s] and len(top) == 10
+    assert all(i % 5 not in (1, 2) for i, _ in top)
+    assert ub == pytest.approx(ub_s, abs=1e-12)
+    np.testing.assert_allclose(u, u_s, rtol=0, atol=1e-12)
+    np.testing.assert_allclose(
+        [s for _, s in top], [s for _, s in top_s], rtol=0, atol=1e-12
+    )
+
+
+def test_serving_snapshot_follows_a_rewrite(spark, tmp_path):
+    """After write_factors overwrites the path, the next request serves
+    the new factors, not the held snapshot."""
+    path = str(tmp_path / "f")
+    ratings = _snapshot_ratings(spark)
+    first = _serve(spark, _snapshot_model(spark, path, seed=1), ratings, _HISTORY)
+    items = _snapshot_model(spark, path, seed=2)
+    second = _serve(spark, items, ratings, _HISTORY)
+    rows = {r["id"]: r for r in items.collect()}
+    v = np.array([rows[i]["features"] for i, _ in _HISTORY if i in rows])
+    b = np.array([rows[i]["bias"] for i, _ in _HISTORY if i in rows])
+    d = np.array([r for i, r in _HISTORY if i in rows]) - b
+    assert second[0] != first[0]
+    assert second[0] == pytest.approx(LMD * d.sum() / (ALPHA + LMD * len(d)), abs=1e-12)
+    for i, score in second[3]:
+        want = float(np.dot(rows[i]["features"], second[2]) + 0.05 * rows[i]["bias"])
+        assert score == pytest.approx(want, abs=1e-12)
+
+
+def test_serving_snapshot_job_counts(spark, tmp_path):
+    """A steady-state request (snapshot and rater cut held) runs exactly
+    one Spark job, the collect of its history; collecting the top-N
+    frame runs none."""
+    from recommender_systems_spark.ml.foldin import (
+        fold_in_bias_and_trait_vector,
+        top_n_recommendations,
+    )
+
+    sc = spark.sparkContext
+    items = _snapshot_model(spark, str(tmp_path / "f"), seed=3)
+    ratings = _snapshot_ratings(spark)
+    _serve(spark, items, ratings, _HISTORY)  # builds the snapshot and the cut
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def request():
+        hist = spark.createDataFrame(_HISTORY, "i long, r double")
+        _, _, u = fold_in_bias_and_trait_vector(hist, "i", "r", items, dim=4)
+        return top_n_recommendations(u, items, ratings, "i", n=10, remove_items_limit=3)
+
+    top, n_request = jobs("snapshot-request", request)
+    rows, n_collect = jobs("snapshot-collect", top.collect)
+    assert (n_request, n_collect) == (1, 0)
+    assert len(rows) == 10
+
+
 def test_mllib_als_wrapper(spark):
     """M2/M3 fast path smoke: MLlib blocked ALS trains and returns
     MLlib-shaped factor DataFrames."""
