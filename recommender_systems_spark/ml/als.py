@@ -43,7 +43,7 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from recommender_systems_spark.functions.vector import dot_product
@@ -105,6 +105,14 @@ def spd_solve(a_mat: np.ndarray, rhs: np.ndarray) -> np.ndarray:
         return np.linalg.solve(a_mat, rhs)
 
 
+def ridge_sums(
+    v: np.ndarray, d: np.ndarray
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, float, int]:
+    """The sums ``bias_ridge_step`` takes, over n rated rows v with
+    d = r − b_other: (VᵀV, Vᵀd, Σv, Σd, n), inner products in BLAS."""
+    return v.T @ v, v.T @ d, v.sum(axis=0), d.sum(), len(d)
+
+
 def bias_ridge_step(
     vtv: np.ndarray,
     vtd: np.ndarray,
@@ -134,6 +142,34 @@ def bias_ridge_step(
     if pull is not None:
         rhs = rhs + pull
     return float(bias), spd_solve(lmd * vtv + tau * np.eye(len(sv)), rhs)
+
+
+def bias_update(resid: Column, lmd: float, alpha: float) -> Column:
+    """``bias_ridge_step``'s bias line as one Spark aggregate expression,
+    with Σv·u_prev folded into the per-row residual (resid =
+    r − u·v − b_other): λΣresid / (α + λn). The M4 bias sweeps, the M11
+    fold-in bias (u = 0) and the A/B fold-in twin all aggregate it."""
+    return F.lit(lmd) * F.sum(resid) / (F.lit(alpha) + F.lit(lmd) * F.count(F.lit(1)))
+
+
+def bias_sweep(
+    scored: DataFrame, key: str, other: DataFrame | None = None
+) -> DataFrame:
+    """M4 half-sweep with trait vectors frozen (prac_1_bias_only.py:63-104)
+    over ``scored`` = (user, item, r, uv): the new bias of every ``key``
+    entity, ``bias_update`` of r − uv − b_other, as (key, bias).
+
+    ``other`` is the other side's (key, bias) frame, joined on its first
+    column; None means zero other-side biases. No Cholesky, no Python in
+    the plan: a join and one hash aggregation."""
+    resid = F.col("r") - F.col("uv")
+    if other is not None:
+        other_key, other_bias = other.columns
+        scored = scored.join(other, other_key)
+        resid = resid - F.col(other_bias)
+    return scored.groupBy(key).agg(
+        bias_update(resid, DEFAULT_LMD, DEFAULT_ALPHA).alias("bias")
+    )
 
 
 def _solve_bucket(
@@ -203,7 +239,7 @@ def _solve_bucket(
         d = d_all[idx]
         pull = pull_map.get(vid)
         bias, vec = bias_ridge_step(
-            v.T @ v, v.T @ d, v.sum(axis=0), d.sum(), len(d),
+            *ridge_sums(v, d),
             np.asarray(u_prev, dtype=np.float64), lmd, tau, alpha,
             None if pull is None else np.asarray(pull, dtype=np.float64),
         )
@@ -505,68 +541,6 @@ def train_als_bias(
     finally:
         prebuild.shutdown(wait=True)
     return AlsBiasModel(u_f, v_f, rmse_hist, converged)
-
-
-def train_bias_only(
-    ratings: DataFrame,
-    user_col: str,
-    item_col: str,
-    rating_col: str,
-    user_factors: DataFrame,
-    item_factors: DataFrame,
-    lmd: float = DEFAULT_LMD,
-    alpha: float = DEFAULT_ALPHA,
-    n_sweeps: int = 2,
-) -> tuple[DataFrame, DataFrame]:
-    """M4: bias-only degenerate model (prac_1_bias_only.py:63-104) —
-    trait vectors FROZEN, alternate pure bias aggregations:
-
-        b_m = λ Σ(r − u·v − b_n) / (α + λ|Ω_m|)
-
-    No Cholesky, no Python in the plan — each sweep is a join + groupBy.
-    Returns (user_factors, item_factors) with updated biases."""
-    r = ratings.select(
-        F.col(user_col).cast("long").alias("u"),
-        F.col(item_col).cast("long").alias("i"),
-        F.col(rating_col).cast("double").alias("r"),
-    )
-    uf, vf = user_factors, item_factors
-
-    def bias_sweep(side: str, other: str, self_f: DataFrame, other_f: DataFrame):
-        joined = (
-            r.join(
-                other_f.select(
-                    F.col("id").alias(other),
-                    F.col("features").alias("of"),
-                    F.col("bias").alias("ob"),
-                ),
-                other,
-            )
-            .join(
-                self_f.select(F.col("id").alias(side), F.col("features").alias("sf")),
-                side,
-            )
-            .withColumn("resid", F.col("r") - dot_product("sf", "of") - F.col("ob"))
-        )
-        agg = joined.groupBy(side).agg(
-            F.sum("resid").alias("s"), F.count(F.lit(1)).alias("n")
-        )
-        new_bias = agg.select(
-            F.col(side).alias("id"),
-            (F.lit(lmd) * F.col("s") / (F.lit(alpha) + F.lit(lmd) * F.col("n"))).alias(
-                "bias"
-            ),
-        )
-        return (
-            self_f.drop("bias")
-            .join(new_bias, "id", "left")
-            .fillna(0.0, subset=["bias"])
-        )
-
-    for _ in range(n_sweeps):
-        uf = bias_sweep("u", "i", uf, vf)
-        vf = bias_sweep("i", "u", vf, uf)
-    return uf, vf
 
 
 def mllib_als(

@@ -5,13 +5,14 @@ ab_test.py:134-186) by folding their rating history into the trained
 model without retraining. Three stages:
 
 1. M11 ``find_user_bias`` (functions.py:522-548): with u=0,
-   b_u = λ Σ(r − b_n) / (α + λ|hist|) — a single aggregation.
+   b_u = λ Σ(r − b_n) / (α + λ|hist|) — a single aggregation of
+   ``als.bias_update``, the expression the M4 bias sweeps aggregate.
 2. M12 ``find_user_trait_vector`` (functions.py:551-596): one ridge
    solve u = (λΣv vᵀ + τI)⁻¹ λΣ(r − b_n − b_u)v over the history.
    M11+M12 together are ONE bias-ALS user update with a zero prior
-   vector: ``fold_in_bias_and_trait_vector`` feeds the history's sums
-   (``history_partial``) to ``als.bias_ridge_step`` at u_prev = 0, the
-   same function every ALS half-sweep calls. k=12 ⇒ the k×k system is
+   vector: ``fold_in_bias_and_trait_vector`` feeds the history's
+   ``als.ridge_sums`` to ``als.bias_ridge_step`` at u_prev = 0, the
+   same two functions every ALS half-sweep calls. k=12 ⇒ the k×k system is
    solved on the driver (SURVEY: correct design, not a cop-out).
 3. M13 ``top_n_recommendations`` (functions.py:599-647): score the full
    catalogue u·v_n + 0.05·b_n, drop rarely-rated items (P6/P7), top-N.
@@ -22,7 +23,7 @@ factor frame that ``io.read_factors`` returned, of at most
 job), is served from a driver-side copy — sorted ids, V and b — held
 per path and file stamps (``io.PathMemo``, one model at a time) with
 the per-item rater counts of the last ``ratings`` frame. A request then
-collects only its history: the sums come from ``history_partial``, the
+collects only its history: the sums come from ``ridge_sums``, the
 solve from ``bias_ridge_step``, the ranking from ``bpr.rank_top_k``,
 and the top-N returns as a local frame. Every other frame — derived
 factor frames and larger catalogs — keeps the distributed path.
@@ -47,7 +48,8 @@ from recommender_systems_spark.ml.als import (
     DEFAULT_LMD,
     DEFAULT_TAU,
     bias_ridge_step,
-    spd_solve,
+    bias_update,
+    ridge_sums,
 )
 from recommender_systems_spark.operators.relational import anti_join_below_threshold
 
@@ -68,28 +70,22 @@ def fold_in_bias(
         item_col,
     )
     return joined.agg(
-        (
-            F.lit(lmd)
-            * F.sum(F.col(rating_col) - F.col("__bn"))
-            / (F.lit(alpha) + F.lit(lmd) * F.count(F.lit(1)))
-        ).alias("user_bias"),
+        bias_update(F.col(rating_col) - F.col("__bn"), lmd, alpha).alias("user_bias"),
         F.count(F.lit(1)).alias("n_history"),
     )
 
 
 def history_partial(v: np.ndarray, d: np.ndarray) -> np.ndarray:
-    """The additive partial of ``als.bias_ridge_step``'s sums over
-    history rows v with d = r − b_n, flat: VᵀV, Vᵀd, Σv, Σd, n
-    (k²+2k+2 doubles; inner products in BLAS)."""
-    return np.concatenate(
-        [(v.T @ v).ravel(), v.T @ d, v.sum(axis=0), [d.sum(), len(d)]]
-    )
+    """``als.ridge_sums`` over history rows v with d = r − b_n as one
+    flat additive partial: VᵀV, Vᵀd, Σv, Σd, n (k²+2k+2 doubles)."""
+    vtv, vtd, sv, sd, n = ridge_sums(v, d)
+    return np.concatenate([vtv.ravel(), vtd, sv, [sd, n]])
 
 
 def _split_sums(
     total: np.ndarray,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, float, int]:
-    """(VᵀV, Vᵀd, Σv, Σd, n) from a summed ``history_partial``; k is read
+    """``ridge_sums``'s tuple from a summed ``history_partial``; k is read
     back from its length, (k + 1)² + 1."""
     k = math.isqrt(len(total) - 1) - 1
     k2 = k * k
@@ -176,9 +172,7 @@ class _Snapshot:
         if not hit.any():
             raise ValueError("empty history")
         rating = np.array([r for _, r in hist], dtype=np.float64)[hit]
-        return _split_sums(
-            history_partial(self.mat[pos[hit]], rating - self.bias[pos[hit]])
-        )
+        return ridge_sums(self.mat[pos[hit]], rating - self.bias[pos[hit]])
 
     def kept(self, ratings: DataFrame, item_col: str, limit: int):
         """(ids, V, b) of the items not rated by fewer than ``limit`` users
@@ -230,22 +224,6 @@ def _snapshot(item_factors: DataFrame) -> _Snapshot | None:
         return _SNAPSHOTS.get(path, build)
     except OSError:
         return None
-
-
-def fold_in_trait_vector(
-    history: DataFrame,
-    item_col: str,
-    rating_col: str,
-    item_factors: DataFrame,
-    user_bias: float,
-    lmd: float = DEFAULT_LMD,
-    tau: float = DEFAULT_TAU,
-) -> np.ndarray:
-    """M12 for a GIVEN user bias: u = (λΣv vᵀ + τI)⁻¹ λΣ(r−b_n−b_u)v,
-    with the RHS expanded as λ(Vᵀd − b_u·Σv) over ``_history_sums``
-    and one ``spd_solve`` on the driver."""
-    vtv, vtd, sv, _, _ = _history_sums(history, item_col, rating_col, item_factors)
-    return spd_solve(lmd * vtv + tau * np.eye(len(sv)), lmd * (vtd - user_bias * sv))
 
 
 def fold_in_bias_and_trait_vector(

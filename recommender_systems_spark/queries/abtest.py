@@ -15,7 +15,12 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from recommender_systems_spark.io import PathMemo, materialize, materialize_now
-from recommender_systems_spark.ml.als import DEFAULT_ALPHA, DEFAULT_LMD, DEFAULT_TAU
+from recommender_systems_spark.ml.als import (
+    DEFAULT_ALPHA,
+    DEFAULT_LMD,
+    DEFAULT_TAU,
+    bias_update,
+)
 from recommender_systems_spark.ml.bpr import CATALOG_BROADCAST_THRESHOLD
 from recommender_systems_spark.queries._shared import (
     GENRE_CTE as _AB_GENRE_CTE,
@@ -504,10 +509,7 @@ def e_ab_foldin_bias_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return hm.groupBy("user_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_hist"),
         F.round(
-            F.lit(DEFAULT_LMD)
-            * F.sum(F.col("r") - F.col("bn"))
-            / (F.lit(DEFAULT_ALPHA) + F.lit(DEFAULT_LMD) * F.count(F.lit(1))),
-            6,
+            bias_update(F.col("r") - F.col("bn"), DEFAULT_LMD, DEFAULT_ALPHA), 6
         ).alias("ub"),
     )
 
@@ -530,8 +532,9 @@ def e_ab_simulation(
     becomes three set-level stages — ONE genre-keyed join builds all
     histories; ONE bucketed applyInPandas folds every user into their
     arm's model, each user being the zero-prior bias-ALS update
-    (``als.bias_ridge_step`` at u_prev = 0, the step ``ml.foldin`` and
-    the ALS half-sweeps call: M11 bias and M12 ridge solve together);
+    (``als.bias_ridge_step`` over ``als.ridge_sums`` at u_prev = 0, the
+    step ``ml.foldin`` and the ALS half-sweeps call: M11 bias and M12
+    ridge solve together);
     ONE bucketed GEMM per arm (``bpr.rank_top_k``) scores its users
     against the (dimension-sized, broadcast) dual-model catalog.
     Nothing iterates per user on the driver; past
@@ -548,7 +551,7 @@ def e_ab_simulation(
     import numpy as np
     import pandas as pd
 
-    from recommender_systems_spark.ml.als import bias_ridge_step, bucketed
+    from recommender_systems_spark.ml.als import bias_ridge_step, bucketed, ridge_sums
     from recommender_systems_spark.ml.bpr import _topk_blocked, rank_top_k
     from recommender_systems_spark.queries.genre import _parts_with_genres
     from recommender_systems_spark.queries.ml import EMB_MOD
@@ -651,9 +654,8 @@ def e_ab_simulation(
         grp = pdf["grp"].to_numpy()
         out_u, out_g, out_v = [], [], []
         for uid, idx in pdf.groupby("user_id", sort=False).indices.items():
-            v, d = v_all[idx], d_all[idx]
             _, u = bias_ridge_step(
-                v.T @ v, v.T @ d, v.sum(axis=0), d.sum(), len(d), np.zeros(K),
+                *ridge_sums(v_all[idx], d_all[idx]), np.zeros(K),
                 DEFAULT_LMD, DEFAULT_TAU, DEFAULT_ALPHA,
             )
             out_u.append(int(uid))
@@ -712,9 +714,12 @@ def e_ab_simulation(
     # file stamps, so a wipe+rebuild of the dir is a new key: the
     # collect + NumPy packing is identical every serving run — a
     # production server holds the loaded model in memory, it does not
-    # re-read the checkpoint per request. Result-deterministic in any
-    # collect order: scoring is per-id and the top-N lexsort ties break
-    # on the id.
+    # re-read the checkpoint per request. The top-N lexsort breaks
+    # exact score ties on the id, but BLAS can round a dot product
+    # differently by the row's position in the matrix, so items with
+    # equal factors may score a last bit apart and their order can
+    # follow the collect order (the single tie rule is ROADMAP
+    # direction 3).
     def load_blocks():
         cat_rows = catalog.collect()
         ids = np.array([r["item"] for r in cat_rows], dtype=np.int64)

@@ -21,7 +21,7 @@ carries a full value-hash oracle.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from recommender_systems_spark.functions.vector import dot_product
@@ -29,6 +29,7 @@ from recommender_systems_spark.io import materialize, table_rows
 from recommender_systems_spark.ml.als import DEFAULT_ALPHA as ALPHA
 from recommender_systems_spark.ml.als import DEFAULT_LMD as LMD
 from recommender_systems_spark.ml.als import DEFAULT_TAU as TAU
+from recommender_systems_spark.ml.als import bias_sweep
 from recommender_systems_spark.registry import _t, register
 
 EMB_MOD = 500  # embeddings rows at sf0.01; modular join key for factors
@@ -121,12 +122,10 @@ def m_rmse(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _loglik_stats(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(upen, vpen, sse) — the three 1-row sufficient statistics of the
-    regularised log-likelihood, shared by m_reg_loglik and
-    m_hyperparam_sweep.
+def _loglik_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The three 1-row sufficient statistics of the regularised
+    log-likelihood, cross-joined into one row (ufro, ub2, vfro, vb2,
+    sse), shared by m_reg_loglik and m_hyperparam_sweep.
 
     Deliberately NOT checkpointed (round-13 adjudication): the three
     branches are INDEPENDENT stages of one job and overlap on the
@@ -155,7 +154,25 @@ def _loglik_stats(
     vpen = penalty(r.select("iid").distinct(), "iid", _bv_col(F.col("iid")))
     err = F.col("uv") + _bu_col(F.col("uid")) + _bv_col(F.col("iid")) - F.col("r")
     sse = _scored(spark, sf_dir).agg(F.sum(F.pow(err, 2)).alias("sse"))
-    return upen, vpen, sse
+    return (
+        upen.select(F.col("fro").alias("ufro"), F.col("b2").alias("ub2"))
+        .crossJoin(vpen.select(F.col("fro").alias("vfro"), F.col("b2").alias("vb2")))
+        .crossJoin(sse)
+    )
+
+
+def _loglik(lmd: Column | float, tau: Column | float) -> Column:
+    """A10 over ``_loglik_stats``'s row, rounded to 2 dp:
+    -(α/2)(‖b_m‖²+‖b_n‖²) - (τ/2)(‖U‖²_F+‖V‖²_F) - (λ/2)Σerr².
+    λ and τ are grid Columns (m_hyperparam_sweep) or Python floats
+    (m_reg_loglik, whose halved literals then keep their plan's operand
+    order); either way the halving gives the same IEEE double."""
+    return F.round(
+        -(ALPHA / 2) * (F.col("ub2") + F.col("vb2"))
+        - (tau / 2) * (F.col("ufro") + F.col("vfro"))
+        - (lmd / 2) * F.col("sse"),
+        2,
+    )
 
 
 @register(
@@ -186,24 +203,12 @@ def m_reg_loglik(spark: SparkSession, sf_dir: str) -> DataFrame:
     with m_hyperparam_sweep via _loglik_stats as INDEPENDENT unmaterialised
     branches (deliberately not checkpointed — see _loglik_stats's
     adjudication note)."""
-    upen, vpen, sse = _loglik_stats(spark, sf_dir)
-    return (
-        upen.select(F.col("fro").alias("ufro"), F.col("b2").alias("ub2"))
-        .crossJoin(vpen.select(F.col("fro").alias("vfro"), F.col("b2").alias("vb2")))
-        .crossJoin(sse)
-        .select(
-            F.round(
-                -(ALPHA / 2) * (F.col("ub2") + F.col("vb2"))
-                - (TAU / 2) * (F.col("ufro") + F.col("vfro"))
-                - (LMD / 2) * F.col("sse"),
-                2,
-            ).alias("loglik")
-        )
-    )
+    return _loglik_stats(spark, sf_dir).select(_loglik(LMD, TAU).alias("loglik"))
 
 
 # Bias half-sweeps (M4): b_u = λΣ(r−u·v−b_v)/(α+λ|Ω|) from zero biases,
-# then b_v using the fresh b_u. Shared between three queries.
+# then b_v using the fresh b_u (``ml.als.bias_sweep``). Shared between
+# four queries.
 _BIAS_CTE = f"""
     {_ML_CTE},
     bu AS (SELECT uid, {LMD} * sum(r - uv) / ({ALPHA} + {LMD} * count(*)) AS bu
@@ -216,7 +221,8 @@ _BIAS_CTE = f"""
 
 
 def _bias_sweeps(spark: SparkSession, sf_dir: str, ckpt_bu: bool = False):
-    """Spark twin of _BIAS_CTE: returns (j, bu, bv) DataFrames.
+    """Spark twin of _BIAS_CTE: returns (j, bu, bv) DataFrames, the two
+    sweeps being ``ml.als.bias_sweep`` calls over the scored ratings.
 
     ``j`` is localCheckpointed: every consumer scans it 2-3 times (bu,
     bv⋈bu, delta/history passes) and the checkpoint output is 4 scalar
@@ -232,20 +238,10 @@ def _bias_sweeps(spark: SparkSession, sf_dir: str, ckpt_bu: bool = False):
     Off by default: every other caller uses bu once and the extra
     checkpoint is a measured loss (the §6q pattern)."""
     j = _scored(spark, sf_dir).transform(materialize, sf_dir)
-    bu = j.groupBy("uid").agg(
-        (F.lit(LMD) * F.sum(F.col("r") - F.col("uv"))
-         / (F.lit(ALPHA) + F.lit(LMD) * F.count(F.lit(1)))).alias("bu")
-    )
+    bu = bias_sweep(j, "uid").withColumnRenamed("bias", "bu")
     if ckpt_bu:
         bu = materialize(bu, sf_dir)
-    bv = (
-        j.join(bu, "uid")
-        .groupBy("iid")
-        .agg(
-            (F.lit(LMD) * F.sum(F.col("r") - F.col("uv") - F.col("bu"))
-             / (F.lit(ALPHA) + F.lit(LMD) * F.count(F.lit(1)))).alias("bv")
-        )
-    )
+    bv = bias_sweep(j, "iid", bu).withColumnRenamed("bias", "bv")
     return j, bu, bv
 
 
@@ -282,18 +278,13 @@ def m_bias_only(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def m_convergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E8: convergence monitor — max |θ_new − θ_old| between successive
-    user-bias sweeps (prac_1.py:161-187). The fixpoint driver loop in
-    ``ml.als.train_als_bias`` collects exactly this scalar per
-    iteration."""
+    user-bias sweeps (prac_1.py:161-187), the third ``ml.als.bias_sweep``
+    after _bias_sweeps' pair. ``ml.als.train_als_bias`` stops on a wider
+    delta: its fused monitor (``_delta_agg``) collects max |Δ| over both
+    sides' trait vectors AND biases per iteration, where this scalar is
+    user-bias-only."""
     j, bu, bv = _bias_sweeps(spark, sf_dir, ckpt_bu=True)
-    bu2 = (
-        j.join(bv, "iid")
-        .groupBy("uid")
-        .agg(
-            (F.lit(LMD) * F.sum(F.col("r") - F.col("uv") - F.col("bv"))
-             / (F.lit(ALPHA) + F.lit(LMD) * F.count(F.lit(1)))).alias("bu2")
-        )
-    )
+    bu2 = bias_sweep(j, "uid", bv).withColumnRenamed("bias", "bu2")
     return (
         bu.join(bu2, "uid")
         .agg(
@@ -1080,23 +1071,11 @@ def m_hyperparam_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     _loglik_stats — independent unmaterialised branches that overlap
     as parallel stages of one job; see its adjudication note),
     one crossJoin with a {len(_SWEEP_GRID)}-row literal frame."""
-    upen, vpen, sse = _loglik_stats(spark, sf_dir)
+    stats = _loglik_stats(spark, sf_dir)
     grid = spark.createDataFrame(_SWEEP_GRID, "lmd double, tau double")
     return (
-        upen.select(F.col("fro").alias("ufro"), F.col("b2").alias("ub2"))
-        .crossJoin(vpen.select(F.col("fro").alias("vfro"), F.col("b2").alias("vb2")))
-        .crossJoin(sse)
-        .crossJoin(F.broadcast(grid))
-        .select(
-            "lmd",
-            "tau",
-            F.round(
-                -(ALPHA / 2) * (F.col("ub2") + F.col("vb2"))
-                - (F.col("tau") / 2) * (F.col("ufro") + F.col("vfro"))
-                - (F.col("lmd") / 2) * F.col("sse"),
-                2,
-            ).alias("loglik"),
-        )
+        stats.crossJoin(F.broadcast(grid))
+        .select("lmd", "tau", _loglik(F.col("lmd"), F.col("tau")).alias("loglik"))
     )
 
 

@@ -174,6 +174,55 @@ def test_solves_and_ranks_go_through_the_kernels():
     assert not offenders, offenders
 
 
+def test_model_formulas_are_written_once():
+    """The bias update and the ridge sums each have one home in ml/als:
+    outside bias_update and bias_ridge_step no division may have a right
+    operand naming alpha / ALPHA / DEFAULT_ALPHA (the λΣresid/(α+λn)
+    bias), and outside ridge_sums and ials.batch_gram no Gram product
+    X.T @ X may appear."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "recommender_systems_spark"
+    alpha_names = {"alpha", "ALPHA", "DEFAULT_ALPHA"}
+    rules = {
+        "bias": (
+            {("ml/als.py", "bias_update"), ("ml/als.py", "bias_ridge_step")},
+            lambda node: isinstance(node.op, ast.Div)
+            and any(
+                isinstance(n, ast.Name) and n.id in alpha_names
+                or isinstance(n, ast.Attribute) and n.attr in alpha_names
+                for n in ast.walk(node.right)
+            ),
+        ),
+        "gram": (
+            {("ml/als.py", "ridge_sums"), ("ml/ials.py", "batch_gram")},
+            lambda node: isinstance(node.op, ast.MatMult)
+            and isinstance(node.left, ast.Attribute)
+            and node.left.attr == "T"
+            and ast.unparse(node.left.value) == ast.unparse(node.right),
+        ),
+    }
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        tree = ast.parse(path.read_text(encoding="utf-8"))
+        for rule, (kernels, flagged) in rules.items():
+            allowed = [
+                range(node.lineno, node.end_lineno + 1)
+                for node in ast.walk(tree)
+                if isinstance(node, ast.FunctionDef) and (rel, node.name) in kernels
+            ]
+            offenders += [
+                f"{rule} {rel}:{node.lineno}"
+                for node in ast.walk(tree)
+                if isinstance(node, ast.BinOp)
+                and flagged(node)
+                and not any(node.lineno in r for r in allowed)
+            ]
+    assert not offenders, offenders
+
+
 def test_pydaemon_rereads_only_changed_archives(tmp_path, monkeypatch):
     """The worker daemon's rule, without Spark: invalidating an
     unchanged archive re-reads nothing; after the archive is rewritten,

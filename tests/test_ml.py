@@ -69,33 +69,36 @@ def test_als_convergence_stops_on_tolerance(spark):
 
 
 def test_bias_only_closed_form(spark):
-    """M4 fixpoint probe: one user, one item, one rating, zero factors.
-    Sweep 1: b_u = λr/(α+λ);  b_i = λ(r−b_u)/(α+λ)."""
-    from recommender_systems_spark.ml.als import train_bias_only
+    """M4 fixpoint probe: one user, one item, one rating, zero factors
+    (u·v = 0). Sweep 1: b_u = λr/(α+λ);  b_i = λ(r−b_u)/(α+λ); then
+    back to the user: b_u2 = λ(r−b_i)/(α+λ) — both join directions of
+    als.bias_sweep."""
+    from recommender_systems_spark.ml.als import bias_sweep
 
-    r = spark.createDataFrame([(1, 10, 8.0)], "u long, i long, r double")
-    zero = lambda ids, col: ids.select(  # noqa: E731
-        F.col(col).alias("id"),
-        F.array(F.lit(0.0), F.lit(0.0)).alias("features"),
-        F.lit(0.0).alias("bias"),
+    scored = spark.createDataFrame(
+        [(1, 10, 8.0, 0.0)], "u long, i long, r double, uv double"
     )
-    uf, vf = train_bias_only(
-        r, "u", "i", "r",
-        zero(r.select("u"), "u"), zero(r.select("i"), "i"),
-        lmd=LMD, alpha=ALPHA, n_sweeps=1,
-    )
+    uf = bias_sweep(scored, "u")
+    vf = bias_sweep(scored, "i", uf)
+    uf2 = bias_sweep(scored, "u", vf)
     bu = uf.collect()[0]["bias"]
     bv = vf.collect()[0]["bias"]
+    bu2 = uf2.collect()[0]["bias"]
     exp_bu = LMD * 8.0 / (ALPHA + LMD)
     exp_bv = LMD * (8.0 - exp_bu) / (ALPHA + LMD)
+    exp_bu2 = LMD * (8.0 - exp_bv) / (ALPHA + LMD)
     assert bu == pytest.approx(exp_bu, abs=1e-12)
     assert bv == pytest.approx(exp_bv, abs=1e-12)
+    assert bu2 == pytest.approx(exp_bu2, abs=1e-12)
 
 
 def test_fold_in_vector_solves_normal_equations(spark):
-    """M12: the returned u must satisfy (λΣvvᵀ+τI)u = λΣ(r−b_n−b_u)v —
-    recomputed independently with NumPy from the same history."""
-    from recommender_systems_spark.ml.foldin import fold_in_bias, fold_in_trait_vector
+    """M12: the fused fold-in's u must satisfy (λΣvvᵀ+τI)u = λΣ(r−b_n−b_u)v
+    — recomputed independently with NumPy from the same history."""
+    from recommender_systems_spark.ml.foldin import (
+        fold_in_bias,
+        fold_in_bias_and_trait_vector,
+    )
 
     hist = spark.createDataFrame(
         [(1, 7.0), (2, 9.0), (3, 4.0)], "i long, r double"
@@ -112,7 +115,9 @@ def test_fold_in_vector_solves_normal_equations(spark):
     exp_ub = LMD * ((7.0 - 0.2) + (9.0 + 0.1) + (4.0 - 0.05)) / (ALPHA + LMD * 3)
     assert ub == pytest.approx(exp_ub, abs=1e-12)
 
-    u = fold_in_trait_vector(hist, "i", "r", factors, ub, lmd=LMD, tau=TAU)
+    ub, _, u = fold_in_bias_and_trait_vector(
+        hist, "i", "r", factors, lmd=LMD, alpha=ALPHA, tau=TAU, dim=2
+    )
     v = np.array([vecs[i] for i in (1, 2, 3)])
     r = np.array([7.0, 9.0, 4.0])
     b = np.array([biases[i] for i in (1, 2, 3)])
@@ -124,15 +129,15 @@ def test_fold_in_vector_solves_normal_equations(spark):
 def test_fused_fold_in_matches_two_step(spark):
     """Round-13 fusion: the single-action fold_in_bias_and_trait_vector
     must agree with the separate M11 bias + M12 trait-vector path on
-    the same history (bias exactly; vector to fp-association slack).
-    And fold-in IS the bias-ALS update at a zero prior vector: the
+    the same history (bias exactly; vector to fp-association slack; the
+    M12 solve at the given bias is recomputed here with NumPy). And
+    fold-in IS the bias-ALS update at a zero prior vector: the
     history's user, given a zero self vector, gets the same bias and
     vector from one als_half_sweep (next to a trained user 1)."""
-    from recommender_systems_spark.ml.als import als_half_sweep
+    from recommender_systems_spark.ml.als import als_half_sweep, spd_solve
     from recommender_systems_spark.ml.foldin import (
         fold_in_bias,
         fold_in_bias_and_trait_vector,
-        fold_in_trait_vector,
     )
 
     hist = spark.createDataFrame(
@@ -147,7 +152,9 @@ def test_fused_fold_in_matches_two_step(spark):
     ub_ref = fold_in_bias(hist, "i", "r", factors, lmd=LMD, alpha=ALPHA).collect()[
         0
     ]["user_bias"]
-    u_ref = fold_in_trait_vector(hist, "i", "r", factors, ub_ref, lmd=LMD, tau=TAU)
+    v = np.array([vecs[i] for i in (1, 2, 3)])
+    d = np.array([7.0, 9.0, 4.0]) - np.array([biases[i] for i in (1, 2, 3)])
+    u_ref = spd_solve(LMD * v.T @ v + TAU * np.eye(2), LMD * v.T @ (d - ub_ref))
     ub, n, u = fold_in_bias_and_trait_vector(
         hist, "i", "r", factors, lmd=LMD, alpha=ALPHA, tau=TAU, dim=2
     )
