@@ -34,6 +34,13 @@ from recommender_systems_spark.io import materialize
 RANGE_ROWS_PER_PART = int(
     os.environ.get("SPARK_GRAFT_RANGE_ROWS_PER_PART", "4000000")
 )
+# Ceiling on the derived count, in range partitions per core. Row
+# estimates are upper bounds read from SOURCE footers (a distinct-value
+# table estimated by its events table's rows): 10^12 rows would ask for
+# 250k partitions and a 250k-row offsets collect for a table that may
+# hold thousands of rows. Past defaultParallelism × this, partitions
+# grow instead.
+RANGE_PARTS_PER_CORE = 8
 
 
 def _range_partitions(
@@ -41,9 +48,11 @@ def _range_partitions(
 ) -> int:
     if num_partitions:
         return num_partitions
+    cores = df.sparkSession.sparkContext.defaultParallelism
     if approx_rows is not None:
-        return max(1, math.ceil(approx_rows / RANGE_ROWS_PER_PART))
-    return max(df.sparkSession.sparkContext.defaultParallelism, 2)
+        n = math.ceil(approx_rows / RANGE_ROWS_PER_PART)
+        return max(1, min(n, cores * RANGE_PARTS_PER_CORE))
+    return max(cores, 2)
 
 
 def anti_join_below_threshold(

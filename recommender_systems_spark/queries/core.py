@@ -587,10 +587,10 @@ def t_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Here "historical" = even doc_ids, "new batch" = odd doc_ids, so the
     oracle can reconstruct the store from the same table."""
-    import os
+    from recommender_systems_spark.io import cache_ready
 
     store_path = _fp_store_path(sf_dir)
-    if not os.path.exists(os.path.join(store_path, "_SUCCESS")):
+    if not cache_ready(store_path):
         (
             _keyed_docs(spark, sf_dir)
             .filter(F.col("doc_id") % 2 == 0)

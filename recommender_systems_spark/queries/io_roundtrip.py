@@ -19,7 +19,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from recommender_systems_spark.functions.vector import l2_norm
-from recommender_systems_spark.io import read_factors, write_csv, write_factors
+from recommender_systems_spark.io import (
+    cache_ready,
+    read_factors,
+    write_csv,
+    write_factors,
+)
 from recommender_systems_spark.registry import _t, register
 
 _CACHE = os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", "..", ".data_cache")
@@ -75,7 +80,7 @@ def s_partitioned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     other sources never scanned. The oracle is the same filter on the
     original table, proving pruning loses no rows."""
     path = _out_dir("part", sf_dir)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+    if not cache_ready(path):
         docs = _t(spark, sf_dir, "documents").select("doc_id", "n_chars", "source")
         docs.write.mode("overwrite").partitionBy("source").parquet(path)
     back = spark.read.parquet(path).filter(F.col("source").isin("src3", "src7"))
@@ -193,7 +198,7 @@ def j_dpp_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the hash match proves pruning loses no rows; the plan-shape test
     asserts the pruning subquery is actually in the physical plan."""
     path = _out_dir("part", sf_dir)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+    if not cache_ready(path):
         docs = _t(spark, sf_dir, "documents").select("doc_id", "n_chars", "source")
         docs.write.mode("overwrite").partitionBy("source").parquet(path)
     fact = spark.read.parquet(path)
@@ -226,7 +231,7 @@ def s_compact_files(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id", "event_type", "value"
     )
     frag = _out_dir("frag", sf_dir)
-    if not os.path.exists(os.path.join(frag, "_SUCCESS")):
+    if not cache_ready(frag):
         src.repartition(64).write.mode("overwrite").parquet(frag)
     compact = _out_dir("compact", sf_dir)
     spark.read.parquet(frag).repartition(4).write.mode("overwrite").parquet(

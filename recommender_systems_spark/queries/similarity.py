@@ -20,7 +20,7 @@ from recommender_systems_spark.functions.vector import (
     dot_product,
 )
 from recommender_systems_spark.queries._shared import u01_col, u01_sql
-from recommender_systems_spark.io import materialize, table_rows
+from recommender_systems_spark.io import cache_path, cache_ready, materialize, table_rows
 from recommender_systems_spark.ml.ials import batch_gram
 from recommender_systems_spark.registry import _t, register
 from recommender_systems_spark.similarity.ann import (
@@ -45,13 +45,110 @@ N_CENTROIDS = 40
 NPROBE = 3
 
 
-def _codebook(e):
-    """Fixed-COUNT deterministic IVF codebook: md5-ordered
-    top-N_CENTROIDS vectors (TakeOrderedAndProject; identical rows in
-    the DuckDB oracles)."""
-    return e.orderBy(
-        F.md5(F.col("vec_id").cast("string")), "vec_id"
-    ).limit(N_CENTROIDS)
+# ---------------------------------------------------------------------------
+# The IVF coarse quantiser: every IVF query below builds its corpus,
+# codebook, cell assignment, probes and cosine top-K from these.
+# ---------------------------------------------------------------------------
+
+
+def _cos5(a: str, b: str):
+    """Cosine of two array columns rounded to 5 dp — the value every IVF
+    rank orders on, rounded BEFORE ranking so ties break identically in
+    both engines."""
+    return F.round(cosine_similarity(a, b), 5)
+
+
+def _ivf_corpus(spark: SparkSession, sf_dir: str, *cols: str) -> DataFrame:
+    """The corpus ``(vec_id, *cols, v)``, spread across every core and
+    materialised for its consumers (codebook, assignment, queries,
+    re-rank). The raw file split count (2 at sf1, 13 at sf10)
+    under-parallelises the N×K assignment, the widest stage: measured
+    24.6 s → ~3 s at sf1."""
+    return (
+        _t(spark, sf_dir, "embeddings")
+        .select("vec_id", *cols, F.col("embedding").cast("array<double>").alias("v"))
+        .repartition(spark.sparkContext.defaultParallelism)
+        .transform(materialize, sf_dir)
+    )
+
+
+def _ivf_queries(e: DataFrame) -> DataFrame:
+    """The query set ``(qid, qv)``: the first N_QUERIES vectors."""
+    return e.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("qid"), F.col("v").alias("qv")
+    )
+
+
+def _ivf_codebook(e: DataFrame, k: int) -> DataFrame:
+    """The codebook ``(cid, cv)``: a fixed-COUNT deterministic sample,
+    the md5-ordered top-k vectors (TakeOrderedAndProject; the oracles'
+    ``ORDER BY md5(...), vec_id LIMIT k`` picks the same rows)."""
+    return (
+        e.orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
+        .limit(k)
+        .select(F.col("vec_id").alias("cid"), F.col("v").alias("cv"))
+    )
+
+
+def _ivf_assign(
+    e: DataFrame, cents: DataFrame, carry: tuple[str, ...] = ()
+) -> DataFrame:
+    """Each vector's Voronoi cell, ``(vec_id, *carry, cell)``: the
+    centroid of highest rounded cosine, the LOWEST cid on a tie — the
+    oracles' ``row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC,
+    cid) = 1``, written the same way. ``carry`` columns (``v`` for the
+    index, ``label`` for purity) ride along.
+
+    The rnk = 1 filter plans a map-side WindowGroupLimit, so each
+    partition cuts its N×K candidate rows to N before the exchange. The
+    aggregate spellings do no better: max over a struct is not
+    hash-aggregatable, so max(struct(cos₅, −cid)) and max_by plan the
+    same local Sort of all N×K rows (Sort + SortAggregate). All three
+    pick identical cells. Measured on 4 cores (local[4]): in one session,
+    interleaved noop writes at sf0.1 (2,000 × 40), this form took 0.90 s
+    median against max(struct)'s 0.98 s and won 8 of 11 reps; at 50,000
+    × 160 it took 65.8 s against 67.5 s (max(struct)) and 70.9 s
+    (max_by); over the nine IVF queries, interleaved full runs against
+    mixed spellings gave a total ratio of 1.000 for this form and 1.021
+    for max(struct)."""
+    w = Window.partitionBy("vec_id").orderBy(_cos5("v", "cv").desc(), F.col("cid"))
+    return (
+        e.crossJoin(F.broadcast(cents))
+        .withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") == 1)
+        .select("vec_id", *carry, F.col("cid").alias("cell"))
+    )
+
+
+def _ivf_probes(q: DataFrame, cents: DataFrame, n: int) -> DataFrame:
+    """Each query's ``n`` probed cells, ``(qid, cell, prnk)``: ranked by
+    rounded cosine desc, cid asc — the assignment's order."""
+    w = Window.partitionBy("qid").orderBy(_cos5("qv", "cv").desc(), F.col("cid"))
+    return (
+        q.crossJoin(F.broadcast(cents))
+        .withColumn("prnk", F.row_number().over(w))
+        .filter(F.col("prnk") <= n)
+        .select("qid", F.col("cid").alias("cell"), "prnk")
+    )
+
+
+def _cosine_top_k(scored: DataFrame, k: int) -> DataFrame:
+    """The k best ``scored`` rows per qid by (cos_sim desc, vec_id asc)
+    with their 1-based ``rank`` appended: ``(qid, vec_id, cos_sim,
+    rank)`` for a three-column ``scored``; any other column rides
+    along."""
+    w = Window.partitionBy("qid").orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
+    return scored.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= k
+    )
+
+
+def _exact_scored(e: DataFrame, q: DataFrame, *extra) -> DataFrame:
+    """Every (query, other vector) pair with its rounded cosine —
+    brute-force candidates for an exact ranking."""
+    return e.join(F.broadcast(q), F.col("vec_id") != F.col("qid")).select(
+        "qid", "vec_id", *extra, _cos5("v", "qv").alias("cos_sim")
+    )
 
 _ANN_SQL = f"""
     WITH e AS (
@@ -150,15 +247,9 @@ def sim_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("v").alias("qv"),
         F.col("keys").alias("qkeys"),
     )
-    scored = e.join(F.broadcast(q), F.col("vec_id") != F.col("qid")).select(
-        "qid",
-        "vec_id",
-        F.arrays_overlap("keys", "qkeys").alias("same_bucket"),
-        F.round(cosine_similarity("v", "qv"), 5).alias("cos_sim"),
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
-    exact = scored.withColumn("rnk", F.row_number().over(w)).filter(
-        F.col("rnk") <= TOP_K
+    exact = _cosine_top_k(
+        _exact_scored(e, q, F.arrays_overlap("keys", "qkeys").alias("same_bucket")),
+        TOP_K,
     )
     hits = F.sum(F.when(F.col("same_bucket"), 1).otherwise(0))
     return exact.groupBy("qid").agg(
@@ -234,58 +325,27 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     embedding table, recomputed only when the codebook retrains) and
     every query pays just the probe join — the plan below keeps that
     split visible: assignment subplan, probe subplan, re-rank."""
-    e = (
-        _t(spark, sf_dir, "embeddings")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-        # Spread the N×K assignment across every core: the raw file
-        # split count (2 at sf1, 13 at sf10) under-parallelises the
-        # widest stage — measured 24.6 s → ~3 s at sf1.
-        .repartition(spark.sparkContext.defaultParallelism)
-        # consumers: codebook, assignment, queries, re-rank
-        .transform(materialize, sf_dir)
-    )
-    cents = _codebook(e).select(
-        F.col("vec_id").alias("cid"), F.col("v").alias("cv")
-    )
-    w_asg = Window.partitionBy("vec_id").orderBy(
-        F.round(cosine_similarity("v", "cv"), 5).desc(), F.col("cid")
-    )
-    cells = (
-        e.crossJoin(F.broadcast(cents))
-        .withColumn("rnk", F.row_number().over(w_asg))
-        .filter(F.col("rnk") == 1)
-        .select("vec_id", F.col("cid").alias("cell"))
-    )
-    q = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("qid"), F.col("v").alias("qv")
-    )
-    w_probe = Window.partitionBy("qid").orderBy(
-        F.round(cosine_similarity("qv", "cv"), 5).desc(), F.col("cid")
-    )
-    probes = (
-        q.crossJoin(F.broadcast(cents))
-        .withColumn("rnk", F.row_number().over(w_probe))
-        .filter(F.col("rnk") <= NPROBE)
-        .select("qid", F.col("cid").alias("cell"))
-    )
-    cand = cells.join(F.broadcast(probes), "cell").filter(
-        F.col("vec_id") != F.col("qid")
+    return _ivf_top_k(spark, sf_dir, N_CENTROIDS)
+
+
+def _ivf_top_k(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
+    """IVF cosine top-TOP_K over a k-centroid codebook, computed in one
+    plan: assignment subplan, probe subplan, re-rank."""
+    e = _ivf_corpus(spark, sf_dir)
+    cents = _ivf_codebook(e, k)
+    q = _ivf_queries(e)
+    probes = _ivf_probes(q, cents, NPROBE).select("qid", "cell")
+    cand = (
+        _ivf_assign(e, cents)
+        .join(F.broadcast(probes), "cell")
+        .filter(F.col("vec_id") != F.col("qid"))
     )
     scored = (
         cand.join(e, "vec_id")
         .join(F.broadcast(q), "qid")
-        .select(
-            "qid",
-            "vec_id",
-            F.round(cosine_similarity("v", "qv"), 5).alias("cos_sim"),
-        )
+        .select("qid", "vec_id", _cos5("v", "qv").alias("cos_sim"))
     )
-    w = Window.partitionBy("qid").orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("qid", "vec_id", "cos_sim", "rank")
-    )
+    return _cosine_top_k(scored, TOP_K)
 
 
 # Adaptive codebook count: K doubles every time the corpus QUADRUPLES
@@ -379,126 +439,35 @@ def sim_ivf_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcastable dimension table (K×D doubles), assignment remains a
     narrow broadcast map over the corpus, and the probe join ships
     (cell, id) pairs only."""
-    from recommender_systems_spark.io import table_rows
-
-    k = ivf_adaptive_k(table_rows(sf_dir, "embeddings"))
-    e = (
-        _t(spark, sf_dir, "embeddings")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-        # Spread the N×K assignment across every core: the raw file
-        # split count (13 at sf10) under-parallelises the widest stage
-        # of this query by 2.5× on local[32].
-        .repartition(spark.sparkContext.defaultParallelism)
-        # consumers: codebook, assignment, queries, re-rank
-        .transform(materialize, sf_dir)
-    )
-    cents = (
-        e.orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
-        .limit(k)
-        .select(F.col("vec_id").alias("cid"), F.col("v").alias("cv"))
-    )
-    # Assignment as a map-side-combined argmax (max_by over
-    # (cos₅, −cid) — identical tie-break to the fixed-K window form:
-    # highest cosine, then LOWEST cid): with K on the √n ladder the
-    # N×K cross product is too wide to SORT per vec_id (a row_number
-    # window at sf10 pushes 64 M vector-carrying rows through one
-    # sort); the hash aggregate reduces each partition locally to one
-    # row per vector and shuffles only (vec_id, cell) pairs.
-    cells = (
-        e.crossJoin(F.broadcast(cents))
-        .groupBy("vec_id")
-        .agg(
-            F.max_by(
-                "cid",
-                F.struct(
-                    F.round(cosine_similarity("v", "cv"), 5).alias("c"),
-                    (-F.col("cid")).alias("t"),
-                ),
-            ).alias("cell")
-        )
-    )
-    q = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("qid"), F.col("v").alias("qv")
-    )
-    w_probe = Window.partitionBy("qid").orderBy(
-        F.round(cosine_similarity("qv", "cv"), 5).desc(), F.col("cid")
-    )
-    probes = (
-        q.crossJoin(F.broadcast(cents))
-        .withColumn("rnk", F.row_number().over(w_probe))
-        .filter(F.col("rnk") <= NPROBE)
-        .select("qid", F.col("cid").alias("cell"))
-    )
-    cand = cells.join(F.broadcast(probes), "cell").filter(
-        F.col("vec_id") != F.col("qid")
-    )
-    scored = (
-        cand.join(e, "vec_id")
-        .join(F.broadcast(q), "qid")
-        .select(
-            "qid",
-            "vec_id",
-            F.round(cosine_similarity("v", "qv"), 5).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("qid", "vec_id", "cos_sim", "rank")
-    )
+    return _ivf_top_k(spark, sf_dir, ivf_adaptive_k(table_rows(sf_dir, "embeddings")))
 
 
-def _ensure_ivf_adaptive_index(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """Materialise the ADAPTIVE-K IVF index once per data identity:
-    the K ∝ √n codebook to one dimension-sized parquet and the corpus
-    assignments hive-partitioned by cell — the amortised layout whose
-    one-time N×K build cost ``sim_ivf_adaptive`` records (107.5 s at
-    sf10). Prefix carries the ladder constants (base K, rung capacity,
-    max doublings) so a geometry change rebuilds."""
-    import os
+# Cache prefixes of the two on-disk IVF indexes. Each carries the
+# geometry constants, so a codebook change rebuilds its index.
+_IVF_INDEX_PREFIX = f"ivf_index_md5c{N_CENTROIDS}"
+_IVF_ADAPTIVE_INDEX_PREFIX = (
+    f"ivf_index_adx{N_CENTROIDS}b{_IVF_CELL_BASE}d{_IVF_MAX_DOUBLINGS}"
+)
 
-    from recommender_systems_spark.io import cache_path, cache_ready, table_rows
 
-    path = cache_path(
-        f"ivf_index_adx{N_CENTROIDS}b{_IVF_CELL_BASE}d{_IVF_MAX_DOUBLINGS}",
-        sf_dir,
-        "embeddings",
-    )
+def _ensure_ivf_index(
+    spark: SparkSession, sf_dir: str, prefix: str, k: int
+) -> tuple[str, str]:
+    """Materialise an IVF index once per data identity: the k-row
+    codebook to ``<path>_cb`` and the corpus ``(vec_id, v)``
+    hive-partitioned by cell to ``<path>``. This is the 100 TB layout —
+    the N×K assignment runs at index-build time (and only re-runs when
+    the codebook retrains); serving never scans cells it does not
+    probe. The _SUCCESS markers make later sessions reuse the files
+    with zero data movement."""
+    path = cache_path(prefix, sf_dir, "embeddings")
     cb_path = path + "_cb"
     if cache_ready(path) and cache_ready(cb_path):
         return path, cb_path
-    k = ivf_adaptive_k(table_rows(sf_dir, "embeddings"))
-    e = (
-        _t(spark, sf_dir, "embeddings")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-        .repartition(spark.sparkContext.defaultParallelism)
-        .transform(materialize, sf_dir)  # consumers: codebook + assignment
-    )
-    # Identical codebook + assignment to sim_ivf_adaptive (same md5
-    # order, same round(cos,5)/lowest-cid tie-break via max_by) — the
-    # two entries share the oracle because the index is the SAME.
+    e = _ivf_corpus(spark, sf_dir)
+    _ivf_codebook(e, k).write.mode("overwrite").parquet(cb_path)
     (
-        e.orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
-        .limit(k)
-        .select(F.col("vec_id").alias("cid"), F.col("v").alias("cv"))
-        .write.mode("overwrite")
-        .parquet(cb_path)
-    )
-    cents = spark.read.parquet(cb_path)
-    (
-        e.crossJoin(F.broadcast(cents))
-        .groupBy("vec_id")
-        .agg(
-            F.first("v").alias("v"),  # identical across the K copies
-            F.max_by(
-                "cid",
-                F.struct(
-                    F.round(cosine_similarity("v", "cv"), 5).alias("c"),
-                    (-F.col("cid")).alias("t"),
-                ),
-            ).alias("cell"),
-        )
+        _ivf_assign(e, spark.read.parquet(cb_path), carry=("v",))
         .write.mode("overwrite")
         .partitionBy("cell")
         .parquet(path)
@@ -506,50 +475,48 @@ def _ensure_ivf_adaptive_index(spark: SparkSession, sf_dir: str) -> tuple[str, s
     return path, cb_path
 
 
-@register("sim_ivf_adaptive_serve", _IVF_ADAPTIVE_SQL)  # same semantics ⇒ same oracle
-def sim_ivf_adaptive_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The adaptive-K geometry's AMORTISED serving entry (VERDICT r11
-    #8): identical output to ``sim_ivf_adaptive`` (shared oracle), but
-    the K ∝ √n codebook and cell assignments come from the on-disk
-    index ``_ensure_ivf_adaptive_index`` materialises once per corpus,
-    and the serving scan carries a partition filter on the probed
-    cells. With √N-sized cells the per-query read is Θ(√N) rows of
-    ~NPROBE partitions — this pairing (one-time N×K build, partition-
-    pruned probes) is the production trade ``sim_ivf_adaptive``'s
-    docstring argues for, now measurable on its own."""
-    path, cb_path = _ensure_ivf_adaptive_index(spark, sf_dir)
-    cents = spark.read.parquet(cb_path)
-    q = (
-        _t(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") < N_QUERIES)
-        .select(
-            F.col("vec_id").alias("qid"),
-            F.col("embedding").cast("array<double>").alias("qv"),
+def _ivf_serve(spark: SparkSession, sf_dir: str, prefix: str, k: int) -> DataFrame:
+    """IVF top-TOP_K served from the on-disk index: the probe set is
+    collected to the driver (≤ N_QUERIES × NPROBE cell ids — serving
+    systems resolve probes before dispatch) so the index scan carries a
+    static partition filter, ``PartitionFilters: [cell IN (...)]``, and
+    reads only the probed cells' files."""
+    path, cb_path = _ensure_ivf_index(spark, sf_dir, prefix, k)
+    q = _ivf_queries(
+        _t(spark, sf_dir, "embeddings").select(
+            "vec_id", F.col("embedding").cast("array<double>").alias("v")
         )
     )
-    w_probe = Window.partitionBy("qid").orderBy(
-        F.round(cosine_similarity("qv", "cv"), 5).desc(), F.col("cid")
-    )
     probes = (
-        q.crossJoin(F.broadcast(cents))
-        .withColumn("rnk", F.row_number().over(w_probe))
-        .filter(F.col("rnk") <= NPROBE)
-        .select("qid", F.col("cid").alias("cell"))
+        _ivf_probes(q, spark.read.parquet(cb_path), NPROBE)
+        .select("qid", "cell")
         .transform(materialize, sf_dir)  # consumed by the driver collect AND the join
     )
     probe_cells = sorted(r["cell"] for r in probes.select("cell").distinct().collect())
     idx = spark.read.parquet(path).filter(F.col("cell").isin(probe_cells))
     cand = idx.join(F.broadcast(probes), "cell").filter(F.col("vec_id") != F.col("qid"))
     scored = cand.join(F.broadcast(q), "qid").select(
-        "qid",
-        "vec_id",
-        F.round(cosine_similarity("v", "qv"), 5).alias("cos_sim"),
+        "qid", "vec_id", _cos5("v", "qv").alias("cos_sim")
     )
-    w = Window.partitionBy("qid").orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("qid", "vec_id", "cos_sim", "rank")
+    return _cosine_top_k(scored, TOP_K)
+
+
+@register("sim_ivf_adaptive_serve", _IVF_ADAPTIVE_SQL)  # same semantics ⇒ same oracle
+def sim_ivf_adaptive_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The adaptive-K geometry's AMORTISED serving entry (VERDICT r11
+    #8): identical output to ``sim_ivf_adaptive`` (shared oracle), but
+    the K ∝ √n codebook and cell assignments come from the on-disk
+    index ``_ensure_ivf_index`` materialises once per corpus,
+    and the serving scan carries a partition filter on the probed
+    cells. With √N-sized cells the per-query read is Θ(√N) rows of
+    ~NPROBE partitions — this pairing (one-time N×K build, partition-
+    pruned probes) is the production trade ``sim_ivf_adaptive``'s
+    docstring argues for, now measurable on its own."""
+    return _ivf_serve(
+        spark,
+        sf_dir,
+        _IVF_ADAPTIVE_INDEX_PREFIX,
+        ivf_adaptive_k(table_rows(sf_dir, "embeddings")),
     )
 
 
@@ -609,48 +576,15 @@ def sim_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     via a semi-join on (qid, cell), per-query hit counts. The nprobe/
     codebook-size trade-off is measured by the engine itself instead
     of asserted."""
-    e = (
-        _t(spark, sf_dir, "embeddings")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-        # File-split count under-parallelises the N×K assignment at
-        # sf ≥ 1 (see sim_ivf_topk) — spread it across every core.
-        .repartition(spark.sparkContext.defaultParallelism)
-        .transform(materialize, sf_dir)
+    e = _ivf_corpus(spark, sf_dir)
+    cents = _ivf_codebook(e, N_CENTROIDS)
+    q = _ivf_queries(e)
+    probed_pairs = (
+        _ivf_assign(e, cents)
+        .join(F.broadcast(_ivf_probes(q, cents, NPROBE)), "cell")
+        .select("qid", "vec_id")
     )
-    cents = _codebook(e).select(
-        F.col("vec_id").alias("cid"), F.col("v").alias("cv")
-    )
-    w_asg = Window.partitionBy("vec_id").orderBy(
-        F.round(cosine_similarity("v", "cv"), 5).desc(), F.col("cid")
-    )
-    cells = (
-        e.crossJoin(F.broadcast(cents))
-        .withColumn("rnk", F.row_number().over(w_asg))
-        .filter(F.col("rnk") == 1)
-        .select("vec_id", F.col("cid").alias("cell"))
-    )
-    q = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("qid"), F.col("v").alias("qv")
-    )
-    w_probe = Window.partitionBy("qid").orderBy(
-        F.round(cosine_similarity("qv", "cv"), 5).desc(), F.col("cid")
-    )
-    probes = (
-        q.crossJoin(F.broadcast(cents))
-        .withColumn("rnk", F.row_number().over(w_probe))
-        .filter(F.col("rnk") <= NPROBE)
-        .select("qid", F.col("cid").alias("cell"))
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
-    exact = (
-        e.join(F.broadcast(q), F.col("vec_id") != F.col("qid"))
-        .select(
-            "qid", "vec_id", F.round(cosine_similarity("v", "qv"), 5).alias("cos_sim")
-        )
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= TOP_K)
-    )
-    probed_pairs = cells.join(F.broadcast(probes), "cell").select("qid", "vec_id")
+    exact = _cosine_top_k(_exact_scored(e, q), TOP_K)
     flagged = exact.join(
         probed_pairs.withColumn("__p", F.lit(1)), ["qid", "vec_id"], "left"
     )
@@ -704,71 +638,9 @@ def sim_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = (
         cand.join(hint(e.select("vec_id", "v")), "vec_id")
         .join(F.broadcast(q.select("qid", "qv")), "qid")
-        .select(
-            "qid",
-            "vec_id",
-            F.round(cosine_similarity("v", "qv"), 5).alias("cos_sim"),
-        )
+        .select("qid", "vec_id", _cos5("v", "qv").alias("cos_sim"))
     )
-    w = Window.partitionBy("qid").orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("qid", "vec_id", "cos_sim", "rank")
-    )
-
-
-def _ivf_index_path(sf_dir: str) -> str:
-    from recommender_systems_spark.io import cache_path
-
-    # Key carries the codebook scheme so a codebook change invalidates
-    # previously materialised assignments.
-    return cache_path(f"ivf_index_md5c{N_CENTROIDS}", sf_dir, "embeddings")
-
-
-def _ensure_ivf_index(spark: SparkSession, sf_dir: str) -> str:
-    """Materialise the IVF index ONCE per sf: embeddings with their cell
-    assignment, hive-partitioned by cell on disk. This is the 100 TB
-    layout — the assignment pass runs at index-build time (and only
-    re-runs when the codebook retrains); serving never scans cells it
-    does not probe. The _SUCCESS marker makes later sessions reuse the
-    files with zero data movement (same contract as the bucketed-join
-    cache)."""
-    import os
-
-    path = _ivf_index_path(sf_dir)
-    if os.path.exists(os.path.join(path, "_SUCCESS")):
-        return path
-    e = (
-        _t(spark, sf_dir, "embeddings")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-        .transform(materialize, sf_dir)  # two consumers: codebook filter + assignment
-    )
-    cents = _codebook(e).select(
-        F.col("vec_id").alias("cid"), F.col("v").alias("cv")
-    )
-    # Argmax as a struct-max AGGREGATE, not a window (round-13, guide
-    # §2.3 aggregate before you shuffle): the broadcast crossJoin keeps
-    # all C candidate rows of a vector in one partition, so the
-    # partial max collapses N×C rows (each carrying the full vector)
-    # to N before the exchange — the r12 row_number window shipped and
-    # sorted all N×C. max(struct(s, −cid)) reproduces the (rounded
-    # cosine desc, cid asc) pick exactly; first(v) is constant within
-    # a group. Identical (vec_id, v, cell) rows written.
-    best = F.max(
-        F.struct(
-            F.round(cosine_similarity("v", "cv"), 5).alias("s"),
-            (-F.col("cid")).alias("nc"),
-        )
-    )
-    assigned = (
-        e.crossJoin(F.broadcast(cents))
-        .groupBy("vec_id")
-        .agg(best.alias("b"), F.first("v").alias("v"))
-        .select("vec_id", "v", (-F.col("b.nc")).alias("cell"))
-    )
-    assigned.write.mode("overwrite").partitionBy("cell").parquet(path)
-    return path
+    return _cosine_top_k(scored, TOP_K)
 
 
 @register("sim_ivf_partitioned", _IVF_SQL)  # same semantics ⇒ same oracle
@@ -781,45 +653,8 @@ def sim_ivf_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     files are read. That read-path pruning is what makes IVF an ANN
     answer at 100 TB: compute-side candidate restriction
     (``sim_ivf_topk``) saves dot products, layout-side pruning (this
-    query) saves the I/O, which dominates at scale.
-
-    The probe set is collected to the driver (≤ N_QUERIES × NPROBE cell
-    ids — serving systems resolve probes before dispatch) so the filter
-    is a static IN-list the scan prunes on."""
-    path = _ensure_ivf_index(spark, sf_dir)
-    e = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    cents = _codebook(e).select(
-        F.col("vec_id").alias("cid"), F.col("v").alias("cv")
-    )
-    q = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("qid"), F.col("v").alias("qv")
-    )
-    w_probe = Window.partitionBy("qid").orderBy(
-        F.round(cosine_similarity("qv", "cv"), 5).desc(), F.col("cid")
-    )
-    probes = (
-        q.crossJoin(F.broadcast(cents))
-        .withColumn("rnk", F.row_number().over(w_probe))
-        .filter(F.col("rnk") <= NPROBE)
-        .select("qid", F.col("cid").alias("cell"))
-        .transform(materialize, sf_dir)  # consumed by the driver collect AND the join
-    )
-    probe_cells = sorted(r["cell"] for r in probes.select("cell").distinct().collect())
-    idx = spark.read.parquet(path).filter(F.col("cell").isin(probe_cells))
-    cand = idx.join(F.broadcast(probes), "cell").filter(F.col("vec_id") != F.col("qid"))
-    scored = cand.join(F.broadcast(q), "qid").select(
-        "qid",
-        "vec_id",
-        F.round(cosine_similarity("v", "qv"), 5).alias("cos_sim"),
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("qid", "vec_id", "cos_sim", "rank")
-    )
+    query) saves the I/O, which dominates at scale."""
+    return _ivf_serve(spark, sf_dir, _IVF_INDEX_PREFIX, N_CENTROIDS)
 
 
 # ---------------------------------------------------------------------------
@@ -2062,17 +1897,10 @@ def _pq_frames(
     """(e, codebook, best) — the product-quantization building blocks
     shared by ``v_pq_codes`` and ``v_ivf_pq_search``; mirrors _PQ_CTES
     exactly."""
-    e = (
-        _t(spark, sf_dir, "embeddings")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-        # File-split count under-parallelises the N×M×K subspace
-        # distance stage at sf ≥ 1 (see sim_ivf_topk).
-        .repartition(spark.sparkContext.defaultParallelism)
-        # Consumers: codebook sample, subspace distances, and the
-        # callers' query/assignment branches — unmaterialised each
-        # re-scanned embeddings (round-13 census: 4 scans → 1).
-        .transform(materialize, sf_dir)
-    )
+    # Consumers: codebook sample, subspace distances, and the callers'
+    # query/assignment branches — unmaterialised each re-scanned
+    # embeddings (round-13 census: 4 scans → 1).
+    e = _ivf_corpus(spark, sf_dir)
     wcb = Window.orderBy(F.md5(F.col("vec_id").cast("string")), F.col("vec_id"))
     codebook = (
         e.orderBy(F.md5(F.col("vec_id").cast("string")), F.col("vec_id"))
@@ -2199,39 +2027,12 @@ def v_ivf_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums in both engines and (ad asc, vec_id) ranking never flips on
     accumulation order."""
     e, codebook, best = _pq_frames(spark, sf_dir)
-    q = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("qid"), F.col("v").alias("qv")
-    )
-    cents = _codebook(e).select(
-        F.col("vec_id").alias("cell"), F.col("v").alias("cv")
-    )
-    # Window form kept deliberately (round-13 adjudication): unlike the
-    # ivf_index BUILD (whose output carries the full vector, making the
-    # struct-max aggregate's pre-exchange collapse the win), this
-    # assignment projects to slim (vec_id, cell, sortkey) rows and the
-    # rn == 1 filter plans as a map-side WindowGroupLimit — already
-    # collapsed before the exchange. The aggregate variant measured
-    # 1.20× interleaved and was reverted.
-    w_a = Window.partitionBy("vec_id").orderBy(
-        F.round(cosine_similarity("v", "cv"), 5).desc(), F.col("cell")
-    )
-    assign = (
-        e.crossJoin(F.broadcast(cents))
-        .withColumn("rn", F.row_number().over(w_a))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "cell")
-    )
-    w_p = Window.partitionBy("qid").orderBy(
-        F.round(cosine_similarity("qv", "cv"), 5).desc(), F.col("cell")
-    )
-    probes = (
-        q.crossJoin(F.broadcast(cents))
-        .withColumn("rn", F.row_number().over(w_p))
-        .filter(F.col("rn") <= NPROBE)
-        .select("qid", "cell")
-    )
+    q = _ivf_queries(e)
+    cents = _ivf_codebook(e, N_CENTROIDS)
+    probes = _ivf_probes(q, cents, NPROBE).select("qid", "cell")
     cand = (
-        assign.join(F.broadcast(probes), "cell")
+        _ivf_assign(e, cents)
+        .join(F.broadcast(probes), "cell")
         .filter(F.col("vec_id") != F.col("qid"))
         .select("qid", "vec_id")
     )
@@ -2446,26 +2247,8 @@ def v_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     a |cells|-sized join. Parity: counts are exact integers, the
     majority resolves by the total (count desc, label) order, purity
     is one exact-operand division on the 6dp grid."""
-    e = (
-        _t(spark, sf_dir, "embeddings")
-        .select(
-            "vec_id", "label", F.col("embedding").cast("array<double>").alias("v")
-        )
-        .repartition(spark.sparkContext.defaultParallelism)
-        .transform(materialize, sf_dir)  # consumers: codebook + assignment
-    )
-    cents = _codebook(e).select(
-        F.col("vec_id").alias("cid"), F.col("v").alias("cv")
-    )
-    w_asg = Window.partitionBy("vec_id").orderBy(
-        F.round(cosine_similarity("v", "cv"), 5).desc(), F.col("cid")
-    )
-    cells = (
-        e.crossJoin(F.broadcast(cents))
-        .withColumn("rnk", F.row_number().over(w_asg))
-        .filter(F.col("rnk") == 1)
-        .select("vec_id", "label", F.col("cid").alias("cell"))
-    )
+    e = _ivf_corpus(spark, sf_dir, "label")
+    cells = _ivf_assign(e, _ivf_codebook(e, N_CENTROIDS), carry=("label",))
     cl = cells.groupBy("cell", "label").agg(F.count(F.lit(1)).alias("c"))
     tot = cl.groupBy("cell").agg(F.sum("c").alias("n"))
     wm = Window.partitionBy("cell").orderBy(F.col("c").desc(), F.col("label"))
@@ -2723,51 +2506,12 @@ def v_ivf_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     same flagged frame — no per-nprobe pass, no re-scoring. Queries and
     centroids stay broadcast (dimension-sized); the only corpus-sized
     shuffle is the per-query exact window, shared by every grid point."""
-    e = (
-        _t(spark, sf_dir, "embeddings")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-        # File-split count under-parallelises the N×K assignment at
-        # sf ≥ 1 (see sim_ivf_topk) — spread it across every core.
-        .repartition(spark.sparkContext.defaultParallelism)
-        .transform(materialize, sf_dir)
-    )
-    cents = _codebook(e).select(
-        F.col("vec_id").alias("cid"), F.col("v").alias("cv")
-    )
-    w_asg = Window.partitionBy("vec_id").orderBy(
-        F.round(cosine_similarity("v", "cv"), 5).desc(), F.col("cid")
-    )
-    cells = (
-        e.crossJoin(F.broadcast(cents))
-        .withColumn("rnk", F.row_number().over(w_asg))
-        .filter(F.col("rnk") == 1)
-        .select("vec_id", F.col("cid").alias("cell"))
-    )
-    q = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("qid"), F.col("v").alias("qv")
-    )
-    w_probe = Window.partitionBy("qid").orderBy(
-        F.round(cosine_similarity("qv", "cv"), 5).desc(), F.col("cid")
-    )
-    probes = (
-        q.crossJoin(F.broadcast(cents))
-        .withColumn("prnk", F.row_number().over(w_probe))
-        .filter(F.col("prnk") <= max(_NPROBE_GRID))
-        .select("qid", F.col("cid").alias("cell"), "prnk")
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
-    exact = (
-        e.join(F.broadcast(q), F.col("vec_id") != F.col("qid"))
-        .select(
-            "qid",
-            "vec_id",
-            F.round(cosine_similarity("v", "qv"), 5).alias("cos_sim"),
-        )
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("qid", "vec_id")
-    )
-    flagged = exact.join(cells, "vec_id").join(
+    e = _ivf_corpus(spark, sf_dir)
+    cents = _ivf_codebook(e, N_CENTROIDS)
+    q = _ivf_queries(e)
+    probes = _ivf_probes(q, cents, max(_NPROBE_GRID))
+    exact = _cosine_top_k(_exact_scored(e, q), TOP_K).select("qid", "vec_id")
+    flagged = exact.join(_ivf_assign(e, cents), "vec_id").join(
         F.broadcast(probes), ["qid", "cell"], "left"
     )
     g = flagged.agg(
@@ -3207,26 +2951,9 @@ def v_ivf_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment subplan), then K-row frames only — the audit itself
     costs one scan regardless of corpus size; empty cells survive via
     the codebook LEFT join."""
-    e = (
-        _t(spark, sf_dir, "embeddings")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-        # File-split count under-parallelises the N×K assignment at
-        # sf ≥ 1 (see sim_ivf_topk) — spread it across every core.
-        .repartition(spark.sparkContext.defaultParallelism)
-        .transform(materialize, sf_dir)
-    )
-    cents = _codebook(e).select(
-        F.col("vec_id").alias("cid"), F.col("v").alias("cv")
-    )
-    w_asg = Window.partitionBy("vec_id").orderBy(
-        F.round(cosine_similarity("v", "cv"), 5).desc(), F.col("cid")
-    )
-    asg = (
-        e.crossJoin(F.broadcast(cents))
-        .withColumn("rnk", F.row_number().over(w_asg))
-        .filter(F.col("rnk") == 1)
-        .select("vec_id", "cid")
-    )
+    e = _ivf_corpus(spark, sf_dir)
+    cents = _ivf_codebook(e, N_CENTROIDS)
+    asg = _ivf_assign(e, cents).select("vec_id", F.col("cell").alias("cid"))
     sizes = (
         cents.select("cid")
         .join(asg, "cid", "left")

@@ -179,7 +179,9 @@ def test_model_formulas_are_written_once():
     outside bias_update and bias_ridge_step no division may have a right
     operand naming alpha / ALPHA / DEFAULT_ALPHA (the λΣresid/(α+λn)
     bias), and outside ridge_sums and ials.batch_gram no Gram product
-    X.T @ X may appear."""
+    X.T @ X may appear. The IVF quantiser has one home in
+    queries/similarity: outside _ivf_assign and _ivf_probes nothing
+    there crossJoins the broadcast IVF codebook (``cents``)."""
     import ast
     import pathlib
 
@@ -188,7 +190,8 @@ def test_model_formulas_are_written_once():
     rules = {
         "bias": (
             {("ml/als.py", "bias_update"), ("ml/als.py", "bias_ridge_step")},
-            lambda node: isinstance(node.op, ast.Div)
+            lambda rel, node: isinstance(node, ast.BinOp)
+            and isinstance(node.op, ast.Div)
             and any(
                 isinstance(n, ast.Name) and n.id in alpha_names
                 or isinstance(n, ast.Attribute) and n.attr in alpha_names
@@ -197,10 +200,22 @@ def test_model_formulas_are_written_once():
         ),
         "gram": (
             {("ml/als.py", "ridge_sums"), ("ml/ials.py", "batch_gram")},
-            lambda node: isinstance(node.op, ast.MatMult)
+            lambda rel, node: isinstance(node, ast.BinOp)
+            and isinstance(node.op, ast.MatMult)
             and isinstance(node.left, ast.Attribute)
             and node.left.attr == "T"
             and ast.unparse(node.left.value) == ast.unparse(node.right),
+        ),
+        "ivf": (
+            {
+                ("queries/similarity.py", "_ivf_assign"),
+                ("queries/similarity.py", "_ivf_probes"),
+            },
+            lambda rel, node: rel == "queries/similarity.py"
+            and isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "crossJoin"
+            and any(ast.unparse(a) == "F.broadcast(cents)" for a in node.args),
         ),
     }
     offenders = []
@@ -216,8 +231,7 @@ def test_model_formulas_are_written_once():
             offenders += [
                 f"{rule} {rel}:{node.lineno}"
                 for node in ast.walk(tree)
-                if isinstance(node, ast.BinOp)
-                and flagged(node)
+                if flagged(rel, node)
                 and not any(node.lineno in r for r in allowed)
             ]
     assert not offenders, offenders

@@ -2672,6 +2672,59 @@ def test_ivf_adaptive_serve_prunes_and_matches(spark):
     assert served == computed
 
 
+def test_ivf_quantiser_breaks_ties_by_lower_cid(spark):
+    """A vector whose ROUNDED cosine ties between two centroids goes to
+    the lower cid, and a query probes the tied cells lower cid first.
+    Centroid 2 is a hair off vector 10's direction (cosine
+    0.999999995, 1.0 after rounding) and centroid 9 sits exactly on it:
+    the unrounded argmax would pick 9, and so would a higher-cid
+    tie-break."""
+    from recommender_systems_spark.queries.similarity import (
+        _ivf_assign,
+        _ivf_probes,
+    )
+
+    cents = spark.createDataFrame(
+        [(9, [1.0, 0.0]), (5, [-1.0, 0.0]), (2, [1.0, 1e-4]), (7, [0.0, 1.0])],
+        "cid long, cv array<double>",
+    )
+    e = spark.createDataFrame(
+        [(10, [1.0, 0.0]), (11, [-1.0, 1.0]), (12, [0.0, -1.0])],
+        "vec_id long, v array<double>",
+    )
+    cells = {r["vec_id"]: r["cell"] for r in _ivf_assign(e, cents).collect()}
+    # 11 ties exactly between 5 and 7 (0.70711), 12 between 9 and 5 (0.0).
+    assert cells == {10: 2, 11: 5, 12: 5}
+
+    q = spark.createDataFrame([(0, [1.0, 0.0])], "qid long, qv array<double>")
+    probes = sorted(
+        (r["prnk"], r["cell"]) for r in _ivf_probes(q, cents, 3).collect()
+    )
+    assert probes == [(1, 2), (2, 9), (3, 7)]
+
+
+def test_range_partitions_clamped_to_cores():
+    """A footer row estimate far past the data asks for at most
+    RANGE_PARTS_PER_CORE partitions per core; small estimates keep one
+    partition."""
+    from types import SimpleNamespace
+
+    from recommender_systems_spark.operators.relational import (
+        RANGE_PARTS_PER_CORE,
+        _range_partitions,
+    )
+
+    df = SimpleNamespace(
+        sparkSession=SimpleNamespace(
+            sparkContext=SimpleNamespace(defaultParallelism=4)
+        )
+    )
+    assert _range_partitions(df, 10**12, None) == 4 * RANGE_PARTS_PER_CORE
+    assert _range_partitions(df, 1_000_000, None) == 1
+    assert _range_partitions(df, 0, None) == 1
+    assert _range_partitions(df, 10**12, 7) == 7
+
+
 def test_midrank_total_sums_rejects_double_column(spark):
     """two_phase_midrank's grand totals are exact driver integers, so
     ``total_sums`` must refuse a floating-point column with a TypeError
