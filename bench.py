@@ -5,26 +5,30 @@ wall-clock seconds.
 
 Each query is fully executed through the `noop` sink (forces complete
 evaluation of every partition without driver collection), matching how
-a production job would consume the result.
+a production job would consume the result (`tools/harness.run_query`).
+
+SPARK_GRAFT_LAYERS=1 also writes a Spark event log, runs each query in
+its own job group and, once the session stops, reports one layer record
+per query (`tools/harness.layer_records`): wall, driver-only time,
+jobs, stages, tasks, task CPU, GC, shuffle and spill bytes, broadcast
+and scan time, and each job's seconds.
 """
 
 from __future__ import annotations
 
-import gc
 import json
 import os
-import re
 import sys
 import time
 
 from recommender_systems_spark import registry
 from recommender_systems_spark.session import get_spark
+from tools import harness
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1).rstrip(".")) if m else -1.0
+    sf = harness.sf_of(sf_dir)
     # SPARK_GRAFT_COLD=1: wipe every persisted derived artifact
     # (ab_catalog, LSH gram/signature tables, co-occurrence edges, CC
     # near-pair table, fingerprint store, IVF index) so this run pays
@@ -40,22 +44,10 @@ def main() -> None:
     from recommender_systems_spark.io import gc_data_cache
 
     gc_data_cache()
-    spark = get_spark("bench")
-
-    # Warm the JVM/codegen paths once so per-query numbers measure the
-    # plan, not classloading.
-    registry.QUERIES["flagship_top_customers"](spark, sf_dir).collect()
-    # Touch every base table once: footer reads, schema resolution, and
-    # the ns→µs cache fallback should land in warm-up, not inside the
-    # first query that happens to read that table.
-    from recommender_systems_spark.io import load_table
-
-    for tbl in ("region", "nation", "customer", "supplier", "part", "orders",
-                "lineitem", "events", "documents", "embeddings"):
-        try:
-            load_table(spark, sf_dir, tbl).limit(1).collect()
-        except Exception:
-            pass
+    layers = os.environ.get("SPARK_GRAFT_LAYERS") == "1"
+    log_dir, log_conf = harness.event_log() if layers else (None, None)
+    spark = get_spark("bench", extra_conf=log_conf)
+    harness.warm(spark, sf_dir)
 
     # SPARK_GRAFT_REPEAT>1: run the whole fixed-order loop N times and
     # report per-query MEDIANS — the run-to-run noise floor at sf0.1 is
@@ -73,33 +65,21 @@ def main() -> None:
     )
     runs: list[dict[str, float]] = []
     errors: dict[str, str] = {}
-    for _ in range(repeat):
+    # Layer records cover the first rep: each query runs in job group
+    # <name> and its (start, end) window goes to the event-log parser.
+    windows: dict[str, tuple[float, float]] = {}
+    for rep in range(repeat):
         timings: dict[str, float] = {}
         for name in bench_names:
-            t0 = time.perf_counter()
-            df = None
+            group = name if layers and rep == 0 else None
+            start = time.time()
             try:
-                df = registry.QUERIES[name](spark, sf_dir)
-                df.write.format("noop").mode("overwrite").save()
-                timings[name] = round(time.perf_counter() - t0, 3)
+                timings[name] = harness.run_query(spark, name, sf_dir, group)
             except Exception as exc:  # one bad query must not zero the bench
                 errors[name] = str(exc).split("\n")[0][:200]
-            # Release the query's session residue OUTSIDE its timing window:
-            # localCheckpoint blocks are only unpersisted when their Python
-            # DataFrame is garbage-collected, so without this the block
-            # manager accumulates every training query's checkpoints and
-            # later queries pay the GC pressure (measured: per-query times
-            # swing 5-10× run-to-run at sf0.1 without the cleanup).
-            df = None
-            gc.collect()
-            spark.catalog.clearCache()
-            # Python gc only drops the py4j refs; the JVM frees the
-            # checkpoint/broadcast blocks (via ContextCleaner) on ITS next
-            # collection, which may land mid-way through a later query's
-            # timing window. Forcing it here keeps each query's number free
-            # of its predecessors' cleanup (measured: the post-training tail
-            # ran 2-4x slower without this at sf0.1).
-            spark.sparkContext._jvm.System.gc()
+                continue
+            if group is not None:
+                windows[name] = (start, start + timings[name])
         runs.append(timings)
 
     if repeat > 1:
@@ -114,29 +94,14 @@ def main() -> None:
 
     total = round(sum(timings.values()), 3)
 
-    def _head_sha() -> str | None:
-        try:
-            import subprocess
-
-            return subprocess.run(
-                ["git", "rev-parse", "--short", "HEAD"],
-                capture_output=True, text=True,
-                cwd=os.path.dirname(os.path.abspath(__file__)),
-            ).stdout.strip() or None
-        except Exception:
-            return None
-
     # A full cold-mode run records its total as the standing
     # COLD_BENCH.json artifact (picked up by the next warm run's
     # printed line — see below).
     if os.environ.get("SPARK_GRAFT_COLD") == "1" and not only and not errors:
-        cold_path = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "COLD_BENCH.json"
-        )
-        with open(cold_path, "w") as fh:
+        with open(os.path.join(harness.ROOT, "COLD_BENCH.json"), "w") as fh:
             json.dump(
                 {"cold_total": total, "nq": len(timings), "sf": sf,
-                 "head_sha": _head_sha()},
+                 "head_sha": harness.head_sha()},
                 fh, indent=1,
             )
 
@@ -152,9 +117,7 @@ def main() -> None:
     # unflagged in round 10; the warm re-adjudication pass below is
     # what demotes noise now, so the entry gate can afford to be
     # tight — a flag only survives if it REPRODUCES warm.
-    detail_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
-    )
+    detail_path = os.path.join(harness.ROOT, "BENCH_DETAIL.json")
     regressions: dict[str, list[float]] = {}
     factor = 1.3 if repeat > 1 else 1.6
     # Self-adjudicating noise floor: the ratio of this run's total to
@@ -209,14 +172,7 @@ def main() -> None:
             best = cur
             try:
                 for _ in range(2):
-                    t0 = time.perf_counter()
-                    df = registry.QUERIES[name](spark, sf_dir)
-                    df.write.format("noop").mode("overwrite").save()
-                    best = min(best, round(time.perf_counter() - t0, 3))
-                    df = None
-                    gc.collect()
-                    spark.catalog.clearCache()
-                    spark.sparkContext._jvm.System.gc()
+                    best = min(best, harness.run_query(spark, name, sf_dir))
             except Exception:
                 pass
             if best > factor * prev * heat:
@@ -225,6 +181,8 @@ def main() -> None:
                 cold_start_noise[name] = [prev, cur, best]
                 regressions.pop(name, None)
         flags_above_noise = confirmed
+    # Stopping the session flushes the event log the layer records read.
+    spark.stop()
 
     # Full per-query detail goes to a file (and stderr) — the driver
     # records only the LAST 2000 characters of stdout, so the printed
@@ -260,14 +218,23 @@ def main() -> None:
             prior_sf = json.load(fh).get("sf")
     except Exception:
         pass
-    if (
+    standing = (
         not only
         and os.environ.get("SPARK_GRAFT_COLD") != "1"
         and (prior_sf is None or prior_sf == sf)
-    ):
+    )
+    if standing:
         with open(detail_path, "w") as fh:
             json.dump(detail, fh, indent=1, sort_keys=True)
     print(json.dumps(detail), file=sys.stderr)
+    # The layer records follow the same rule: BENCH_LAYERS.json holds a
+    # full warm run; every run's records go to stderr.
+    if layers:
+        records = harness.layer_records(log_dir, windows)
+        if standing:
+            with open(os.path.join(harness.ROOT, "BENCH_LAYERS.json"), "w") as fh:
+                json.dump(records, fh, indent=1, sort_keys=True)
+        print(json.dumps({"layers": records}), file=sys.stderr)
 
     # Printed line: slowest queries first until the budget is spent,
     # remainder folded into "_other" (so sum(queries.values()) == value
@@ -301,7 +268,6 @@ def main() -> None:
     # their artifacts exist, so each round's BENCH_r{N}.json carries
     # tool-produced numbers — never hand-pasted, and stamped with the
     # git SHA they were measured at.
-    here = os.path.dirname(os.path.abspath(__file__))
     for key, fname, fields in (
         ("ratio", "RATIO_GATE.json",
          ("total_ratio", "n_common", "pinned", "head_sha", "n_flags")),
@@ -309,7 +275,7 @@ def main() -> None:
          ("cold_total", "nq", "head_sha")),
     ):
         try:
-            with open(os.path.join(here, fname)) as fh:
+            with open(os.path.join(harness.ROOT, fname)) as fh:
                 art = json.load(fh)
             frame[key] = {f: art[f] for f in fields if f in art}
         except Exception:

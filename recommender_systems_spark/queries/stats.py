@@ -1408,7 +1408,8 @@ _BOOT_BLKS = (_BOOT_REPS + 3) // 4
 # on either engine, so a non-multiple-of-4 count would silently inflate
 # the replicate set and shift the CI quantiles on BOTH sides of the
 # oracle check (the oracle mirrors the blocking).
-assert _BOOT_REPS % 4 == 0, "_BOOT_REPS must be a multiple of 4"
+if _BOOT_REPS % 4:
+    raise ValueError(f"_BOOT_REPS must be a multiple of 4, got {_BOOT_REPS}")
 
 
 def _boot_u_sql(w: int) -> str:

@@ -47,3 +47,62 @@ def test_normalise_plan_drops_session_counters_and_root():
     # A genuine plan change survives normalisation.
     assert normalise_plan(a.replace("hashpartitioning", "rangepartitioning"),
                           "/src/one") != norm
+
+
+def test_bench_ab_alternates_which_tree_runs_first():
+    """Neither tree may always run first in a rep: the order is H,P in
+    even reps and P,H in odd ones, and each rep runs both trees once."""
+    rep_order = _load("bench_ab").rep_order
+    orders = [rep_order(rep) for rep in range(6)]
+    assert all(sorted(o) == ["head", "pinned"] for o in orders)
+    assert [o[0] for o in orders] == ["head", "pinned"] * 3
+
+
+def test_layer_records_attribute_jobs_by_group_and_window(tmp_path):
+    """A grouped job goes to its query, a group-less (background-thread)
+    job to the query whose window holds its submission, and a job
+    outside every window to none; the log directory is deleted once
+    parsed."""
+    import json
+
+    layer_records = _load("harness").layer_records
+    events = [
+        {"Event": "SparkListenerJobStart", "Job ID": 0, "Submission Time": 1000500,
+         "Stage IDs": [0], "Properties": {"spark.jobGroup.id": "q1"}},
+        {"Event": "SparkListenerStageSubmitted",
+         "Stage Info": {"Stage ID": 0, "Submission Time": 1000600}},
+        {"Event": "SparkListenerTaskEnd", "Stage ID": 0,
+         "Task End Reason": {"Reason": "Success"},
+         "Task Info": {"Launch Time": 1000700},
+         "Task Metrics": {
+             "Executor Run Time": 200, "Executor CPU Time": 150_000_000,
+             "JVM GC Time": 10,
+             "Shuffle Write Metrics": {"Shuffle Bytes Written": 100},
+             "Shuffle Read Metrics": {"Remote Bytes Read": 5, "Local Bytes Read": 7},
+             "Memory Bytes Spilled": 1, "Disk Bytes Spilled": 2}},
+        {"Event": "SparkListenerStageCompleted",
+         "Stage Info": {"Stage ID": 0, "Accumulables": []}},
+        {"Event": "SparkListenerJobEnd", "Job ID": 0, "Completion Time": 1001500},
+        {"Event": "SparkListenerJobStart", "Job ID": 1, "Submission Time": 1003000,
+         "Stage IDs": [1], "Properties": {}},
+        {"Event": "SparkListenerJobEnd", "Job ID": 1, "Completion Time": 1003250},
+        {"Event": "SparkListenerJobStart", "Job ID": 2, "Submission Time": 1010000,
+         "Stage IDs": [2], "Properties": {}},
+        {"Event": "SparkListenerJobEnd", "Job ID": 2, "Completion Time": 1010100},
+    ]
+    log_dir = tmp_path / "log"
+    (log_dir / "eventlog_v2_app").mkdir(parents=True)
+    (log_dir / "eventlog_v2_app" / "events_1_app").write_text(
+        "\n".join(json.dumps(e) for e in events) + "\n"
+    )
+    rec = layer_records(str(log_dir), {"q1": (1000.0, 1002.0), "q2": (1002.5, 1004.0)})
+    assert not log_dir.exists()
+    assert rec["q1"] == {
+        "wall": 2.0, "driver_only_s": 1.0, "n_jobs": 1, "n_stages": 1,
+        "n_tasks": 1, "task_cpu_s": 0.15, "gc_s": 0.01,
+        "shuffle_write_bytes": 100, "shuffle_read_bytes": 12, "spill_bytes": 3,
+        "broadcast_s": 0.0, "scan_s": 0.0, "job_s": [1.0],
+    }
+    assert (rec["q2"]["n_jobs"], rec["q2"]["job_s"], rec["q2"]["driver_only_s"]) == (
+        1, [0.25], 1.25,
+    )

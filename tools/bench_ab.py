@@ -5,9 +5,11 @@ Absolute-seconds targets were missed two rounds running on a machine
 that drifts ±5% (VERDICT r11 #5) — the honest instrument is the RATIO
 between HEAD and a pinned baseline measured back-to-back on the SAME
 machine in the SAME session window. This tool alternates full (or
-SPARK_GRAFT_ONLY-restricted) bench runs between the two trees
-(A,B,A,B,...), takes per-query medians per tree, and prints one JSON
-line with the total ratio and the worst per-query ratios.
+SPARK_GRAFT_ONLY-restricted) bench runs between the two trees, in
+the order H,P then P,H per rep so neither tree always runs first
+(``rep_order``), takes per-query medians per tree, and prints one JSON
+line with the total ratio, each tree's run-total quartiles (the
+instrument's own spread) and the worst per-query ratios.
 
 Gate (PLANS.md round-12): total_ratio <= 1.00 within noise (+-2%),
 per-query flags at >= 1.3x interleaved.
@@ -25,6 +27,10 @@ import os
 import statistics
 import subprocess
 import sys
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from tools import harness  # noqa: E402
 
 
 def run_bench(tree: str, env_extra: dict[str, str]) -> dict[str, float]:
@@ -53,6 +59,18 @@ def run_bench(tree: str, env_extra: dict[str, str]) -> dict[str, float]:
     return {k: v for k, v in d["queries"].items() if k != "_other"}
 
 
+def rep_order(rep: int) -> tuple[str, str]:
+    """The two trees' order in rep ``rep``: HEAD first in even reps,
+    the pinned tree first in odd ones."""
+    return ("head", "pinned") if rep % 2 == 0 else ("pinned", "head")
+
+
+def quartiles(xs: list[float]) -> list[float]:
+    if len(xs) < 2:
+        return [round(x, 2) for x in xs * 3]
+    return [round(q, 2) for q in statistics.quantiles(xs, n=4)]
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--pinned", default="/tmp/pinned_r11")
@@ -61,7 +79,7 @@ def main() -> None:
     ap.add_argument("--sf-dir", default=None)
     ap.add_argument("--warmup", type=int, default=1)
     args = ap.parse_args()
-    head = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    head = harness.ROOT
 
     env_extra = {}
     if args.only:
@@ -77,11 +95,12 @@ def main() -> None:
             print(f"warmup {tree} ...", file=sys.stderr)
             run_bench(tree, env_extra)
 
+    trees = {"head": head, "pinned": args.pinned}
     runs: dict[str, list[dict[str, float]]] = {"head": [], "pinned": []}
     for rep in range(args.reps):
-        for tag, tree in (("head", head), ("pinned", args.pinned)):
+        for tag in rep_order(rep):
             print(f"rep {rep} {tag} ...", file=sys.stderr)
-            runs[tag].append(run_bench(tree, env_extra))
+            runs[tag].append(run_bench(trees[tag], env_extra))
 
     med = {
         tag: {
@@ -105,6 +124,9 @@ def main() -> None:
         "total_head": round(th, 2),
         "total_pinned": round(tp, 2),
         "total_ratio": round(th / tp, 4),
+        "run_total_quartiles": {
+            tag: quartiles([sum(r.values()) for r in rs]) for tag, rs in runs.items()
+        },
         "n_common": len(common),
         "flags_ge_1p3": flags,
         "worst_ratios": worst,
@@ -114,19 +136,10 @@ def main() -> None:
     # persists the ratio so bench.py's printed line can carry it into
     # the round's BENCH_r{N}.json (tool-produced, never hand-pasted).
     if not args.only:
-        try:
-            import subprocess
-
-            sha = subprocess.run(
-                ["git", "rev-parse", "--short", "HEAD"],
-                capture_output=True, text=True, cwd=head,
-            ).stdout.strip() or None
-        except Exception:
-            sha = None
         gate = dict(
             result,
             pinned=args.pinned,
-            head_sha=sha,
+            head_sha=harness.head_sha(),
             n_flags=len(flags),
             reps=args.reps,
         )

@@ -19,18 +19,15 @@ Usage:
 
 from __future__ import annotations
 
-import gc
 import json
 import os
-import re
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from recommender_systems_spark import registry  # noqa: E402
 from recommender_systems_spark.io import wipe_derived_cache  # noqa: E402
 from recommender_systems_spark.session import get_spark  # noqa: E402
+from tools import harness  # noqa: E402
 
 # artifact prefix family -> the query whose first run builds it.
 ARTIFACT_OWNERS = {
@@ -44,37 +41,24 @@ ARTIFACT_OWNERS = {
 }
 
 
-def _run(spark, name: str, sf_dir: str) -> float:
-    t0 = time.perf_counter()
-    df = registry.QUERIES[name](spark, sf_dir)
-    df.write.format("noop").mode("overwrite").save()
-    dt = time.perf_counter() - t0
-    df = None
-    gc.collect()
-    spark.catalog.clearCache()
-    spark.sparkContext._jvm.System.gc()
-    return round(dt, 3)
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1).rstrip(".")) if m else -1.0
+    sf = harness.sf_of(sf_dir)
     wanted = sys.argv[1:] or sorted(ARTIFACT_OWNERS)
     spark = get_spark("bench-cold")
     # Warm the session (JIT, codegen, table footers) so the cold number
     # measures the BUILD, not classloading.
-    registry.QUERIES["flagship_top_customers"](spark, sf_dir).collect()
+    harness.warm(spark, sf_dir)
 
     out: dict[str, dict[str, float]] = {}
     for art in wanted:
         owner = ARTIFACT_OWNERS[art]
         # Warm the owner's serving path once (and ensure the artifact
         # exists) so JIT for ITS plan shape is paid before timing.
-        _run(spark, owner, sf_dir)
+        harness.run_query(spark, owner, sf_dir)
         wipe_derived_cache((art,))
-        cold = _run(spark, owner, sf_dir)
-        warm = _run(spark, owner, sf_dir)
+        cold = harness.run_query(spark, owner, sf_dir)
+        warm = harness.run_query(spark, owner, sf_dir)
         out[art] = {
             "query": owner,
             "cold": cold,

@@ -21,21 +21,17 @@ Env:   SPARK_GRAFT_SF1_REPEAT  (default 3, medians)
 
 from __future__ import annotations
 
-import gc
 import json
 import math
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from recommender_systems_spark import registry
-from recommender_systems_spark.session import get_spark
+from recommender_systems_spark.session import get_spark  # noqa: E402
+from tools import harness  # noqa: E402
 
-_CACHE = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".data_cache"
-)
+_CACHE = os.path.join(harness.ROOT, ".data_cache")
 SCALE_DIRS = {
     "sf0.1": "/root/testdata/sf0.1",
     "sf1": os.path.join(_CACHE, "sf1"),
@@ -69,20 +65,11 @@ def timed_median(spark, name: str, sf_dir: str, repeat: int) -> tuple[float, int
     cutoff = float(os.environ.get("SPARK_GRAFT_SLOW_CUTOFF", "300"))
     ts = []
     for rep in range(repeat):
-        t0 = time.perf_counter()
-        df = registry.QUERIES[name](spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        ts.append(time.perf_counter() - t0)
-        # Same residue hygiene as bench.py: drop checkpoints/broadcasts
-        # outside the timing window.
-        df = None
-        gc.collect()
-        spark.catalog.clearCache()
-        spark.sparkContext._jvm.System.gc()
+        ts.append(harness.run_query(spark, name, sf_dir))
         if rep == 0 and ts[0] > cutoff:
             break  # slow query: one rep bounds the slope well enough
     ts.sort()
-    return round(ts[len(ts) // 2], 3), len(ts)
+    return ts[len(ts) // 2], len(ts)
 
 
 def fit_exponent(points: dict[str, float]) -> float | None:
@@ -116,7 +103,7 @@ def main() -> None:
     names = sys.argv[1:] or TOP
     repeat = max(1, int(os.environ.get("SPARK_GRAFT_SF1_REPEAT", "3")))
     spark = get_spark("bench-sf1")
-    registry.QUERIES["flagship_top_customers"](spark, SCALE_DIRS["sf0.1"]).collect()
+    harness.warm(spark, SCALE_DIRS["sf0.1"])
     out = {}
     for name in names:
         measured = {s: timed_median(spark, name, SCALE_DIRS[s], repeat)
